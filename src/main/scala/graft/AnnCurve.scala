@@ -32,12 +32,20 @@ import org.apache.spark.sql.functions._
   */
 object AnnCurve {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.lift(0).getOrElse("/tmp/graft_scale/sf1")
-    val out = args.lift(1).getOrElse("scale_r11/ann_curve.json")
-    val preset = args.lift(2).getOrElse("full")
     val spark = MasterEnv.standardBuilder(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, args)
+    finally {
+      graft.data.Frames.releaseAll()
+      spark.stop()
+    }
+  }
+
+  private def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+    val sfDir = args.lift(0).getOrElse("/tmp/graft_scale/sf1")
+    val out = args.lift(1).getOrElse("scale_r11/ann_curve.json")
+    val preset = args.lift(2).getOrElse("full")
 
     val emb = Tables(spark, sfDir, "embeddings")
     val nVec = emb.count()
@@ -64,7 +72,7 @@ object AnnCurve {
       val day2 = emb.filter(col("vec_id") % 97 === 3)
       val nDay2 = day2.count()
       val (ivfA, tIvfA) = timed(IvfIndex.build(day1, 256, maxIter = 10))
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_anncurve_ivfpq_append"
+      val dir = graft.data.Frames.storeDir("anncurve", "ivfpq_append")
       val (m, ksub, nProbe, shortlist) = (32, 64, 8, 200)
       val (_, tBase) = timed {
         val built = PqIndex.buildIvfPq(ivfA, day1, m, ksub)
@@ -101,7 +109,6 @@ object AnnCurve {
           .stripMargin.replace("\n", "")
       println(s"[ann_append] append=${tAppend}s recall=$rec day2Hits=$day2Hits")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-      spark.stop()
       return
     }
 
@@ -123,8 +130,7 @@ object AnnCurve {
     if (preset == "recall") {
       val (m, ksub, nProbe, shortlist) = (32, 64, 8, 200)
       val (ivf, tIvf) = timed(IvfIndex.build(emb, 256, maxIter = 10))
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_anncurve_recall"
-      graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+      val dir = graft.data.Frames.storeDir("anncurve", "recall")
       val (_, tBuild) = timed {
         val built = PqIndex.buildIvfPq(ivf, emb, m, ksub)
         PqIndex.saveIvfPq(built, dir)
@@ -162,7 +168,6 @@ object AnnCurve {
            |"heap_gb":${math.rint(Runtime.getRuntime.maxMemory / (1024.0 * 1024 * 1024) * 10) / 10}}"""
           .stripMargin.replace("\n", "")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-      spark.stop()
       return
     }
 
@@ -185,8 +190,7 @@ object AnnCurve {
       val rows = scala.collection.mutable.ArrayBuffer.empty[String]
       for (cells <- Seq(256, graft.llm.IvfIndex.scaledCells(nVec))) {
         val (ivf, tIvf) = timed(IvfIndex.build(emb, cells, maxIter = 10))
-        val dir = s"${sys.props("java.io.tmpdir")}/graft_anncurve_scalelaw_$cells"
-        graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+        val dir = graft.data.Frames.storeDir("anncurve", s"scalelaw_$cells")
         val (_, tBuild) = timed {
           val built = PqIndex.buildIvfPq(ivf, emb, m, ksub, refineKsub = 256)
           PqIndex.saveIvfPq(built, dir)
@@ -215,7 +219,6 @@ object AnnCurve {
            |"heap_gb":${math.rint(Runtime.getRuntime.maxMemory / (1024.0 * 1024 * 1024) * 10) / 10}}"""
           .stripMargin.replace("\n", "")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-      spark.stop()
       return
     }
 
@@ -225,8 +228,7 @@ object AnnCurve {
       val day3 = emb.filter(col("vec_id") % 97 === 7)
       val (nD2, nD3) = (day2.count(), day3.count())
       val (ivfA, tIvfA) = timed(IvfIndex.build(day1, 256, maxIter = 10))
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_anncurve_ivfpq_compact"
-      graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+      val dir = graft.data.Frames.storeDir("anncurve", "ivfpq_compact")
       val (m, ksub, nProbe, shortlist) = (32, 64, 8, 200)
       val (_, tBase) = timed {
         val built = PqIndex.buildIvfPq(ivfA, day1, m, ksub)
@@ -310,7 +312,6 @@ object AnnCurve {
         s"files $filesPre->$filesPost probe ${tPre}->${tPost}s identical=true " +
         s"qps base=$qpsBaseline during=$qpsDuring after=$qpsAfter")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-      spark.stop()
       return
     }
 
@@ -378,7 +379,7 @@ object AnnCurve {
       // recall@10 = 1.0), served from the PERSISTED cell-partitioned index
       val (m, ksub, nProbe, shortlist) = (32, 64, 8, 200)
       val (built, tBuild) = timed(PqIndex.buildIvfPq(ivf, emb, m, ksub))
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_anncurve_ivfpq_$preset"
+      val dir = graft.data.Frames.storeDir("anncurve", s"ivfpq_$preset")
       val (_, tSave) = timed(PqIndex.saveIvfPq(built, dir))
       built.unpersist()
       ivf.unpersist() // search never reads `assigned`; keep memory honest
@@ -474,6 +475,5 @@ object AnnCurve {
         .stripMargin.replace("\n", "")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json)
     println(json)
-    spark.stop()
   }
 }

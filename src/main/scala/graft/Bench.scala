@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Per-round benchmark main: times every declared query at the given SF dir
   * and prints one JSON line for the driver.
@@ -83,8 +83,10 @@ object Bench {
     // offline step (run once, amortized across probe workloads), so the
     // timed pass measures probe-time routing + cell scans, not the build.
     try {
-      materialize("j3_star_join"); materialize("w1_topk_per_group")
-      materialize("sim_ivf_ann")
+      graft.data.Frames.checkpointScope("warmup") {
+        materialize("j3_star_join"); materialize("w1_topk_per_group")
+        materialize("sim_ivf_ann")
+      }
       // RocksDB native library extraction+load (~several seconds, once per
       // JVM) otherwise lands on st_stream_tws
       try org.rocksdb.RocksDB.loadLibrary() catch { case _: Throwable => }
@@ -95,7 +97,7 @@ object Bench {
       try {
         import spark.implicits._
         val tiny = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-        val warmDir = s"${sys.props("java.io.tmpdir")}/graft_bench_warm"
+        val warmDir = graft.data.Frames.storeDir("bench", "warm")
         tiny.write.mode("overwrite").parquet(s"$warmDir/p")
         spark.read.parquet(s"$warmDir/p").count()
         tiny.write.mode("overwrite").orc(s"$warmDir/o")
@@ -145,8 +147,7 @@ object Bench {
     // boot, with calib_first ~0.5 s both times. 256 MB buffered write +
     // fsync through the same /tmp the state stores and sinks use.
     def ioCalibrate(): Double = {
-      val p = java.nio.file.Paths.get(
-        s"${sys.props("java.io.tmpdir")}/graft_bench_iocalib")
+      val p = java.nio.file.Paths.get(graft.data.Frames.storeDir("bench", "iocalib"))
       val buf = new Array[Byte](1 << 20)
       val t0 = System.nanoTime()
       val ch = java.nio.channels.FileChannel.open(p,
@@ -176,27 +177,8 @@ object Bench {
     // HashMap: map iteration reshuffles whenever the key set changes, which
     // moved one-time costs (caches, JIT) between named lines round-over-round
     // and made per-query numbers incomparable
-    // Staged cache release (r13 finding): the dedup family's pinned
-    // MEMORY_AND_DISK blocks (shared shingle checkpoints + the ≥-floor
-    // pair cache) have NO consumers after the Incremental family in
-    // declaration order — Multimodal/Sampling/Windowed/Streams never read
-    // them — yet left pinned they tax every later line with GC at the
-    // sf10 8 GiB default (st_stream_session 94.0 s in-suite vs 9.0 s at
-    // 16 GiB, same plan). Release them right after their last consumer
-    // instead of only at end of run; the release runs OUTSIDE the timed
-    // window because it is suite lifecycle, not any query's own cost.
-    // Keyed on the last CONSUMER PRESENT IN THIS RUN, not the unfiltered
-    // family tail: a SPARK_GRAFT_ONLY filter that excludes the final
-    // Incremental query (while including later families) would otherwise
-    // keep the pinned blocks alive all run — reintroducing the late-suite
-    // GC tax on exactly the local-iteration runs used to chase it.
     val runNames: Seq[String] = SparkEntry.allEntries.map(_.name)
       .filter(name => only.forall(_.contains(name)))
-    val dedupCacheConsumers: Set[String] =
-      (graft.llm.Dedup.entries ++ graft.llm.Pipeline.entries ++
-        graft.llm.Incremental.entries).map(_.name).toSet
-    val lastDedupCacheConsumer: Option[String] =
-      runNames.reverse.find(dedupCacheConsumers.contains)
     val results: scala.collection.immutable.ListMap[String, Double] =
       scala.collection.immutable.ListMap.from(
         runNames
@@ -206,19 +188,20 @@ object Bench {
             // killer instead of needing a bisect over SPARK_GRAFT_ONLY
             Console.err.println(s"[bench] start $name")
             val t0 = System.nanoTime()
-            try materialize(name) catch {
-              case e: Throwable =>
-                val msg = e.getClass.getSimpleName + ": " +
-                  Option(e.getMessage).getOrElse("")
-                errors(name) = msg.replaceAll("""["\\\n\r\t]""", " ").take(200)
+            // the query's tracked checkpoints are released as its scope
+            // closes, inside the timed window (the release is part of the
+            // query's honest cost): a tracked intermediate left pinned until
+            // end-of-run OOMed the sf10 suite (t14's gram-count frame is
+            // ~GBs there)
+            graft.data.Frames.checkpointScope(name) {
+              try materialize(name) catch {
+                case e: Throwable =>
+                  val msg = e.getClass.getSimpleName + ": " +
+                    Option(e.getMessage).getOrElse("")
+                  errors(name) = msg.replaceAll("""["\\\n\r\t]""", " ").take(200)
+              }
             }
-            // release per-query tracked checkpoints NOW, inside the timed
-            // window (the release is part of the query's honest cost): a
-            // tracked intermediate left pinned until end-of-run OOMed the
-            // sf10 suite (t14's gram-count frame is ~GBs there)
-            graft.data.Frames.releaseTracked()
             val secs = (System.nanoTime() - t0) / 1e9
-            if (lastDedupCacheConsumer.contains(name)) graft.llm.Dedup.releaseCaches()
             Console.err.println(
               String.format(java.util.Locale.ROOT, "[bench] done %s %.2f s", name, Double.box(secs)))
             name -> secs
@@ -307,7 +290,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_full.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => }
+    catch { case NonFatal(e) => Console.err.println(s"[bench] bench_full.json not written: $e") }
     // Headline JSON line, printed LAST: a representative cross-section of
     // the suite, sized (~700 chars) to survive the driver's 2000-char tail
     // intact so it parses. Full suite numbers: line above + bench_full.json.
@@ -326,11 +309,7 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":\"" + v.take(60) + "\"" }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":$hq,"errors":$he,"sf":$sfNum,"cpus":"${jstr(cpus)}","master":"${jstr(MasterEnv.master(cpus))}",$contention}""")
-    graft.llm.Dedup.releaseCaches()
-    graft.llm.PqIndex.releaseModels()
-    graft.streaming.Streams.releaseSinks()
-    graft.ops.Scans.releaseLayouts()
-    graft.data.Frames.releaseTracked()
+    graft.data.Frames.releaseAll()
     spark.stop()
   }
 }

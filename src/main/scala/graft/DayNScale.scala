@@ -100,6 +100,7 @@ object DayNScale {
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    graft.data.Frames.releaseAll()
     spark.stop()
   }
 }

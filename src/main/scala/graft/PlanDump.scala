@@ -1,5 +1,7 @@
 package graft
 
+import graft.data.Frames
+
 /** Dump `.explain("formatted")` for declared queries to files — the
   * plan-evidence artifact the optimization rounds commit under plans/rNN/.
   *
@@ -21,7 +23,7 @@ object PlanDump {
     val spark = MasterEnv.standardBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    for (name <- names) {
+    for (name <- names) Frames.checkpointScope(name) {
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val plan = df.queryExecution.explainString(
@@ -33,9 +35,8 @@ object PlanDump {
       } catch { case e: Throwable =>
         Console.err.println(s"[plandump] FAILED $name: $e")
       }
-      graft.data.Frames.releaseTracked()
     }
-    graft.llm.Dedup.releaseCaches()
+    Frames.releaseAll()
     spark.stop()
   }
 }

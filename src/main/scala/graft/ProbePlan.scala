@@ -1,5 +1,7 @@
 package graft
 
+import graft.data.Frames
+
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc plan/timing inspector for a declared query: prints the FORMATTED
@@ -37,7 +39,7 @@ object ProbePlan {
           emb.filter(col("vec_id") % 200 === 7).select("vec_id", "embedding"),
           emb, k = 10, shortlist = 50, nProbe = 4)
       } else SparkEntry.queries(name)(spark, sfDir)
-    for (i <- 1 to reps) {
+    for (i <- 1 to reps) Frames.checkpointScope(s"$name rep $i") {
       val df = build()
       val t0 = System.nanoTime()
       df.write.mode("overwrite").format("noop").save()
@@ -46,8 +48,8 @@ object ProbePlan {
       if (i == reps) {
         Console.err.println(df.queryExecution.executedPlan.toString.take(12000))
       }
-      graft.data.Frames.releaseTracked()
     }
+    Frames.releaseAll()
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.data.Tables
+import graft.data.{Frames, Tables}
 import graft.llm.Dedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -68,13 +68,13 @@ object RecallProbe {
         pairSet(Dedup.exactPairsPrefix(docs, 0.8).select("doc_a", "doc_b"))
       else {
         val acc = scala.collection.mutable.Set.empty[(Long, Long)]
-        for (i <- 0 until blocks; j <- i until blocks) {
+        // one scope per block pair: drops the sub-corpus shingle/pair caches
+        for (i <- 0 until blocks; j <- i until blocks) Frames.scope(s"truth block $i,$j") {
           val sub = docs.filter(blk(col("doc_id")).isin(i, j))
           val pairs = Dedup.exactPairsPrefix(sub, 0.8).select("doc_a", "doc_b")
           val kept = if (i == j) pairs
             else pairs.filter(blk(col("doc_a")) =!= blk(col("doc_b")))
           acc ++= pairSet(kept)
-          Dedup.releaseCaches() // drop the sub-corpus shingle/pair caches
         }
         acc.toSet
       }
@@ -97,10 +97,9 @@ object RecallProbe {
       if (blocks == 1) nearSet(Dedup.incrementalDedup(docs, isBatch))
       else {
         val acc = scala.collection.mutable.Set.empty[Long]
-        for (c <- 0 until blocks) {
+        for (c <- 0 until blocks) Frames.scope(s"d8 truth block $c") {
           val sub = docs.filter(isBatch || blk(col("doc_id")) === c)
           acc ++= nearSet(Dedup.incrementalDedup(sub, isBatch))
-          Dedup.releaseCaches()
         }
         acc.toSet
       }
@@ -184,7 +183,6 @@ object RecallProbe {
       s""""semdedup":{"skipped":"${what.replaceAll("""["\\\n\r\t]""", " ")}"}"""
     }.get
 
-    Dedup.releaseCaches()
     val dir = java.nio.file.Paths.get(out).getParent
     if (dir != null) java.nio.file.Files.createDirectories(dir)
     // same sanitization as Bench.jstr: a quote/backslash in a user-typed
@@ -199,6 +197,7 @@ object RecallProbe {
          |"loadavg":${java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage}}""".stripMargin.replace("\n", "")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json)
     println(json)
+    Frames.releaseAll()
     spark.stop()
   }
 }

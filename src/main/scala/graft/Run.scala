@@ -37,10 +37,7 @@ object Run {
       println(f"[run] $name rows=$n2 warm=$dt2%.2fs sf=$sfDir")
     }
     if (flags("--show")) df.show(50, truncate = false)
-    graft.llm.PqIndex.releaseModels()
-    graft.streaming.Streams.releaseSinks()
-    graft.ops.Scans.releaseLayouts()
-    graft.data.Frames.releaseTracked()
+    graft.data.Frames.releaseAll()
     spark.stop()
   }
 }

@@ -102,6 +102,7 @@ object SkewProbe {
         .stripMargin.replace("\n", "")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json)
     println(json)
+    graft.data.Frames.releaseAll()
     spark.stop()
   }
 }

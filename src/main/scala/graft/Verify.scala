@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.data.Frames
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -16,18 +17,20 @@ object Verify {
     // declaration order (not the unordered queries map): shared caches are
     // built by the entry declared for them (d0_cache_build) instead of
     // whichever family member an unordered iteration reaches first
+    // each query in its own checkpoint scope: its tracked checkpoints (t14's
+    // gram counts) are dead once the result is written, so they are
+    // released here, not at end-of-run, and cannot accumulate across the
+    // suite; the shared caches it builds stay for later queries
     SparkEntry.allEntries
       .filter(q => only.isEmpty || only.contains(q.name))
       .foreach { q =>
-      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/${q.name}")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+      Frames.checkpointScope(q.name) {
+        try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${q.name}")
+        catch { case NonFatal(e) =>
+          System.err.println(s"[verify] ${q.name} failed: $e")
+        }
       }
-      // per-query tracked checkpoints (t14's gram counts) are dead once the
-      // result is written — release them here, not at end-of-run, so their
-      // blocks can't accumulate across the suite
-      graft.data.Frames.releaseTracked()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -44,11 +47,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.llm.Dedup.releaseCaches()
-    graft.llm.PqIndex.releaseModels()
-    graft.streaming.Streams.releaseSinks()
-    graft.ops.Scans.releaseLayouts()
-    graft.data.Frames.releaseTracked()
+    Frames.releaseAll()
     spark.stop()
   }
 }

@@ -225,7 +225,7 @@ object Graft {
                 failure.compareAndSet(null, e)
                 // free any trial lost with this slot — without Spark's task
                 // retry, nothing else emits the re-registration signal
-                TrialExecutor.releaseSlot(host, port, secret, pid)
+                TrialExecutor.reregisterSlot(host, port, secret, pid)
                 done = true
               } // else: the retry's own REG performs the lost-trial cleanup
           }

@@ -229,6 +229,7 @@ object ScaleGen {
       t -> spark.read.parquet(s"$out/$t.parquet").count()
     }
     println("SCALEGEN " + counts.map { case (t, c) => s"$t=$c" }.mkString(" "))
+    graft.data.Frames.releaseAll()
     spark.stop()
   }
 }

@@ -56,18 +56,15 @@ object Tables {
     * quality flag #1: every ANN declaration fired 2-3 redundant count
     * jobs per run just to size scaledCells/scaledShortlist). The parquet
     * dirs never change within a run, so one count per (dir, table) per
-    * JVM is correct — the cachedIndexFor idiom applied to the knob that
-    * sizes it. */
-  private val countCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-
+    * registry lifetime is correct — the cachedIndexFor idiom applied to
+    * the knob that sizes it. */
   def cachedCount(spark: SparkSession, sfDir: String, name: String): Long =
-    countCache.getOrElseUpdate((sfDir, name), apply(spark, sfDir, name).count())
+    cachedCountOf(sfDir, name)(apply(spark, sfDir, name))
 
   /** Derived-frame variant (e.g. an append query's day-1 split): `key`
     * must uniquely name the derivation within `sfDir`. */
   def cachedCountOf(sfDir: String, key: String)(df: => DataFrame): Long =
-    countCache.getOrElseUpdate((sfDir, key), df.count())
+    Frames.getOrCreate(Frames.Key("table.count", sfDir, key))(df.count())(_ => ())
 
   /** Register all tables as temp views (idempotent) so query builders can
     * use `spark.sql` where it is clearer than the DataFrame DSL. */

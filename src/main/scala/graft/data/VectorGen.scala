@@ -91,6 +91,7 @@ object VectorGen {
     embs.write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     val written = spark.read.parquet(s"$out/embeddings.parquet").count()
     println(s"VECTORGEN n=$written dim=$dim coarse=$nCoarse fine=$finePerCoarse out=$out")
+    graft.data.Frames.releaseAll()
     spark.stop()
   }
 }

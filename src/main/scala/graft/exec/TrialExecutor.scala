@@ -111,12 +111,12 @@ private[exec] final class RpcChannel(host: String, port: Int, secret: String) {
   */
 object TrialExecutor {
 
-  /** Best-effort slot release: re-register the partition so the driver
+  /** Best-effort slot re-registration: REG the partition again so the driver
     * frees any trial lost with it. Spark task retry produces this signal
     * implicitly (the retried task's REG); a thread-pool launcher whose slot
     * died for good must emit it manually or the lost trial stays Running
     * and the experiment never completes. */
-  def releaseSlot(host: String, port: Int, secret: String, partitionId: Int): Unit =
+  def reregisterSlot(host: String, port: Int, secret: String, partitionId: Int): Unit =
     try {
       val ch = new RpcChannel(host, port, secret)
       try ch.request(Map("type" -> MsgType.Reg, "partition" -> partitionId.toString))

@@ -271,21 +271,17 @@ object Bpe {
         col("pieces_per_word"))
   }
 
-  // Per-corpus merge-table cache (the d0 shared-cache idiom, keyed by the
-  // data dir like Dedup's token/pair caches): the declared train + encode
-  // pair shares ONE training run in a declaration-ordered suite, and the
-  // merge table itself is driver-sized (≤ nMerges rows) so caching it
-  // holds no executor blocks — nothing to release.
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Int, String, String, String, Long)]]
-
+  // Per-corpus merge table (the d0 shared-cache idiom, keyed by the data
+  // dir): the declared train + encode pair shares ONE training run in a
+  // declaration-ordered suite, and the merge table itself is driver-sized
+  // (≤ nMerges rows), so the entry holds no executor blocks.
   private def trainedMerges(s: SparkSession, d: String,
       nMerges: Int): Seq[(Int, String, String, String, Long)] =
-    mergeCache.getOrElseUpdate(s"$d#$nMerges",
+    graft.data.Frames.getOrCreate(graft.data.Frames.Key("bpe.merges", d, nMerges))(
       trainBpe(Tables(s, d, "documents"), nMerges = nMerges).collect()
         .sortBy(_.getInt(0))
         .map(r => (r.getInt(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getLong(4))).toSeq)
+          r.getString(3), r.getLong(4))).toSeq)(_ => ())
 
   val entries: Seq[QueryDef] = Seq(
     // Iterative trainer output is not expressible as one SQL query (a

@@ -899,15 +899,14 @@ object Dedup {
   // full holdout text scans (tokenize + 8-gram explode + distinct) per
   // bench run, growing with the holdout. The probe is an eval benchmark —
   // bounded as the corpus grows (the d7b broadcast argument) — so the
-  // persisted copy is KB–MB at any scale; released with the other caches.
-  private val gramProbeCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  // persisted copy is KB–MB at any scale.
 
   /** The distinct width-`k` gram hash set of `probeDocs`, shared across
     * every decontamination stage probing the same frame (§2.4 — remove
-    * repeated passes; the pairCache contract: first consumer pays inside
-    * its timed line, releaseCaches reclaims). */
+    * repeated passes; the shared-cache contract: first consumer pays inside
+    * its timed line, its owner's release reclaims). */
   def probeGramSet(probeDocs: DataFrame, k: Int = 8): DataFrame =
-    gramProbeCache.getOrElseUpdate((corpusKey(probeDocs), k).toString,
+    cached("dedup.probe_grams", probeDocs, k)(
       wideGrams(probeDocs, k).select("h").distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -1171,36 +1170,28 @@ object Dedup {
     boundedScoredPairs(docs, Int.MaxValue)
 
   // ---- shared per-corpus caches -------------------------------------------
-  // Two tracked caches serve the whole dedup family:
-  //   tokenCache  — the localCheckpoint'ed shingle-array rows backing the
+  // Frames entries keyed by the corpus frame, serving the whole dedup family:
+  //   dedup.tokens — the localCheckpoint'ed shingle-array rows backing the
   //     exploded (doc_id, shingle-hash) view (see sharedTokens). Consumers:
   //     the posting join (d4/d6), the contamination scan (d7), and the
   //     minhash signatures (d3).
-  //   pairCache   — the scored pair table at jaccard ≥ PairCacheFloor (d4
+  //   dedup.pairs  — the scored pair table at jaccard ≥ PairCacheFloor (d4
   //     reports ≥ 0.1, d6 clusters ≥ 0.8, d3 verifies its LSH candidates
   //     against it; see PairCacheFloor for why sub-floor pairs are not kept).
-  // Tracked so the lifecycle is explicit: callers done with a corpus call
-  // releaseCaches() — the round-3 version persisted per call and never
-  // unpersisted, accumulating untracked blocks across a Verify/Bench run.
-  private val tokenCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val pairCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  // Verified banded-LSH pair sets, keyed (corpus, threshold, maxBucketSize):
-  // d3, d6b and d8b all declare the identical pair computation over the
-  // same corpus — the signature agg + band bucketing + exact verification
-  // ran three times per run (r17; ~2 s each at sf0.1, growing with scale).
-  // The verified pair table is tiny (true near-dup pairs only), so one
-  // persisted copy serves every consumer — the same within-run sharing
-  // contract as pairCache above; released with it.
-  private val lshPairCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Double, Int), DataFrame]
-  // Per-corpus minhash signature table (doc_id, m0..m63) — the third shared
-  // cache (r17): signatures are a doc-LOCAL function of the doc's shingles,
-  // so every consumer over the same corpus (the inline LSH pair path, the
-  // incremental batch-signature path, and any SUBSET of the corpus via a
-  // doc_id semi-join) reads one persisted table instead of re-running the
-  // 64-permutation aggregation per query. First consumer pays (the
-  // fingerprint-store design: a deployment materializes exactly this).
-  private val sigCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  //   dedup.lsh_pairs — verified banded-LSH pair sets per (threshold,
+  //     maxBucketSize): d3, d6b and d8b all declare the identical pair
+  //     computation over the same corpus (r17: ~2 s each at sf0.1); the
+  //     verified table is tiny (true near-dup pairs only).
+  //   dedup.sigs   — the minhash signature table (doc_id, m0..m63):
+  //     signatures are a doc-LOCAL function of the doc's shingles, so every
+  //     consumer over the same corpus (the inline LSH pair path, the
+  //     incremental batch-signature path, and any SUBSET of the corpus via
+  //     a doc_id semi-join) reads one table instead of re-running the
+  //     64-permutation aggregation per query.
+  // First consumer pays (the fingerprint-store design: a deployment
+  // materializes exactly this); the owning scope releases.
+  private def cached(kind: String, docs: DataFrame, params: Any*)(build: => DataFrame): DataFrame =
+    Frames.getOrCreate(Frames.Key(kind, Frames.corpusKey(docs), params: _*))(build)(Frames.release)
 
   /** Row bound for PERSISTING the shared signature table (the
     * IvfIndex.AssignedCacheMaxRows rule: never pin what a map stage
@@ -1211,8 +1202,8 @@ object Dedup {
     * ledger build OOMed outright with the unconditional persist. Above
     * the bound the store is DISK-BACKED (r18): one standalone
     * materialization writes the aggregation to a per-corpus parquet under
-    * java.io.tmpdir and every consumer reads that flat scan — sharing
-    * without the heap pin, rebuilt per JVM and deleted at release. */
+    * the Frames store root and every consumer reads that flat scan —
+    * sharing without the heap pin, deleted at release. */
   private[graft] val SigCacheMaxRows = 2000000L
 
   // one doc-count probe per corpus (drives the sig-persist and the
@@ -1223,19 +1214,15 @@ object Dedup {
   // arrays) just to learn the row count, even when the dispatch then
   // rejected the cache (r18, advice — the >2M-doc path paid the exact
   // cost the bound exists to avoid).
-  private val shingleCountCache = scala.collection.concurrent.TrieMap.empty[String, Long]
   private def cachedShingleCount(docs: DataFrame): Long =
-    shingleCountCache.getOrElseUpdate(corpusKey(docs), docs.count())
+    Frames.getOrCreate(Frames.Key("dedup.doc_count", Frames.corpusKey(docs)))(docs.count())(_ => ())
 
-  // per-corpus parquet spill dirs backing the ABOVE-BOUND sig store —
-  // deleted with the caches they shadow (releaseCaches/releaseCorpusCaches)
-  private val sigSpillDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def sharedMinhashSigs(docs: DataFrame): DataFrame =
-    sigCache.getOrElseUpdate(corpusKey(docs), {
+  private[graft] def sharedMinhashSigs(docs: DataFrame): DataFrame = {
+    val key = Frames.corpusKey(docs)
+    Frames.getOrCreate(Frames.Key("dedup.sigs", key))({
       val sig = minhashAgg(sharedTokens(docs))
       if (cachedShingleCount(docs) <= SigCacheMaxRows)
-        sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), None)
       else {
         // DISK-BACKED signature store above the bound (r18, verdict #3):
         // the x11-ledger idiom applied to the shared sig table. One
@@ -1245,36 +1232,15 @@ object Dedup {
         // storage region (the r17 unconditional persist pushed the 5M-doc
         // sf100 slice into OOM), and composed consumers never inline the
         // corpus-wide agg subtree into their own plans (the other half of
-        // that OOM). Rebuilt per JVM (overwrite-on-miss), deleted at
-        // release — never a cross-run result cache.
-        val key = corpusKey(docs)
-        val keyHex = java.security.MessageDigest.getInstance("MD5")
-          .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val dir = s"${sys.props("java.io.tmpdir")}/graft_sigstore_$keyHex"
+        // that OOM). Deleted at release — never a cross-run result cache.
+        val dir = Frames.storeDir("sigstore", key)
         sig.write.mode("overwrite").parquet(dir)
-        sigSpillDirs.put(key, dir)
-        docs.sparkSession.read.parquet(dir)
+        (docs.sparkSession.read.parquet(dir), Some(dir))
       }
-    })
-
-  /** Cache key for a corpus frame. The naive canonicalized-plan string is
-    * NOT sufficient: an unresolved parquet read prints "paths: 1 provided"
-    * with no actual path, so two same-schema corpora in one session (two
-    * sf dirs, or a test suite after a bench run) collide and the second
-    * silently reuses the first corpus' shingle cache — observed as a d3
-    * recall failure when two suites share a session. Key on the ANALYZED
-    * canonical plan plus the resolved input files (distinct per corpus
-    * directory) plus the row data of any in-memory relation (same-schema
-    * test frames differ only in data, which the plan string omits). */
-  private def corpusKey(docs: DataFrame): String = {
-    val analyzed = docs.queryExecution.analyzed
-    val localData = analyzed.collectLeaves().collect {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.hashCode()
-    }
-    (analyzed.canonicalized.toString,
-      docs.inputFiles.toSeq.sorted.mkString(","),
-      localData.mkString(",")).toString
+    }) { case (df, dir) =>
+      Frames.release(df)
+      dir.foreach(d => Frames.deleteRecursively(new java.io.File(d)))
+    }._1
   }
 
   /** Shared exploded (doc_id, h) distinct-shingle-hash pairs. The shingle
@@ -1291,7 +1257,7 @@ object Dedup {
     * for consumers that need per-doc SETS (candidate verification's
     * array_intersect) rather than the exploded posting view. */
   private def sharedShingles(docs: DataFrame): DataFrame =
-    tokenCache.getOrElseUpdate(corpusKey(docs), shingleSets(fanOut(docs)).localCheckpoint())
+    cached("dedup.tokens", docs)(shingleSets(fanOut(docs)).localCheckpoint())
 
   /** CPU-parallelism guard for the shingle build: a single-row-group input
     * (row groups are Spark's split unit, so the small test corpus arrives
@@ -1306,7 +1272,7 @@ object Dedup {
   }
 
   private def sharedScoredPairs(docs: DataFrame): DataFrame =
-    pairCache.getOrElseUpdate(corpusKey(docs),
+    cached("dedup.pairs", docs)(
       scoredNgramPairs(docs).filter(col("jaccard") >= PairCacheFloor)
         // The pair-AGG shuffle is deliberately wide (8×parallelism — see
         // boundedScoredPairs), but the ≥-floor table retained here is ~5
@@ -1322,43 +1288,6 @@ object Dedup {
         // moves only the ≥-floor rows (KBs), on the one-time d0 build line.
         .repartition(docs.sparkSession.sparkContext.defaultParallelism)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Release every tracked token/pair cache (end of a Verify/Bench run, or
-    * between corpora in a long-lived session). The token cache holds
-    * localCheckpoint'ed datasets whose blocks live on the underlying RDD,
-    * not in the SQL cache manager — unpersist that RDD directly. */
-  def releaseCaches(): Unit = {
-    tokenCache.values.foreach(graft.data.Frames.release)
-    tokenCache.clear()
-    gramProbeCache.values.foreach(_.unpersist(blocking = false))
-    gramProbeCache.clear()
-    pairCache.values.foreach(_.unpersist(blocking = false))
-    pairCache.clear()
-    lshPairCache.values.foreach(_.unpersist(blocking = false))
-    lshPairCache.clear()
-    sigCache.values.foreach(_.unpersist(blocking = false))
-    sigCache.clear()
-    sigSpillDirs.values.foreach(d =>
-      graft.streaming.Streams.deleteRecursively(new java.io.File(d)))
-    sigSpillDirs.clear()
-    shingleCountCache.clear()
-  }
-
-  /** Release only the caches keyed to `docs`' corpus — for operators that
-    * build a corpus-scoped cache mid-query (the lazy ledger build) and must
-    * not clear the GLOBAL registries, which may hold other callers' live
-    * tracked frames. */
-  def releaseCorpusCaches(docs: DataFrame): Unit = {
-    val k = corpusKey(docs)
-    tokenCache.remove(k).foreach(graft.data.Frames.release)
-    pairCache.remove(k).foreach(_.unpersist(blocking = false))
-    lshPairCache.keys.filter(_._1 == k).foreach(
-      lshPairCache.remove(_).foreach(_.unpersist(blocking = false)))
-    sigCache.remove(k).foreach(_.unpersist(blocking = false))
-    sigSpillDirs.remove(k).foreach(d =>
-      graft.streaming.Streams.deleteRecursively(new java.io.File(d)))
-    shingleCountCache.remove(k): Unit
-  }
 
   /** Connected components by min-label propagation WITH pointer doubling:
     * each round every node takes the min label among itself and its
@@ -1795,9 +1724,12 @@ object Dedup {
     * the hash family and grouping of [[bandedLshPairs]]' inline signatures,
     * so bands derived from a persisted array and bands computed fresh from
     * text agree bit-for-bit. Docs under 3 tokens have no shingles and no
-    * row here (they cannot be shingle near-dups of anything). */
+    * row here (they cannot be shingle near-dups of anything). Its callers
+    * hand it a one-off subset frame, so the shingle checkpoint behind it is
+    * the caller's tracked checkpoint, not a shared per-corpus cache. */
   private[graft] def minhashSignatures(docs: DataFrame): DataFrame =
-    minhashAgg(sharedTokens(docs))
+    minhashAgg(Frames.trackedCheckpoint(shingleSets(fanOut(docs)))
+        .select(col("doc_id"), explode(col("sh")).as("h")))
       .select(col("doc_id"),
         array((0 until NumHashes).map(i => col(s"m$i")): _*).as("sig"))
 
@@ -1852,7 +1784,7 @@ object Dedup {
       docs: DataFrame,
       jaccardThreshold: Double,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    lshPairCache.getOrElseUpdate((corpusKey(docs), jaccardThreshold, maxBucketSize),
+    cached("dedup.lsh_pairs", docs, jaccardThreshold, maxBucketSize)(
       bandedLshPairsImpl(docs, jaccardThreshold, maxBucketSize)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -1873,8 +1805,8 @@ object Dedup {
     * isolated day-N append must never pay a full-corpus pass to
     * fingerprint a 1% batch. */
   private def sigShareable(corpus: DataFrame): Boolean = {
-    val k = corpusKey(corpus)
-    sigCache.contains(k) || tokenCache.contains(k) ||
+    val k = Frames.corpusKey(corpus)
+    Frames.contains(Frames.Key("dedup.sigs", k)) || Frames.contains(Frames.Key("dedup.tokens", k)) ||
       cachedShingleCount(corpus) <= SigCacheMaxRows
   }
 

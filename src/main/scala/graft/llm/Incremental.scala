@@ -77,22 +77,22 @@ object Incremental {
   // the persisted day-1 ledger (build-once per corpus, like IvfIndex)
   // ---------------------------------------------------------------------
 
-  // process-level registry of built ledger paths, keyed by corpus dir —
-  // the build is the offline day-1 job a deployment runs once; every
-  // incremental query against the same corpus reads the same parquet
-  private val ledgerPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** A built ledger store and the crawl batches appended to it. */
+  private final class Ledger(val dir: String) {
+    val appended = scala.collection.mutable.Set.empty[Int] // guarded by this
+  }
 
-  private[graft] def ledgerDir(s: SparkSession, d: String): String =
-    ledgerPaths.getOrElseUpdate(d, {
-      // md5 of the corpus dir, not hashCode: distinct corpora must never
-      // collide on one on-disk path (same rationale as IvfIndex)
-      val keyHex = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_ledger_$keyHex"
+  // one ledger per corpus dir, built on first use — the build is the
+  // offline day-1 job a deployment runs once; every incremental query
+  // against the same corpus reads the same parquet
+  private def ledger(s: SparkSession, d: String): Ledger =
+    Frames.getOrCreate(Frames.Key("ledger", d))({
+      val dir = Frames.storeDir("ledger", d)
       buildLedger(s, d, dir)
-      dir
-    })
+      new Ledger(dir)
+    })(l => Frames.deleteRecursively(new java.io.File(l.dir)))
+
+  private[graft] def ledgerDir(s: SparkSession, d: String): String = ledger(s, d).dir
 
   // ---- the store's two zones (the LSM shape every appendable columnar
   // store converges on):
@@ -167,63 +167,56 @@ object Incremental {
     * (min doc_id per h among quality survivors), and the d7b
     * decontamination of the keepers against the holdout's broadcast gram
     * index. Writes the narrow store; day-1 text is never read again. */
-  private def buildLedger(s: SparkSession, d: String, dir: String): Unit = {
-    // a fresh build owns the WHOLE store dir: clear any stale zones left
-    // by a prior process (its base/ would otherwise union with the
-    // rebuilt delta/ and double every row)
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
-    val day1 = Tables(s, d, "documents").filter(isDay1)
-    // NOT trackedCheckpoint: the build runs lazily on first ledger touch,
-    // possibly mid-way through a caller's own query — releasing the GLOBAL
-    // registries here would unpersist that caller's live checkpoints. The
-    // build releases exactly what it created: this frame + the day-1
-    // corpus-keyed token cache minhashSignatures registers.
-    val fp = day1.select(
-      col("doc_id"), col("source"), size(toks).cast("long").as("n_tok"),
-      TextStats.qualityPass.as("q"), md5(col("text")).as("h"))
-      .localCheckpoint(eager = true)
-    val keepers = fp.filter(col("q")).groupBy("h")
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"), lit(true).as("is_keeper"))
-    val withKeep = fp.join(keepers, Seq("doc_id"), "left_outer")
-      .withColumn("in3", coalesce(col("is_keeper"), lit(false)))
-      .drop("is_keeper")
-    // decontamination restricted to keepers (the x10 stage-4 contract)
-    val dedDocs = day1.join(
-      withKeep.filter(col("in3")).select("doc_id"), Seq("doc_id"), "left_semi")
-    val probeGrams = Dedup.probeGramSet(
-      Tables(s, d, "documents").filter(isHoldout))
-    val contamIds = Dedup.wideGrams(dedDocs)
-      .join(broadcast(probeGrams), "h")
-      .select("doc_id").distinct()
-      .withColumn("contam", lit(true))
-    // day1 ⊂ documents: read the corpus sig store ⋉ day-1 ids when warm
-    // (the bench/Verify session has built it by d0/d6b time) instead of
-    // re-tokenizing 80% of the corpus for the ledger's sig column
-    val sig = Dedup.minhashSignaturesAmong(
-      Tables(s, d, "documents"), day1.select("doc_id"))
-    withKeep.join(contamIds, Seq("doc_id"), "left_outer")
-      .withColumn("in4", col("in3") && !coalesce(col("contam"), lit(false)))
-      .drop("contam")
-      .join(sig, Seq("doc_id"), "left_outer")
-      .withColumn("batch_id", lit(0))
-      // byte-budgeted landing (§5/§6): without the exchange the day-1 write
-      // fuses three sort-merge joins with the parquet write into one
-      // parallelism-wide stage — each task holding sorter pages PLUS an
-      // unmanaged row-group buffer for the ~600 B/row sig-array schema,
-      // which OOMed the 5M-doc sf100 slice outright once the suite's warm
-      // corpus caches were pinned (scale_r18, stage 232). The doc_id hash
-      // repartition decouples join memory from writer memory and sizes the
-      // store's files to the row-group budget instead of one shard per
-      // core — the as-of reads that scan this store on every later line
-      // then open a bounded, row-group-aligned file set.
-      .repartition(ledgerWritePartitions(s, fp.count()), col("doc_id"))
-      .write.mode("overwrite")
-      .option("parquet.block.size", LedgerRowGroupBytes.toString)
-      .partitionBy("batch_id").parquet(deltaDir(dir))
-    Frames.release(fp)
-    Dedup.releaseCorpusCaches(day1)
-  }
+  private def buildLedger(s: SparkSession, d: String, dir: String): Unit =
+    // the build runs lazily on first ledger touch, possibly mid-way through
+    // a caller's own query: its scope releases exactly the checkpoints it
+    // derived (the fingerprints, a cold signature path's subset shingles),
+    // never the caller's; the shared corpus caches it touches stay shared
+    Frames.checkpointScope("x11 ledger build") {
+      val day1 = Tables(s, d, "documents").filter(isDay1)
+      val fp = Frames.trackedCheckpoint(day1.select(
+        col("doc_id"), col("source"), size(toks).cast("long").as("n_tok"),
+        TextStats.qualityPass.as("q"), md5(col("text")).as("h")))
+      val keepers = fp.filter(col("q")).groupBy("h")
+        .agg(min(col("doc_id")).as("doc_id"))
+        .select(col("doc_id"), lit(true).as("is_keeper"))
+      val withKeep = fp.join(keepers, Seq("doc_id"), "left_outer")
+        .withColumn("in3", coalesce(col("is_keeper"), lit(false)))
+        .drop("is_keeper")
+      // decontamination restricted to keepers (the x10 stage-4 contract)
+      val dedDocs = day1.join(
+        withKeep.filter(col("in3")).select("doc_id"), Seq("doc_id"), "left_semi")
+      val probeGrams = Dedup.probeGramSet(
+        Tables(s, d, "documents").filter(isHoldout))
+      val contamIds = Dedup.wideGrams(dedDocs)
+        .join(broadcast(probeGrams), "h")
+        .select("doc_id").distinct()
+        .withColumn("contam", lit(true))
+      // day1 ⊂ documents: read the corpus sig store ⋉ day-1 ids when warm
+      // (the bench/Verify session has built it by d0/d6b time) instead of
+      // re-tokenizing 80% of the corpus for the ledger's sig column
+      val sig = Dedup.minhashSignaturesAmong(
+        Tables(s, d, "documents"), day1.select("doc_id"))
+      withKeep.join(contamIds, Seq("doc_id"), "left_outer")
+        .withColumn("in4", col("in3") && !coalesce(col("contam"), lit(false)))
+        .drop("contam")
+        .join(sig, Seq("doc_id"), "left_outer")
+        .withColumn("batch_id", lit(0))
+        // byte-budgeted landing (§5/§6): without the exchange the day-1 write
+        // fuses three sort-merge joins with the parquet write into one
+        // parallelism-wide stage — each task holding sorter pages PLUS an
+        // unmanaged row-group buffer for the ~600 B/row sig-array schema,
+        // which OOMed the 5M-doc sf100 slice outright once the suite's warm
+        // corpus caches were pinned (scale_r18, stage 232). The doc_id hash
+        // repartition decouples join memory from writer memory and sizes the
+        // store's files to the row-group budget instead of one shard per
+        // core — the as-of reads that scan this store on every later line
+        // then open a bounded, row-group-aligned file set.
+        .repartition(ledgerWritePartitions(s, fp.count()), col("doc_id"))
+        .write.mode("overwrite")
+        .option("parquet.block.size", LedgerRowGroupBytes.toString)
+        .partitionBy("batch_id").parquet(deltaDir(dir))
+    }
 
   /** Ledger landing row-group size: 32 MB instead of the 128 MB default.
     * A parquet writer buffers the open row group on the JVM heap — at the
@@ -248,16 +241,13 @@ object Incremental {
   // the APPEND path: per-crawl-batch fingerprints added to the store
   // ---------------------------------------------------------------------
 
-  // per-process guard: each batch is appended exactly once per store
-  // build (buildLedger's rebuild resets the dir, so a fresh process
-  // re-derives batch 0 and re-appends the batches — deterministic content)
-  private val appendedBatches =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Boolean]
-
-  /** Append crawl batch `n` (ensuring it exactly once per process). */
+  /** Append crawl batch `n`, exactly once per ledger build (a rebuilt
+    * store re-derives batch 0 and re-appends — deterministic content). */
   private def appendBatch(s: SparkSession, d: String, n: Int): Unit = {
-    val dir = ledgerDir(s, d)
-    appendedBatches.getOrElseUpdate((dir, n), { appendBatchWrite(s, d, n); true })
+    val l = ledger(s, d)
+    l.synchronized {
+      if (!l.appended(n)) { appendBatchWrite(s, d, n); l.appended += n }
+    }
   }
 
   /** The append WRITE for batch `n` — the day-N production cadence: the
@@ -277,38 +267,38 @@ object Incremental {
     * with identical content instead of doubling it (the mode("append")
     * formulation this replaces failed exactly that retry). Package-
     * private so the idempotence spec can force a mid-sequence re-run. */
-  private[graft] def appendBatchWrite(s: SparkSession, d: String, n: Int): Unit = {
-    val dir = ledgerDir(s, d)
-    // a batch compacted into base/ is CLOSED: re-appending it would land a
-    // second copy in delta/ (the dynamic overwrite only owns delta) — the
-    // retry window for an append ends at compaction, so fail loudly
-    if (n <= compactedUpTo(dir))
-      throw new IllegalStateException(
-        s"appendBatchWrite: batch $n is already compacted into $dir/base — " +
-          "compacted batches are closed; rebuild the store to replay them")
-    val batch = Tables(s, d, "documents").filter(batchPredFor(n))
-    val dec = batchDecisions(s, d, batch, ledgerAsOf(s, d, n - 1),
-      lshNearCheck = false)
-    // signatures are doc-local: batch ⊂ documents, so the appended sig
-    // column reads the corpus sig store ⋉ batch ids when the store is warm
-    // (r18, verdict #5 — the x11b stage-03c sharing extended to the append
-    // path; bit-identical by doc-locality, and the Among dispatch keeps an
-    // isolated cold append batch-local)
-    val sig = Dedup.minhashSignaturesAmong(
-      Tables(s, d, "documents"), batch.select("doc_id"))
-    dec.select("doc_id", "source", "n_tok", "q", "h", "in3", "in4")
-      .join(sig, Seq("doc_id"), "left_outer")
-      .withColumn("batch_id", lit(n))
-      .write.mode("overwrite")
-      // bounded writer buffers (the buildLedger rationale): batch-sized
-      // appends never hit the day-1 OOM, but the same ~600 B/row schema
-      // gets the same row-group budget so append landings stay bounded
-      // at any batch size
-      .option("parquet.block.size", LedgerRowGroupBytes.toString)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(deltaDir(dir))
-    Dedup.releaseCorpusCaches(batch)
-  }
+  private[graft] def appendBatchWrite(s: SparkSession, d: String, n: Int): Unit =
+    Frames.checkpointScope(s"x11 ledger append $n") {
+      val dir = ledgerDir(s, d)
+      // a batch compacted into base/ is CLOSED: re-appending it would land a
+      // second copy in delta/ (the dynamic overwrite only owns delta) — the
+      // retry window for an append ends at compaction, so fail loudly
+      if (n <= compactedUpTo(dir))
+        throw new IllegalStateException(
+          s"appendBatchWrite: batch $n is already compacted into $dir/base — " +
+            "compacted batches are closed; rebuild the store to replay them")
+      val batch = Tables(s, d, "documents").filter(batchPredFor(n))
+      val dec = batchDecisions(s, d, batch, ledgerAsOf(s, d, n - 1),
+        lshNearCheck = false)
+      // signatures are doc-local: batch ⊂ documents, so the appended sig
+      // column reads the corpus sig store ⋉ batch ids when the store is warm
+      // (r18, verdict #5 — the x11b stage-03c sharing extended to the append
+      // path; bit-identical by doc-locality, and the Among dispatch keeps an
+      // isolated cold append batch-local)
+      val sig = Dedup.minhashSignaturesAmong(
+        Tables(s, d, "documents"), batch.select("doc_id"))
+      dec.select("doc_id", "source", "n_tok", "q", "h", "in3", "in4")
+        .join(sig, Seq("doc_id"), "left_outer")
+        .withColumn("batch_id", lit(n))
+        .write.mode("overwrite")
+        // bounded writer buffers (the buildLedger rationale): batch-sized
+        // appends never hit the day-1 OOM, but the same ~600 B/row schema
+        // gets the same row-group budget so append landings stay bounded
+        // at any batch size
+        .option("parquet.block.size", LedgerRowGroupBytes.toString)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(deltaDir(dir))
+    }
 
   /** The store after appending batches 1..`upTo` IN ORDER (each batch's
     * decisions read the store as of its predecessor), ensured on first
@@ -371,7 +361,7 @@ object Incremental {
     if (delta.isDirectory) delta.listFiles().foreach { f =>
       val m = "batch_id=(\\d+)".r.findFirstMatchIn(f.getName)
       if (m.exists(_.group(1).toInt <= upTo))
-        graft.streaming.Streams.deleteRecursively(f)
+        Frames.deleteRecursively(f)
     }
   }
 

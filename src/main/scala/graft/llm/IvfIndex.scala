@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.data.Frames
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
@@ -303,9 +304,14 @@ object IvfIndex {
     }.toDF("probe_id", "cand_id", "cosine")
   }
 
-  /** Build-and-search in one call (tests/declared query convenience). */
-  def annSearch(probes: DataFrame, corpus: DataFrame, k: Int, nClusters: Int, nProbe: Int): DataFrame =
-    search(build(corpus, nClusters), probes, k, nProbe)
+  /** Build-and-search in one call (tests/declared query convenience). The
+    * returned plan reads the build's assignment cache, so that is tracked
+    * for the enclosing scope to release. */
+  def annSearch(probes: DataFrame, corpus: DataFrame, k: Int, nClusters: Int, nProbe: Int): DataFrame = {
+    val model = build(corpus, nClusters)
+    Frames.track(model.assigned)
+    search(model, probes, k, nProbe)
+  }
 
   /** Persist a built index: centroids as one small parquet table, the
     * assigned corpus partitioned BY CELL — the build-once / probe-many
@@ -346,30 +352,19 @@ object IvfIndex {
     IvfModel(centroids, assigned)
   }
 
-  // Process-level cache of LOADED indexes for the declared query path: the
-  // build+save is the offline step a deployment runs ONCE and amortizes
-  // across every probe workload (see build's doc). Keyed by (corpus dir,
-  // nClusters); the cached model is parquet-backed, not session memory —
-  // the probe plan reads only routed cells' files.
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), IvfModel]
-
   /** The persisted index for `cacheKey`'s corpus, building and saving it on
     * first use — the offline step a deployment runs ONCE and amortizes
-    * across every probe workload. */
+    * across every probe workload (see build's doc). The registered model
+    * is parquet-backed, not session memory: the probe plan reads only
+    * routed cells' files. */
   private def cachedIndex(cacheKey: String, corpus: DataFrame, nClusters: Int): IvfModel =
-    indexCache.getOrElseUpdate((cacheKey, nClusters), {
-      // md5 of the key, not hashCode: distinct corpora must never collide
-      // on the same on-disk path (overwrite would corrupt the other's
-      // cached, still-lazily-scanned index)
-      val keyHex = java.security.MessageDigest.getInstance("MD5")
-        .digest(cacheKey.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_ivf_${keyHex}_$nClusters"
+    Frames.getOrCreate(Frames.Key("ivf", cacheKey, nClusters))({
+      val dir = Frames.storeDir("ivf", s"$cacheKey#$nClusters")
       val built = build(corpus, nClusters)
       save(built, dir)
       built.unpersist()
       load(corpus.sparkSession, dir)
-    })
+    })(_.unpersist())
 
   /** Scale-correct quantizer size for the IVFPQ tier (r16, the other half
     * of the 20M-recall law next to [[PqIndex.scaledShortlist]]): with a

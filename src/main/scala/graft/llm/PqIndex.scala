@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.data.Frames
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -501,7 +502,7 @@ object PqIndex {
     writeBooks(model.codebooks, "codebooks")
     model.refineCodebooks match {
       case Some(f) => writeBooks(f, "codebooks_fine")
-      case None => graft.streaming.Streams.deleteRecursively(
+      case None => graft.data.Frames.deleteRecursively(
         new java.io.File(s"$dir/codebooks_fine")) // a re-save without the tier owns the dir
     }
     // `batch` above `cell` in the layout: appendIvfPq lands each new crawl
@@ -519,7 +520,7 @@ object PqIndex {
     // legacy marker a prior build left behind
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("lists_base"))
-      .foreach(graft.streaming.Streams.deleteRecursively)
+      .foreach(graft.data.Frames.deleteRecursively)
     java.nio.file.Files.deleteIfExists(manifestPath(dir))
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(dir, "_compacted_up_to"))
@@ -624,7 +625,7 @@ object PqIndex {
     } finally encPersisted.unpersist(blocking = false)
     val target = new java.io.File(s"$dir/lists/batch=$batchId")
     target.getParentFile.mkdirs()
-    graft.streaming.Streams.deleteRecursively(target)
+    graft.data.Frames.deleteRecursively(target)
     require(stage.renameTo(target),
       s"appendIvfPq: could not publish $stage as $target")
     loadIvfPq(spark, dir)
@@ -703,7 +704,7 @@ object PqIndex {
     if (delta.isDirectory) delta.listFiles().foreach { f =>
       val m = "batch=(\\d+)".r.findFirstMatchIn(f.getName)
       if (m.exists(_.group(1).toInt <= upTo))
-        graft.streaming.Streams.deleteRecursively(f)
+        graft.data.Frames.deleteRecursively(f)
     }
   }
 
@@ -847,24 +848,18 @@ object PqIndex {
   private def adcTable(pv: Column, cbs: Seq[Seq[Seq[Double]]]): Column =
     graft.functions.AdcTable.of(pv, cbs)
 
-  // per-corpus residual-IVFPQ cache of LOADED indexes (build+save once,
+  // per-corpus residual-IVFPQ models are LOADED indexes (build+save once,
   // probe-many — the IvfIndex.cachedIndex idiom: the cached model is
-  // parquet-backed, not session memory, so the demonstrated ANN crossover
-  // survives a restart and the probe plan prunes routed cells' files)
-  private val ivfPqCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Int, Int), IvfPqModel]
+  // parquet-backed, not session memory, and the probe plan prunes routed
+  // cells' files)
+  private def ivfPqKey(cacheKey: String, m: Int, ksub: Int, nClusters: Int,
+      refineKsub: Int): Frames.Key =
+    Frames.Key("ivfpq", cacheKey, m, ksub, nClusters, refineKsub)
 
-  // md5 of the key, not hashCode: distinct corpora must never collide
-  // on one on-disk path (the IvfIndex.cachedIndex rationale)
+  // the refine tier changes the persisted schema, so it is part of the dir
   private def ivfPqDir(cacheKey: String, m: Int, ksub: Int, nClusters: Int,
-      refineKsub: Int = 0): String = {
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(cacheKey.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    // the refine tier changes the persisted schema — a refined store must
-    // never collide with a pre-r17 cross-session dir lacking codes_fine
-    val rSuffix = if (refineKsub > 0) s"_r$refineKsub" else ""
-    s"${sys.props("java.io.tmpdir")}/graft_ivfpq_${keyHex}_${m}_${ksub}_$nClusters$rSuffix"
-  }
+      refineKsub: Int = 0): String =
+    Frames.storeDir("ivfpq", s"$cacheKey#${m}_${ksub}_${nClusters}_r$refineKsub")
 
   /** MUTATION CONTRACT: `cacheKey` names a persisted STORE, not a frozen
     * snapshot — [[cachedIvfPqAppend]] lands new batches in the same dir,
@@ -876,13 +871,13 @@ object PqIndex {
     * for precisely this reason — a suffixed key is a different dir). */
   def cachedIvfPq(cacheKey: String, ivf: IvfModel, corpus: DataFrame,
       m: Int, ksub: Int, nClusters: Int, refineKsub: Int = 0): IvfPqModel =
-    ivfPqCache.getOrElseUpdate((cacheKey, m, ksub, nClusters, refineKsub), {
+    Frames.getOrCreate(ivfPqKey(cacheKey, m, ksub, nClusters, refineKsub))({
       val dir = ivfPqDir(cacheKey, m, ksub, nClusters, refineKsub)
       val built = buildIvfPq(ivf, corpus, m, ksub, refineKsub)
       saveIvfPq(built, dir)
       built.unpersist()
       loadIvfPq(corpus.sparkSession, dir)
-    })
+    })(_.unpersist())
 
   /** Append `newVecs` into the PERSISTED index cached for `cacheKey`
     * (building+saving the base first if this session hasn't), then refresh
@@ -899,8 +894,7 @@ object PqIndex {
     val appended =
       if (batchId <= compactedUpTo(dir)) loadIvfPq(baseCorpus.sparkSession, dir)
       else appendIvfPq(ivf, base, newVecs, dir, batchId)
-    ivfPqCache.put((cacheKey, m, ksub, nClusters, refineKsub), appended)
-    appended
+    Frames.replace(ivfPqKey(cacheKey, m, ksub, nClusters, refineKsub))(appended)(_.unpersist())
   }
 
   /** Compact the persisted index cached for `cacheKey` (ensuring the base
@@ -913,70 +907,45 @@ object PqIndex {
       refineKsub = refineKsub)
     val dir = ivfPqDir(cacheKey, m, ksub, nClusters, refineKsub)
     compactIvfPq(baseCorpus.sparkSession, dir, upTo)
-    val reloaded = loadIvfPq(baseCorpus.sparkSession, dir)
-    ivfPqCache.put((cacheKey, m, ksub, nClusters, refineKsub), reloaded)
-    reloaded
+    Frames.replace(ivfPqKey(cacheKey, m, ksub, nClusters, refineKsub))(
+      loadIvfPq(baseCorpus.sparkSession, dir))(_.unpersist())
   }
 
-  // per-corpus model cache — the offline/online split (the IvfIndex
+  // per-corpus models — the offline/online split (the IvfIndex
   // precedent): the declared ANN query measures probe time, the build
   // cost is declared separately via sim_pq_build
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Boolean), PqModel]
-
   /** The shared per-corpus model (the d0_cache_build precedent: the
     * declared sim_pq_build line owns the train+encode cost; probe queries
     * reuse the encoded corpus). */
   def cachedModel(cacheKey: String, corpus: DataFrame,
       m: Int = 8, ksub: Int = 16, opq: Boolean = false): PqModel =
-    modelCache.getOrElseUpdate((cacheKey, m, ksub, opq),
-      build(corpus, m, ksub, opq))
+    Frames.getOrCreate(Frames.Key("pq", cacheKey, m, ksub, opq))(
+      build(corpus, m, ksub, opq))(_.unpersist())
 
   def searchCached(cacheKey: String, probes: DataFrame, corpus: DataFrame,
       k: Int, shortlist: Int, m: Int = 8, ksub: Int = 16,
       opq: Boolean = false): DataFrame =
     search(cachedModel(cacheKey, corpus, m, ksub, opq), probes, corpus, k, shortlist)
 
-  // Fanned-out code tables, keyed by (canonical plan, input files): the
-  // ADC-scan parallelism guard's repartition is a full shuffle of the code
-  // table, and a LOADED store's lazy scan re-ran it on EVERY probe query
-  // and every micro-batch of the streaming twin (r17: 4× per st_stream_ann
-  // run; at sf10 that is 4 shuffles of a 2M-row table to serve 4 probe
-  // batches). The store is immutable between appends — input files key the
-  // cache, so an append/compact (new file set) naturally invalidates.
-  private val fanOutCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
+  // Fanned-out code tables, one per canonical plan, tagged with its input
+  // files: the ADC-scan parallelism guard's repartition is a full shuffle
+  // of the code table, and a LOADED store's lazy scan re-ran it on EVERY
+  // probe query and every micro-batch of the streaming twin (r17: 4× per
+  // st_stream_ann run; at sf10 that is 4 shuffles of a 2M-row table to
+  // serve 4 probe batches). The store is immutable between appends — an
+  // append/compact lands a new file set under the same plan shape, which
+  // replaces (and releases) the superseded fan-out instead of pinning a
+  // second copy of the code table.
   private def fannedCodes(cellCodes: DataFrame): DataFrame = {
     val par = cellCodes.sparkSession.sparkContext.defaultParallelism
     if (cellCodes.rdd.getNumPartitions >= par) cellCodes
     else {
-      val planKey = cellCodes.queryExecution.analyzed.canonicalized.toString
+      val key = Frames.Key("pq.fanout", cellCodes.queryExecution.analyzed.canonicalized.toString)
       val fileKey = cellCodes.inputFiles.toSeq.sorted.mkString(",")
-      fanOutCache.getOrElseUpdate((planKey, fileKey), {
-        // evict superseded fan-outs of the SAME store before inserting
-        // (r18, advice): an append lands a new file set under the same
-        // plan shape, and the prior entry's persisted full copy of the
-        // code table would otherwise stay pinned until releaseModels —
-        // repeated appends accumulated duplicate copies in the storage
-        // region
-        fanOutCache.keys.filter(_._1 == planKey).toSeq.foreach(k =>
-          fanOutCache.remove(k).foreach(_.unpersist(blocking = false)))
-        cellCodes.repartition(par).persist(StorageLevel.MEMORY_AND_DISK)
-      })
+      def fan() = (fileKey, cellCodes.repartition(par).persist(StorageLevel.MEMORY_AND_DISK))
+      val release: ((String, DataFrame)) => Unit = f => Frames.release(f._2)
+      val cur = Frames.getOrCreate(key)(fan())(release)
+      (if (cur._1 == fileKey) cur else Frames.replace(key)(fan())(release))._2
     }
-  }
-
-  /** Unpersist every cached model's encoded frame and clear the cache —
-    * the Dedup.releaseCaches / Scans.releaseLayouts idiom, called from the
-    * same end-of-run release blocks so a long-lived shared JVM (test
-    * suites, interactive sessions) doesn't keep the blocks pinned. */
-  def releaseModels(): Unit = {
-    modelCache.values.foreach(_.unpersist())
-    modelCache.clear()
-    ivfPqCache.values.foreach(_.unpersist())
-    ivfPqCache.clear()
-    fanOutCache.values.foreach(_.unpersist(blocking = false))
-    fanOutCache.clear()
   }
 }

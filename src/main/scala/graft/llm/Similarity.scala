@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.data.Tables
+import graft.data.{Frames, Tables}
 import graft.ops.QueryDef
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -258,9 +258,7 @@ object Similarity {
       val cells = model.assigned.groupBy("cell")
         .agg(count(lit(1)).as("n_vectors"))
       // materialize before releasing the model's cache
-      val out = cells.localCheckpoint(eager = true)
-      model.unpersist()
-      out
+      Frames.materializeAndRelease(cells, model.assigned)
     },
 
     // The OFFLINE half of PQ as its own declared operator: codebook train

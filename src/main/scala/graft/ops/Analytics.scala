@@ -156,7 +156,7 @@ object Analytics {
         |FROM documents
         |WHERE len(string_split(text, ' ')) >= 8
         |GROUP BY 1""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_x4_${math.abs(d.hashCode)}"
+      val tmp = graft.data.Frames.storeDir("x4", d)
       Tables(s, d, "documents")
         .filter(size(split(col("text"), " ")) >= 8)
         .select(col("doc_id"),

@@ -286,22 +286,22 @@ object Joins {
 }
 
 /** Bucketed copies of the two fact tables, keyed by the join column —
-  * built once per (corpus, JVM) and registered in the session catalog
-  * (bucket metadata lives in the catalog, so a path read would not see
-  * it). 16 buckets at any SF: bucket COUNT is a layout constant chosen
-  * for the cluster (it must match across tables to co-locate), not a
-  * per-corpus tunable. The pre-write repartition on the bucket key gives
-  * one file per bucket, which keeps the per-bucket sort metadata usable. */
+  * built once per corpus and registered in the session catalog (bucket
+  * metadata lives in the catalog, so a path read would not see it); the
+  * registry entry's release drops the tables. 16 buckets at any SF: bucket
+  * COUNT is a layout constant chosen for the cluster (it must match across
+  * tables to co-locate), not a per-corpus tunable. The pre-write
+  * repartition on the bucket key gives one file per bucket, which keeps
+  * the per-bucket sort metadata usable. */
 object BucketedLayout {
   val NumBuckets = 16
-  private val built = scala.collection.concurrent.TrieMap[String, (String, String)]()
 
   def ensure(s: org.apache.spark.sql.SparkSession, d: String): (String, String) =
-    built.getOrElseUpdate(d, {
+    graft.data.Frames.getOrCreate(graft.data.Frames.Key("j12.bucketed", d))({
       val suffix = math.abs(d.hashCode).toString
       val ordersTbl = s"graft_j12_orders_$suffix"
       val lineitemTbl = s"graft_j12_lineitem_$suffix"
-      val base = s"${sys.props("java.io.tmpdir")}/graft_j12_$suffix"
+      val base = graft.data.Frames.storeDir("j12", d)
       def write(name: String, df: org.apache.spark.sql.DataFrame, key: String): Unit = {
         if (s.catalog.tableExists(name)) s.sql(s"DROP TABLE $name")
         df.repartition(NumBuckets, col(key))
@@ -315,5 +315,5 @@ object BucketedLayout {
       write(lineitemTbl, Tables(s, d, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount"), "l_orderkey")
       (ordersTbl, lineitemTbl)
-    })
+    }) { case (o, l) => Seq(o, l).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t")) }
 }

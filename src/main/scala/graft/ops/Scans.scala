@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.data.Tables
+import graft.data.{Frames, Tables}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,41 +19,11 @@ object Scans {
     * artifacts) for a semantic a bounded slice asserts equally well. */
   private final val ShardReshardMaxRows = 20000000L
 
-  /** Tmp-dir key for one-time derived layouts (s8 partitioned, s11 ORC):
-    * sfDir plus the SOURCE file's size+mtime, so regenerated testdata
-    * invalidates the cached layout instead of silently serving stale rows
-    * against a live oracle — plus this JVM's id, so the skip-if-built
-    * shortcut only applies WITHIN a process: a layout surviving from a
-    * previous run would turn the named setup lines (s8_partition_layout,
-    * s11_orc_write) into read-back-only timings and make round-over-round
-    * bench numbers not like-for-like. Within one run the shortcut still
-    * holds (the layout query builds, the prune/roundtrip queries reuse). */
-  private val jvmId: String =
-    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^0-9a-zA-Z]", "")
-  private def layoutKey(d: String, table: String): String = {
-    val f = new java.io.File(s"$d/$table.parquet")
-    math.abs((d, f.length, f.lastModified).hashCode).toString + "_" + jvmId
-  }
-
-  // layoutKey dirs are PER-JVM by design (a fresh write each session keeps
-  // named setup lines like-for-like across bench rounds) — which also means
-  // every session would leak its copies (s13's is a full lineitem
-  // projection, GBs at 100×) unless released. Registered here; Verify/Bench/
-  // Run call releaseLayouts() at end of run (the Streams.releaseSinks
-  // idiom). The d.hashCode-keyed dirs (s4/s5/s7/s10/s12, j12's buckets)
-  // are deliberate cross-session caches, bounded at one per corpus — not
-  // registered. (s9 moved to the per-JVM layoutKey idiom in r16 and IS
-  // registered.)
-  private val layoutDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def layoutDir(path: String): String = { layoutDirs.add(path); path }
-
   /** s9's two-schema batch pair: write-once (guarded by batch=2's
     * `_SUCCESS`, the later commit), shared by s9_schema_write (the charged
     * SETUP line) and s9_schema_evolution (the timed mergeSchema read). */
   private def s9Dir(s: SparkSession, d: String): String = {
-    val tmp = layoutDir(
-      s"${sys.props("java.io.tmpdir")}/graft_s9_${layoutKey(d, "documents")}")
+    val tmp = Frames.storeDir("s9", d)
     if (!new java.io.File(s"$tmp/batch=2", "_SUCCESS").exists()) {
       val docs = Tables(s, d, "documents")
       docs.filter(col("doc_id") % 2 === 1).select("doc_id")
@@ -63,11 +33,6 @@ object Scans {
         .write.mode("overwrite").parquet(s"$tmp/batch=2")
     }
     tmp
-  }
-  def releaseLayouts(): Unit = {
-    layoutDirs.forEach(d =>
-      graft.streaming.Streams.deleteRecursively(new java.io.File(d)))
-    layoutDirs.clear()
   }
 
   /** 32-bit Morton (Z-order) code over the low 16 bits of two keys — the
@@ -139,7 +104,7 @@ object Scans {
     QueryDef("s4_text_scan",
       """SELECT source, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS id_sum
         |FROM documents GROUP BY source""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_s4_${math.abs(d.hashCode)}"
+      val tmp = Frames.storeDir("s4", d)
       Tables(s, d, "documents")
         .select(concat_ws("|", col("doc_id"), col("source")).as("value"))
         .write.mode("overwrite").text(tmp)
@@ -156,7 +121,7 @@ object Scans {
     // pass at scale), aggregate; oracle aggregates the source directly.
     QueryDef("s4b_csv_scan",
       """SELECT n_nationkey, n_name, n_regionkey FROM nation""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_s4b_${math.abs(d.hashCode)}"
+      val tmp = Frames.storeDir("s4b", d)
       Tables(s, d, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")
         .write.mode("overwrite").option("header", "true").csv(tmp)
@@ -174,7 +139,7 @@ object Scans {
       """SELECT count(*) AS n, count(DISTINCT l_orderkey) AS n_orders,
         |       round(CAST(sum(CAST(l_quantity AS DECIMAL(22,8))) AS DOUBLE), 2) AS sum_qty
         |FROM lineitem WHERE l_discount > 0.05""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_s5_${math.abs(d.hashCode)}"
+      val tmp = Frames.storeDir("s5", d)
       Tables(s, d, "lineitem")
         .filter(col("l_discount") > 0.05)
         .select("l_orderkey", "l_quantity")
@@ -192,7 +157,7 @@ object Scans {
     QueryDef("s7_jsonl_roundtrip",
       """SELECT o_orderpriority, count(*) AS n, CAST(sum(o_orderkey) AS BIGINT) AS key_sum
         |FROM orders WHERE o_totalprice > 200000 GROUP BY o_orderpriority""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_s7_${math.abs(d.hashCode)}"
+      val tmp = Frames.storeDir("s7", d)
       Tables(s, d, "orders")
         .filter(col("o_totalprice") > 200000)
         .select("o_orderkey", "o_orderpriority")
@@ -206,11 +171,15 @@ object Scans {
     // named line (the sim_ivf_build precedent) so a declaration-ordered
     // bench charges the directory-partitioned sink here and the pruned-scan
     // line below times ONLY the read. Returns the per-partition row counts
-    // read back from the layout, so the write is oracle-checked too.
+    // read back from the layout, so the write is oracle-checked too. The
+    // skip-if-built `_SUCCESS` check only spans one process (the store root
+    // is per JVM): a layout surviving from a previous run would turn the
+    // named setup lines (this one, s11_orc_write, s13, s9) into
+    // read-back-only timings and make bench rounds not like-for-like.
     QueryDef("s8_partition_layout",
       """SELECT o_orderpriority, count(*) AS n
         |FROM orders GROUP BY o_orderpriority""".stripMargin) { (s, d) =>
-      val tmp = layoutDir(s"${sys.props("java.io.tmpdir")}/graft_s8_${layoutKey(d, "orders")}")
+      val tmp = Frames.storeDir("s8", d)
       if (!new java.io.File(tmp, "_SUCCESS").exists())
         Tables(s, d, "orders")
           .write.mode("overwrite").partitionBy("o_orderpriority").parquet(tmp)
@@ -231,7 +200,7 @@ object Scans {
         |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(22,8))) AS DOUBLE), 2) AS total
         |FROM orders WHERE o_orderpriority = '1-URGENT'
         |GROUP BY o_orderstatus""".stripMargin) { (s, d) =>
-      val tmp = layoutDir(s"${sys.props("java.io.tmpdir")}/graft_s8_${layoutKey(d, "orders")}")
+      val tmp = Frames.storeDir("s8", d)
       if (!new java.io.File(tmp, "_SUCCESS").exists())
         Tables(s, d, "orders")
           .write.mode("overwrite").partitionBy("o_orderpriority").parquet(tmp)
@@ -259,7 +228,7 @@ object Scans {
     // normalization — a rank is SF-free here because the ratio is). The
     // declared result aggregates per z-bucket over the WRITTEN layout, so
     // the oracle also proves the layout roundtrip preserved content. The
-    // write runs once per corpus via the s8 layoutKey idiom.
+    // write runs once per corpus via the s8 skip-if-built idiom.
     QueryDef("s13_zorder_layout",
       """WITH k AS (SELECT (l_partkey & 65535) AS x, ((l_suppkey << 4) & 65535) AS y,
         |                  l_partkey, l_suppkey FROM lineitem),
@@ -277,7 +246,7 @@ object Scans {
         |       min(l_partkey) AS min_pk, max(l_partkey) AS max_pk,
         |       min(l_suppkey) AS min_sk, max(l_suppkey) AS max_sk
         |FROM z GROUP BY zbucket""".stripMargin) { (s, d) =>
-      val tmp = layoutDir(s"${sys.props("java.io.tmpdir")}/graft_s13_${layoutKey(d, "lineitem")}")
+      val tmp = Frames.storeDir("s13", d)
       if (!new java.io.File(tmp, "_SUCCESS").exists())
         Tables(s, d, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
@@ -300,7 +269,7 @@ object Scans {
     QueryDef("s11_orc_write",
       """SELECT count(*) AS n_rows
         |FROM lineitem WHERE l_shipdate >= DATE '1997-01-01'""".stripMargin) { (s, d) =>
-      val tmp = layoutDir(s"${sys.props("java.io.tmpdir")}/graft_s11_${layoutKey(d, "lineitem")}")
+      val tmp = Frames.storeDir("s11", d)
       if (!new java.io.File(tmp, "_SUCCESS").exists())
         Tables(s, d, "lineitem")
           .filter(col("l_shipdate") >= lit("1997-01-01").cast("date"))
@@ -319,7 +288,7 @@ object Scans {
         |       round(CAST(sum(CAST(l_quantity AS DECIMAL(22,8))) AS DOUBLE), 2) AS sum_qty
         |FROM lineitem WHERE l_shipdate >= DATE '1997-01-01'
         |GROUP BY l_returnflag""".stripMargin) { (s, d) =>
-      val tmp = layoutDir(s"${sys.props("java.io.tmpdir")}/graft_s11_${layoutKey(d, "lineitem")}")
+      val tmp = Frames.storeDir("s11", d)
       if (!new java.io.File(tmp, "_SUCCESS").exists())
         Tables(s, d, "lineitem")
           .filter(col("l_shipdate") >= lit("1997-01-01").cast("date"))
@@ -380,7 +349,7 @@ object Scans {
         |       count(*) FILTER (WHERE doc_id % 7 = 0) AS n_bad,
         |       CAST(sum(CASE WHEN doc_id % 7 <> 0 THEN doc_id END) AS BIGINT) AS good_id_sum
         |FROM documents""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_s10_${math.abs(d.hashCode)}"
+      val tmp = Frames.storeDir("s10", d)
       Tables(s, d, "documents")
         .select(when(col("doc_id") % 7 === 0,
             concat(lit("{\"doc_id\": "), col("doc_id")))            // truncated JSON
@@ -409,7 +378,7 @@ object Scans {
       """SELECT source, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS id_sum,
         |       CAST(sum(n_chars) AS BIGINT) AS chars_sum
         |FROM documents GROUP BY source""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_s12_${math.abs(d.hashCode)}"
+      val tmp = Frames.storeDir("s12", d)
       Tables(s, d, "documents")
         .select("doc_id", "source", "n_chars")
         .write.mode("overwrite").format("tfrecord").save(tmp)

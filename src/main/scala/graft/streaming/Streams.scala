@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.data.Tables
+import graft.data.{Frames, Tables}
 import graft.ops.QueryDef
 import graft.ops.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -69,8 +69,9 @@ object Streams {
 
   // schema per staged dir — every declared streaming query re-derives it, and
   // a batch-side parquet footer read per query build is pure constant overhead
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+  private def sourceSchema(s: SparkSession, dir: java.nio.file.Path): org.apache.spark.sql.types.StructType =
+    Frames.getOrCreate(Frames.Key("stream.schema", dir.toString))(
+      s.read.parquet(dir.toString).schema)(_ => ())
 
   /** Streaming view of the events table (T1 ingestion): file-source
     * readStream with the batch schema, ns→µs ts conversion as in Tables. */
@@ -86,8 +87,7 @@ object Streams {
     // entry, leaving a sourceless stream — the sf1 full-suite run hit
     // exactly that as UNABLE_TO_INFER_SCHEMA ×9).
     val dir = streamSourceDir(s, d, "events")
-    val schema = schemaCache.getOrElseUpdate(dir.toString, s.read.parquet(dir.toString).schema)
-    val reader = s.readStream.schema(schema)
+    val reader = s.readStream.schema(sourceSchema(s, dir))
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     graft.data.Tables.normalizeEventTs(reader.parquet(dir.toString))
   }
@@ -105,8 +105,7 @@ object Streams {
       name: String): java.nio.file.Path = {
     val src = java.nio.file.Paths.get(s"$d/$name.parquet")
     val dir = if (java.nio.file.Files.isDirectory(src)) src else {
-      val staging = java.nio.file.Paths.get(
-        s"${sys.props("java.io.tmpdir")}/graft_${name}_${math.abs(d.hashCode)}")
+      val staging = java.nio.file.Paths.get(Frames.storeDir(s"stream_$name", d))
       java.nio.file.Files.createDirectories(staging)
       val staged = staging.resolve(s"$name.parquet")
       if (!java.nio.file.Files.exists(staged) ||
@@ -143,8 +142,7 @@ object Streams {
     * aggregations. */
   def documentsStream(s: SparkSession, d: String): DataFrame = {
     val dir = streamSourceDir(s, d, "documents")
-    val schema = schemaCache.getOrElseUpdate(dir.toString, s.read.parquet(dir.toString).schema)
-    s.readStream.schema(schema).parquet(dir.toString)
+    s.readStream.schema(sourceSchema(s, dir)).parquet(dir.toString)
   }
 
   /** Run a streaming DataFrame to completion (AvailableNow) into a memory
@@ -152,7 +150,7 @@ object Streams {
     * the same declared query re-processes the source. */
   def runToTable(s: SparkSession, stream: DataFrame, mode: String): DataFrame = {
     val name = s"graft_stream_${runCounter.incrementAndGet()}"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_ckpt_${name}_${System.nanoTime()}"
+    val ckpt = Frames.storeDir("stream_ckpt", name)
     // a streaming query's shuffle-partition count = its state-store count,
     // fixed at first checkpoint — size it to the keyspace, not to the batch
     // session's scan parallelism. Per-partition store cost is CONSTANT
@@ -174,9 +172,12 @@ object Streams {
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prev)
       restoreNoData()
-      // in finally, not after: a failed/interrupted replay must not leak
-      // its checkpoint (safe either way — one-shot replays never restart)
-      deleteRecursively(new java.io.File(ckpt))
+      // drop the finished replay's checkpoint (state deltas can run to
+      // hundreds of MB per stream at the 100× corpus). Only correct because
+      // these AvailableNow replays are one-shot: nothing ever restarts from
+      // it — a production stream KEEPS its checkpoint, the restart
+      // contract. In finally, not after: a failed replay must not leak it.
+      Frames.deleteRecursively(new java.io.File(ckpt))
     }
     s.table(name)
   }
@@ -222,15 +223,11 @@ object Streams {
     * sink, not in driver memory). */
   def runToParquetTable(s: SparkSession, stream: DataFrame, mode: String): DataFrame = {
     val name = s"graft_stream_${runCounter.incrementAndGet()}"
-    val out = s"${sys.props("java.io.tmpdir")}/graft_sink_${name}_${System.nanoTime()}"
+    val out = Frames.storeDir("stream_sink", name)
     val ckpt = s"${out}_ckpt"
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     val restoreNoData = disableNoDataBatch(s)
-    // register the sink dir for end-of-session cleanup BEFORE the run: a
-    // stream that fails mid-way has already landed batches there, and a
-    // post-run registration would leak exactly the failed runs' output
-    sinkDirs.add(out)
     try {
       val saveMode = if (mode == "complete") "overwrite" else "append"
       val q = stream.writeStream
@@ -245,35 +242,11 @@ object Streams {
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prev)
       restoreNoData()
-      deleteRecursively(new java.io.File(ckpt))
+      Frames.deleteRecursively(new java.io.File(ckpt))
     }
     // the sink dir is read back LAZILY by the caller — it cannot be
-    // deleted here; releaseSinks() reclaims it at end of session
+    // deleted here; it goes with the Frames store root
     s.read.parquet(out)
-  }
-
-  private val sinkDirs = java.util.Collections.synchronizedSet(
-    new java.util.LinkedHashSet[String]())
-
-  /** Delete every parquet sink dir landed by runToParquetTable this
-    * session (Verify/Bench call this next to Dedup.releaseCaches). Deferred
-    * because the returned tables are lazy scans over those dirs — deleting
-    * eagerly would fail the consumer's read. */
-  def releaseSinks(): Unit = {
-    sinkDirs.forEach(d => deleteRecursively(new java.io.File(d)))
-    sinkDirs.clear()
-  }
-
-  /** Drop a finished bounded replay's checkpoint (state deltas can run to
-    * hundreds of MB per stream at the 100× corpus; a bench session runs
-    * ~10 streams and repeated sessions ballooned /tmp by GBs). Only
-    * correct because these AvailableNow replays are one-shot: the result
-    * is already materialized in the sink, and nothing ever restarts from
-    * the checkpoint. A production stream KEEPS its checkpoint — it is the
-    * restart contract. */
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   /** T6 FSM over a typed stream: per-user state folded across micro-batches
@@ -511,7 +484,7 @@ object Streams {
       """SELECT event_type, count(*) AS n,
         |       round(CAST(sum(CAST(value AS DECIMAL(22,8))) AS DOUBLE), 2) AS total
         |FROM events GROUP BY event_type""".stripMargin) { (s, d) =>
-      val sink = s"${sys.props("java.io.tmpdir")}/graft_stream_sink_${math.abs(d.hashCode)}_${System.nanoTime()}"
+      val sink = Frames.storeDir("st_stream_sink", s"$d#${runCounter.incrementAndGet()}")
       val ckpt = s"$sink/_checkpoints"
       val q = eventsStream(s, d)
         .select("event_id", "event_type", "value")
@@ -636,10 +609,9 @@ object Streams {
         .select("vec_id", "embedding")
       // land the probe set as a 4-file dir so the file source genuinely
       // streams it as 4 micro-batches (maxFilesPerTrigger = 1)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_stream_ann_${math.abs(d.hashCode)}_${System.nanoTime()}"
+      val root = Frames.storeDir("st_stream_ann", s"$d#${runCounter.incrementAndGet()}")
       probes.repartition(4).write.parquet(s"$root/probes")
       val out = s"$root/out"
-      sinkDirs.add(root)
       val stream = s.readStream.schema(probes.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$root/probes")
       // corpus size (→ scaled shortlist) is a property of the SERVED

@@ -18,7 +18,7 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = graft.data.Frames.releaseTracked()
+  override def afterAll(): Unit = graft.data.Frames.releaseAll()
 
   /** Single-threaded reference: word-frequency map -> iterative merges. */
   private def referenceBpe(texts: Seq[String], nMerges: Int, minCount: Long = 2L,
@@ -63,12 +63,12 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
       localVocabMax: Int = graft.llm.Bpe.DriverLocalVocabMaxRows): Seq[(Int, String, String, String, Long)] = {
     import spark.implicits._
     val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val got = graft.llm.Bpe.trainBpe(docs, nMerges = nMerges,
-        localVocabMax = localVocabMax).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-      .toSeq.sortBy(_._1)
-    graft.data.Frames.releaseTracked()
-    got
+    graft.data.Frames.scope("bpe train") {
+      graft.llm.Bpe.trainBpe(docs, nMerges = nMerges,
+          localVocabMax = localVocabMax).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
+        .toSeq.sortBy(_._1)
+    }
   }
 
   test("planted corpus: learns whole words through suffix merges; greedy overlap") {
@@ -124,9 +124,10 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (i.toLong, ws.length.toLong, np,
         BigDecimal(np.toDouble / ws.length).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }.sortBy(_._1)
-    val got = graft.llm.Bpe.applyBpe(docs, merges).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq.sortBy(_._1)
-    graft.data.Frames.releaseTracked()
+    val got = graft.data.Frames.scope("bpe encode") {
+      graft.llm.Bpe.applyBpe(docs, merges).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq.sortBy(_._1)
+    }
     assert(got == exp, s"encode diverges:\nspark = $got\nref   = $exp")
   }
 

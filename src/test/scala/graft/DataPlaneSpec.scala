@@ -1,6 +1,6 @@
 package graft
 
-import graft.data.Tables
+import graft.data.{Frames, Tables}
 import graft.llm.{Dedup, IvfIndex, Multimodal, Similarity}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -16,14 +16,9 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.01"
 
-  // honor Frames' cleanup contract: t14-style queries register tracked
-  // checkpoints per build; release them (and the shared dedup caches)
-  // when the suite finishes instead of pinning blocks until JVM exit
-  override def afterAll(): Unit = {
-    graft.llm.Dedup.releaseCaches()
-    graft.data.Frames.releaseTracked()
-    graft.ops.Scans.releaseLayouts()
-  }
+  // release what the suite's queries registered (tracked checkpoints, the
+  // shared dedup caches, store dirs) instead of pinning it until JVM exit
+  override def afterAll(): Unit = Frames.releaseAll()
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -176,10 +171,12 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
       }.toMap
     }
-    def run(docs: Seq[(Long, String)]): Map[Long, (Long, Long, Long, Long)] =
+    // each run in its own scope: its tracked checkpoints go as it returns
+    def run(docs: Seq[(Long, String)]): Map[Long, (Long, Long, Long, Long)] = Frames.scope("d10") {
       graft.llm.Dedup.substringSpans(docs.toDF("doc_id", "text")).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
         .toMap
+    }
 
     // Handcrafted corpus: per-doc-unique filler so junction grams never
     // collide; span12 shared A<->B, span6 (t1..t6) shared A<->D, E repeats
@@ -228,10 +225,11 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
             .map("%02x".format(_)).mkString)
       }.toMap
     }
-    def runTrim(ds: Seq[(Long, String)]): Map[Long, (Long, Long, Long, String)] =
+    def runTrim(ds: Seq[(Long, String)]): Map[Long, (Long, Long, Long, String)] = Frames.scope("d11") {
       graft.llm.Dedup.substringTrim(ds.toDF("doc_id", "text")).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
         .toMap
+    }
     val gotTrim = runTrim(docs)
     assert(gotTrim == trimTruth(docs), "trim fixture disagrees with brute force")
     assert(gotTrim(1L)._3 == 12L && gotTrim(2L)._3 == 12L,
@@ -260,7 +258,6 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(runTrim(rdocs) == trimTruth(rdocs),
         s"round $round: trim disagrees with brute force")
     }
-    graft.data.Frames.releaseTracked()
   }
 
   test("d4b prefix filter is exact on randomized corpora (property check vs brute force)") {
@@ -271,7 +268,9 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     // near-dups at and around the threshold, short docs under the shingle
     // width, in-doc repeated tokens (array_distinct path)
     val rnd = new scala.util.Random(421L)
-    for (round <- 1 to 3; threshold <- Seq(0.5, 0.8)) {
+    // one scope per round: the per-corpus token caches are keyed by corpus,
+    // so each round's are dropped as it ends
+    for (round <- 1 to 3; threshold <- Seq(0.5, 0.8)) Frames.scope(s"d4b round $round") {
       val vocab = (0 until 12).map(i => s"w$i")
       val base = (0 until 60).map { i =>
         val n = 1 + rnd.nextInt(12) // includes <3-token docs (excluded)
@@ -305,7 +304,6 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"extra=${(got.keySet -- expected.keySet).take(5)} " +
           s"valueDiffs=${expected.collect { case (k, v) if got.get(k).exists(_ != v) => (k, v, got(k)) }.take(3)}")
       assert(expected.nonEmpty, s"round $round t=$threshold: fixture lost its planted pairs")
-      Dedup.releaseCaches() // per-corpus token caches — keyed by corpus, so drop between rounds
     }
   }
 
@@ -603,7 +601,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fine subspace sizing: widest ≤4-dim split that divides dim
     assert(graft.llm.PqIndex.refineM(256) == 64 && graft.llm.PqIndex.refineM(64) == 16 &&
       graft.llm.PqIndex.refineM(6) == 2 && graft.llm.PqIndex.refineM(7) == 7)
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+    graft.data.Frames.deleteRecursively(new java.io.File(dir))
     ivf.unpersist(); res.unpersist()
   }
 
@@ -1002,26 +1000,27 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stop-shingle pruning kills boilerplate pair blowup, keeps true near-dups") {
-    import spark.implicits._
-    // synthetic skew: 40 docs sharing a 30-token boilerplate footer; docs 0
-    // and 1 are additionally true near-dups of each other (same unique body)
-    val boiler = (1 to 30).map(i => s"footer$i").mkString(" ")
-    val docs = (0 until 40).map { i =>
-      val body = if (i <= 1) "alpha beta gamma delta epsilon zeta eta theta"
-                 else (1 to 8).map(j => s"u${i}_$j").mkString(" ")
-      (i.toLong, s"$body $boiler")
-    }.toDF("doc_id", "text")
-    // unbounded: every one of the 40*39/2 pairs shares the footer shingles
-    val unbounded = Dedup.exactNgramJaccardPairs(docs, 0.0).count()
-    assert(unbounded == 40L * 39 / 2, s"expected full pair space, got $unbounded")
-    // bounded at maxDf=5: footer shingles (df=40) pruned from the
-    // intersection — boilerplate-only pairs vanish, the planted near-dup
-    // pair survives with jaccard from its unique body
-    val bounded = Dedup.boundedScoredPairs(docs, maxDf = 5)
-    val pairs = bounded.filter(col("jaccard") >= 0.1)
-      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((0L, 1L)), s"expected only the planted near-dup pair, got $pairs")
-    Dedup.releaseCaches()
+    Frames.scope("stop-shingle pruning") {
+      import spark.implicits._
+      // synthetic skew: 40 docs sharing a 30-token boilerplate footer; docs 0
+      // and 1 are additionally true near-dups of each other (same unique body)
+      val boiler = (1 to 30).map(i => s"footer$i").mkString(" ")
+      val docs = (0 until 40).map { i =>
+        val body = if (i <= 1) "alpha beta gamma delta epsilon zeta eta theta"
+                   else (1 to 8).map(j => s"u${i}_$j").mkString(" ")
+        (i.toLong, s"$body $boiler")
+      }.toDF("doc_id", "text")
+      // unbounded: every one of the 40*39/2 pairs shares the footer shingles
+      val unbounded = Dedup.exactNgramJaccardPairs(docs, 0.0).count()
+      assert(unbounded == 40L * 39 / 2, s"expected full pair space, got $unbounded")
+      // bounded at maxDf=5: footer shingles (df=40) pruned from the
+      // intersection — boilerplate-only pairs vanish, the planted near-dup
+      // pair survives with jaccard from its unique body
+      val bounded = Dedup.boundedScoredPairs(docs, maxDf = 5)
+      val pairs = bounded.filter(col("jaccard") >= 0.1)
+        .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs == Set((0L, 1L)), s"expected only the planted near-dup pair, got $pairs")
+    }
   }
 
   test("sampling operators are reproducible: re-run and repartition invariant") {
@@ -1351,7 +1350,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(i => md5hex(ts.slice(i, i + 5).mkString(" "))).min
     }.toMap
     assert(got == expected, s"clamped-slice fingerprints diverged: $got vs $expected")
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+    graft.data.Frames.deleteRecursively(new java.io.File(dir))
   }
 
   test("t14 handles a corpus-universal gram: df=n_docs counted by aggregate, values exact") {
@@ -1386,7 +1385,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the universal grams really are universal (df = n_docs) — the skew
     // shape is present, not hypothetical
     assert(df.values.max == nDocs, s"fixture lost its universal gram: max df = ${df.values.max}")
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+    graft.data.Frames.deleteRecursively(new java.io.File(dir))
   }
 
   test("t15 Moore-Lewis score matches a Scala-side recount; both keep outcomes occur") {
@@ -1844,7 +1843,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"banding persisted signatures must surface the planted near-dup pair: $cands")
     assert(!cands.contains((109L, 12L)) && !cands.contains((119L, 12L)),
       s"unrelated docs must not collide in any band: $cands")
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+    graft.data.Frames.deleteRecursively(new java.io.File(dir))
   }
 
   test("x11 day-N ledger: planted dups across EVERY batch pair drop; mid-sequence re-append is idempotent; compaction preserves store + probes") {
@@ -1950,7 +1949,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.parquet(s"$storeDir/delta/batch_id=1")
     assert(storeRows() == before,
       "stale delta tree at/below the compaction marker must be filtered, not double-counted")
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+    graft.data.Frames.deleteRecursively(new java.io.File(dir))
   }
 
   test("planted join skew: AQE splits the hot partition, answer unchanged (the SkewProbe case)") {
@@ -2074,6 +2073,63 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(overlapping(ls) == ls.size, "linear: suppkey slice should hit every file")
     assert(overlapping(zs) < zs.size,
       s"z-order: suppkey slice must PRUNE files (${overlapping(zs)}/${zs.size})")
-    graft.streaming.Streams.deleteRecursively(new java.io.File(base))
+    graft.data.Frames.deleteRecursively(new java.io.File(base))
+  }
+
+  test("a cold subset's signatures give back what they pinned when their scope closes") {
+    // the cold branch of Dedup.minhashSignaturesAmong: the subset's shingle
+    // checkpoint is the caller's, so the scope that ran it releases it
+    val docs = Tables(spark, sf, "documents")
+    val ids = docs.filter(col("doc_id") % 3 === 0).select("doc_id")
+    val liveBefore = Frames.live().size
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (n, pinnedInside) = Frames.scope("cold subset signatures") {
+      val n = Dedup.minhashSignatures(docs.join(ids, Seq("doc_id"), "left_semi")).count()
+      (n, Frames.live().filter(_._2 == "cold subset signatures"))
+    }
+    assert(n > 0, "the subset produced no signatures")
+    // the registry saw what the cold path pinned, owner and block bytes
+    assert(pinnedInside.nonEmpty && pinnedInside.map(_._3).sum > 0,
+      s"the scope's pinned entries read no bytes: $pinnedInside")
+    assert(Frames.live().size == liveBefore, s"entries left behind: ${Frames.live()}")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
+
+  test("live() names each entry's owner and reads its block bytes") {
+    val docs = Tables(spark, sf, "documents")
+    Frames.scope("live probe") {
+      // a persisted keyed cache and a tracked checkpoint, both materialized
+      Dedup.probeGramSet(docs.filter(col("doc_id") % 7 === 3)).count()
+      Frames.trackedCheckpoint(docs.select("doc_id"))
+      val mine = Frames.live().filter(_._2 == "live probe")
+      assert(mine.map(_._1.kind).toSet == Set("dedup.probe_grams", "checkpoint"), s"$mine")
+      assert(mine.forall(_._3 > 0), s"an entry read no block bytes: $mine")
+    }
+    assert(!Frames.live().exists(_._2 == "live probe"))
+  }
+
+  test("store dirs sit under this process's own root") {
+    val root = Frames.root
+    assert(root.getParentFile == new java.io.File(sys.props("java.io.tmpdir")))
+    assert(root.getName.startsWith(s"graft_${ProcessHandle.current.pid}_"),
+      s"store root ${root.getName} does not carry this process's pid")
+    val dirs = Seq(Frames.storeDir("spec", sf), Frames.storeDir("spec", "/other/corpus"),
+      graft.llm.Incremental.ledgerDir(spark, sf))
+    dirs.foreach(d => assert(new java.io.File(d).getParentFile == root, s"$d is not under $root"))
+    assert(dirs.distinct.size == dirs.size, s"distinct keys share a dir: $dirs")
+    // a declared store-writing query lands under the root too
+    SparkEntry.queries("s4_text_scan")(spark, sf).collect()
+    assert(new java.io.File(Frames.storeDir("s4", sf)).isDirectory)
+  }
+
+  // keep last: every persist this suite made must be owned by the registry
+  test("releaseAll leaves no persisted RDD and no store root behind") {
+    Frames.releaseAll()
+    assert(Frames.live().isEmpty, s"entries left behind: ${Frames.live()}")
+    val persisted = spark.sparkContext.getPersistentRDDs
+    assert(persisted.isEmpty,
+      s"persisted RDDs the registry does not own: ${persisted.values.map(r => s"${r.id} ${r.name} $r")}")
+    assert(!Frames.root.exists(), s"${Frames.root} survived releaseAll")
   }
 }

@@ -236,9 +236,9 @@ class LagomSpec extends AnyFunSuite {
       val t2 = req(Map("type" -> MsgType.Get, "partition" -> "0"))
       assert(t2("type") == MsgType.Trial)
       assert(t2("trial_id") != t1("trial_id"))
-      // releaseSlot is the same signal emitted manually — the local thread
+      // reregisterSlot is the same signal emitted manually — the local thread
       // pool uses it when a slot dies for good (no Spark retry to REG)
-      graft.exec.TrialExecutor.releaseSlot(server.host, server.port, server.authSecret, 0)
+      graft.exec.TrialExecutor.reregisterSlot(server.host, server.port, server.authSecret, 0)
       assert(server.erroredCount == 2)
       assert(server.allTrials.find(_.trialId == t2("trial_id"))
         .exists(_.status == TrialStatus.Error))

@@ -6,13 +6,14 @@ import graft.core.HParam._
 import graft.exec.TrialContext
 import graft.ml.{MllibLagom, MllibTrain, MllibTrainConfig, MllibTrainFn}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** E2e MLlib training driver: distributed HP search over an MLlib estimator
   * (the north star's Spark-native replacement for the reference's Torch/TF
   * distributed executors) plus LOCO feature/stage ablation of a Pipeline.
   */
-class MllibSpec extends AnyFunSuite {
+class MllibSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -23,10 +24,11 @@ class MllibSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private lazy val Array(trainDf, testDf) = {
-    val df = MllibTrain.lineitemFrame(spark, sf).cache()
-    df.randomSplit(Array(0.8, 0.2), seed = 42L)
-  }
+  private lazy val lineitem = MllibTrain.lineitemFrame(spark, sf).cache()
+  private lazy val Array(trainDf, testDf) = lineitem.randomSplit(Array(0.8, 0.2), seed = 42L)
+
+  // the suite's one persist goes with it, not with the shared session
+  override def afterAll(): Unit = lineitem.unpersist()
 
   test("lagom-style HP search tunes LogisticRegression regParam/elasticNet") {
     object Fit extends MllibTrainFn {

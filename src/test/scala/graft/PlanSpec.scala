@@ -14,10 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // t14's builder eagerly checkpoints its gram counts even for plan-only
-  // inspection — release the tracked blocks at suite end
+  // inspection — release what the suite registered at suite end
   override def afterAll(): Unit = {
-    graft.data.Frames.releaseTracked()
-    graft.ops.Scans.releaseLayouts()
+    graft.data.Frames.releaseAll()
     // the per-run warehouse (bucketed j12/orders_bkt tables) would
     // otherwise accumulate one copy per suite run — but only delete it if
     // the shared getOrCreate session actually took THIS suite's per-run
@@ -26,7 +25,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // it would break its registered tables mid-run)
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (new java.io.File(wh).getName.startsWith("graft_warehouse_"))
-      graft.streaming.Streams.deleteRecursively(new java.io.File(wh))
+      graft.data.Frames.deleteRecursively(new java.io.File(wh))
   }
 
   private val sf = "/root/testdata/sf0.001"

@@ -252,7 +252,7 @@ class StreamingSuite extends AnyFunSuite {
           keyspaceBound = Some(200L))))
     } finally {
       qs.foreach(q => try q.stop() catch { case _: Throwable => })
-      Streams.deleteRecursively(new java.io.File(tmp))
+      graft.data.Frames.deleteRecursively(new java.io.File(tmp))
     }
   }
 }
