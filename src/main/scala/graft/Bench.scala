@@ -89,7 +89,11 @@ object Bench {
       }
       // RocksDB native library extraction+load (~several seconds, once per
       // JVM) otherwise lands on st_stream_tws
-      try org.rocksdb.RocksDB.loadLibrary() catch { case _: Throwable => }
+      // (explicit catch: a missing native lib is an UnsatisfiedLinkError,
+      // which NonFatal does not match)
+      try org.rocksdb.RocksDB.loadLibrary() catch { case e @ (NonFatal(_) | _: LinkageError) =>
+        Console.err.println(s"[bench] RocksDB load failed (continuing): $e")
+      }
       // sink-writer init (output committer, codec, writer JIT) is a one-time
       // JVM cost — a 2-row write per format keeps it off the first timed
       // sink query (s5 absorbed ~4 s of it otherwise). Own try so a /tmp
@@ -102,7 +106,7 @@ object Bench {
         spark.read.parquet(s"$warmDir/p").count()
         tiny.write.mode("overwrite").orc(s"$warmDir/o")
         tiny.write.mode("overwrite").json(s"$warmDir/j")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         Console.err.println(s"[bench] sink warmup failed (continuing): $e")
       }
       // JIT/codegen warm for the hash/string-heavy dedup path on a 2000-doc
@@ -120,7 +124,7 @@ object Bench {
           .filter(col("a") < col("b")).groupBy("a", "b").count()
           .write.mode("overwrite").format("noop").save()
       }
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(e) => Console.err.println(s"[bench] warmup failed (continuing): $e") }
 
     // --- contention self-evidence -----------------------------------------
     // A bench artifact must carry proof of its run conditions: round-6/7

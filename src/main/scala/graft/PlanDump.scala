@@ -2,6 +2,8 @@ package graft
 
 import graft.data.Frames
 
+import scala.util.control.NonFatal
+
 /** Dump `.explain("formatted")` for declared queries to files — the
   * plan-evidence artifact the optimization rounds commit under plans/rNN/.
   *
@@ -32,7 +34,7 @@ object PlanDump {
           java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
           plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         Console.err.println(s"[plandump] wrote $name ($suffix)")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         Console.err.println(s"[plandump] FAILED $name: $e")
       }
     }

@@ -19,7 +19,11 @@ import org.apache.spark.sql.functions._
   *     path on the same batch split;
   *   - d5b `simhashPairs` is EXACT for hamming ≤ 3 by the Manku pigeonhole
   *     construction — no recall question — but its pair count is recorded
-  *     so a collapse (e.g. a bucket explosion regression) would be visible.
+  *     so a collapse (e.g. a bucket explosion regression) would be visible;
+  *   - `sim_semdedup` cell capture: the share of the exact over-threshold
+  *     cosine pairs (τ = 0.3, 0.6, 0.9) whose two ends share a cell of the
+  *     sized SemDeDup index — the only pairs its within-cell scan sees.
+  *     Skipped above 20k vectors (the exact truth is n²).
   *
   * Usage: sbt "runMain graft.RecallProbe [sfDir] [outJson]"
   * Artifact: scale_r10/recall_sf1.json
@@ -146,8 +150,15 @@ object RecallProbe {
         .select("doc_a", "doc_b", "cos")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val (_, tExact) = timed(exactP.count())
-      val cellHit = IvfIndex.withinCellPairs(idx, 0.3)
-        .join(exactP, Seq("doc_a", "doc_b"))
+      // captured = the exact pairs whose two ends share a cell: the pairs
+      // SemDeDup's within-cell scan sees (its dot > τ·na·nb test is the
+      // exact cosine test up to one-ulp boundary cases)
+      val cellOf = idx.assigned.select(col("vec_id"), col("cell"))
+      val cellHit = exactP
+        .join(cellOf.toDF("doc_a", "cell_a"), "doc_a")
+        .join(cellOf.toDF("doc_b", "cell_b"), "doc_b")
+        .filter(col("cell_a") === col("cell_b"))
+        .select("doc_a", "doc_b", "cos")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val (_, tCell) = timed(cellHit.count())
       val perThreshold = Seq(0.3, 0.6, 0.9).map { t =>
@@ -156,27 +167,9 @@ object RecallProbe {
         val r = if (truth == 0) 1.0 else hit.toDouble / truth
         s""""$t":{"truth_pairs":$truth,"cell_pairs_hit":$hit,"pair_recall":$r}"""
       }.mkString(",")
-      // bounded-neighbor-window variants: the Σ|cell|·W pruning of the
-      // Σ|cell|² within-cell scan — recall cost per window size, measured
-      // against the same exact pair truth (the knob is only usable where
-      // this shows it keeps recall)
-      val windowed = Seq(32, 64, 128).map { wSize =>
-        val wHit = IvfIndex.withinCellPairs(idx, 0.3, Some(wSize))
-          .join(exactP, Seq("doc_a", "doc_b"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (_, tW) = timed(wHit.count())
-        val per = Seq(0.3, 0.6, 0.9).map { t =>
-          val truth = exactP.filter(col("cos") > t).count()
-          val hit = wHit.filter(col("cos") > t).count()
-          val r = if (truth == 0) 1.0 else hit.toDouble / truth
-          s""""$t":$r"""
-        }.mkString(",")
-        wHit.unpersist()
-        s""""w$wSize":{"scan_s":$tW,"pair_recall":{$per}}"""
-      }.mkString(",")
       exactP.unpersist(); cellHit.unpersist()
       idx.unpersist()
-      s""""semdedup":{"n_vectors":$nVec,"n_cells":$k,"exact_s":$tExact,"cell_s":$tCell,"build_s":$tBuild,$perThreshold,$windowed}"""
+      s""""semdedup":{"n_vectors":$nVec,"n_cells":$k,"exact_s":$tExact,"cell_s":$tCell,"build_s":$tBuild,$perThreshold}"""
     }
     }.recover { case e =>
       val what = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"

@@ -6,6 +6,8 @@ import java.io.{DataInputStream, DataOutputStream}
 import java.net.Socket
 import java.util.concurrent.atomic.AtomicReference
 
+import scala.util.control.NonFatal
+
 /** Raised by [[Reporter.broadcast]] when the driver flagged this trial for
   * early stop (reference: EarlyStopException, maggy/core/exceptions.py). */
 final class EarlyStopException(val lastMetric: Double) extends RuntimeException("early stop")
@@ -121,7 +123,9 @@ object TrialExecutor {
       val ch = new RpcChannel(host, port, secret)
       try ch.request(Map("type" -> MsgType.Reg, "partition" -> partitionId.toString))
       finally ch.close()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) =>
+      Console.err.println(s"[executor] slot $partitionId re-registration failed: $e")
+    }
 
   def run(
       partitionId: Int,

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst dot product over two double arrays, WITH codegen — the
-  * pair-scan hot path when per-vector norms are PRECOMPUTED (SemDeDup's
-  * within-cell scan does Σ|cell|² pair evaluations; [[CosineSimilarity]]'s
+  * pair-scan hot path when per-vector norms are PRECOMPUTED (the IVF
+  * near-dup join scores every routed pair; [[CosineSimilarity]]'s
   * fused loop recomputes both norms per PAIR — 3 multiply-adds per element
   * where the dot needs 1, so hoisting the norms to one-per-vector cuts the
   * quadratic stage's arithmetic ~3×). Accumulation order is

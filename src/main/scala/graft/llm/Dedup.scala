@@ -1217,30 +1217,30 @@ object Dedup {
   private def cachedShingleCount(docs: DataFrame): Long =
     Frames.getOrCreate(Frames.Key("dedup.doc_count", Frames.corpusKey(docs)))(docs.count())(_ => ())
 
-  private[graft] def sharedMinhashSigs(docs: DataFrame): DataFrame = {
-    val key = Frames.corpusKey(docs)
-    Frames.getOrCreate(Frames.Key("dedup.sigs", key))({
-      val sig = minhashAgg(sharedTokens(docs))
+  private[graft] def sharedMinhashSigs(docs: DataFrame): DataFrame =
+    cached("dedup.sigs", docs) {
       if (cachedShingleCount(docs) <= SigCacheMaxRows)
-        (sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), None)
-      else {
-        // DISK-BACKED signature store above the bound (r18, verdict #3):
-        // the x11-ledger idiom applied to the shared sig table. One
-        // standalone materialization writes the 64-min aggregation to a
-        // per-corpus parquet; every consumer then reads a flat parquet
-        // scan — the sharing survives 100 TB corpora without pinning the
-        // storage region (the r17 unconditional persist pushed the 5M-doc
-        // sf100 slice into OOM), and composed consumers never inline the
-        // corpus-wide agg subtree into their own plans (the other half of
-        // that OOM). Deleted at release — never a cross-run result cache.
-        val dir = Frames.storeDir("sigstore", key)
-        sig.write.mode("overwrite").parquet(dir)
-        (docs.sparkSession.read.parquet(dir), Some(dir))
-      }
-    }) { case (df, dir) =>
-      Frames.release(df)
-      dir.foreach(d => Frames.deleteRecursively(new java.io.File(d)))
-    }._1
+        minhashAgg(sharedTokens(docs)).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else sigStore(docs)
+    }
+
+  /** The DISK-BACKED signature store above [[SigCacheMaxRows]] (r18): the
+    * x11-ledger idiom applied to the shared sig table. One standalone
+    * materialization writes the 64-min aggregation to a per-corpus parquet
+    * under the [[Frames]] store root; every consumer then reads a flat
+    * parquet scan — the sharing survives 100 TB corpora without pinning
+    * the storage region (the r17 unconditional persist pushed the 5M-doc
+    * sf100 slice into OOM), and composed consumers never inline the
+    * corpus-wide agg subtree into their own plans (the other half of that
+    * OOM). Deleted when its owning scope releases it — never a cross-run
+    * result cache. */
+  private[graft] def sigStore(docs: DataFrame): DataFrame = {
+    val key = Frames.corpusKey(docs)
+    val dir = Frames.storeDir("sigstore", key)
+    Frames.getOrCreate(Frames.Key("dedup.sigstore", key))({
+      minhashAgg(sharedTokens(docs)).write.mode("overwrite").parquet(dir)
+      docs.sparkSession.read.parquet(dir)
+    })(_ => Frames.deleteRecursively(new java.io.File(dir)))
   }
 
   /** Shared exploded (doc_id, h) distinct-shingle-hash pairs. The shingle
@@ -1354,16 +1354,7 @@ object Dedup {
         .select(col("node"), col("node").as("label"))
       return labelDf.union(isolated)
     }
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.shuffle.partitions",
-      math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, 8).toString)
-    // The CacheManager is shared state, so the re-bound plan (same
-    // canonicalized form) reads the blocks persisted above — no re-persist
-    // (that would double-register the plan) and no recompute.
-    val bridge = org.apache.spark.sql.GraftExpressionBridge
-    connectedComponentsImpl(
-      bridge.inSession(scoped, edges),
-      bridge.inSession(scoped, nodes), maxIter)
+    connectedComponentsImpl(edges, nodes, maxIter)
   }
 
   /** Driver-CC dispatch bound, in ORIENTED edges (2× the undirected pair
@@ -1459,8 +1450,22 @@ object Dedup {
     (nodes, labels)
   }
 
-  private def connectedComponentsImpl(
-      edges: DataFrame, nodes: DataFrame, maxIter: Int): DataFrame = {
+  /** The distributed pointer-doubling loop over oriented (src, dst)
+    * edges, run in a cloned session with ≤ 8 shuffle partitions (see
+    * [[connectedComponents]]). Throws if it has not converged after
+    * `maxIter` rounds. */
+  private[graft] def connectedComponentsImpl(
+      callerEdges: DataFrame, callerNodes: DataFrame, maxIter: Int): DataFrame = {
+    val spark = callerEdges.sparkSession
+    val scoped = spark.newSession()
+    scoped.conf.set("spark.sql.shuffle.partitions",
+      math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, 8).toString)
+    // The CacheManager is shared state, so the re-bound plan (same
+    // canonicalized form) reads the blocks the caller persisted — no
+    // re-persist (that would double-register the plan) and no recompute.
+    val bridge = org.apache.spark.sql.GraftExpressionBridge
+    val edges = bridge.inSession(scoped, callerEdges)
+    val nodes = bridge.inSession(scoped, callerNodes)
     // Iterate ONLY over nodes that have at least one edge: an isolated node
     // is trivially its own component and its label can never change, so
     // carrying the full corpus through every propagation round (as before)
@@ -1508,10 +1513,12 @@ object Dedup {
     // Unconverged labels are WRONG labels (splitting a component silently) —
     // fail loudly rather than return them. With pointer doubling this needs
     // diameter > ~2^maxIter, i.e. unreachable in practice.
-    if (!converged)
+    if (!converged) {
+      graft.data.Frames.release(labels)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — graph diameter exceeds " +
         s"2^$maxIter; raise maxIter")
+    }
     val isolated = nodes.join(active, Seq("node"), "left_anti")
       .select(col("node"), col("node").as("label"))
     // unpersisting the re-bound edges copy removes the shared CacheManager

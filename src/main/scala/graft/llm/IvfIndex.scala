@@ -158,17 +158,19 @@ object IvfIndex {
     val perProbe = math.min(nProbe, index.centroids.size).toLong
     val routedRows = probes.count() * perProbe
     // Dispatch on PAIR volume, not routed rows: the Catalyst join form
-    // pays ~200 ns per candidate pair (measured by stage time at sf10:
-    // 437 s-cpu over ~2G matches) — the per-element ArrayData access in
+    // pays ~165 ns of task cpu per candidate pair (sf10 embeddings, 2G
+    // pairs, 4 cores: ~330 s-cpu) — the per-element ArrayData access in
     // the join condition dominates, which is why hoisting the fused
     // cosine's 3 ops/element to a 1-op dot, and even a 4-accumulator
-    // unroll, measured FLAT (18.8 / 18.6 / 18.5 s warm). The blocked
-    // kernel reads primitive arrays and keeps a probe block L2-resident
-    // while candidates stream under it (the GEMM insight), so above
-    // ~100M candidate pairs its collect+pack overhead amortizes; its
-    // ceiling is the packed-probe broadcast size. Below the floor the
-    // join path keeps the oracle-visible plan + DPP cell pruning; above
-    // the ceiling the shuffled cell join remains the only scalable shape.
+    // unroll, measured FLAT (18.8 / 18.6 / 18.5 s warm, 32 cores). The
+    // blocked kernel reads primitive arrays and keeps a probe block
+    // L2-resident while candidates stream under it (the GEMM insight), so
+    // above ~100M candidate pairs its collect+pack overhead amortizes
+    // (scale_vector/neardup_kernel_sf10.json: median 36 s vs 99 s on
+    // 4 cores); its ceiling is the packed-probe broadcast size. Below the
+    // floor the join path keeps the oracle-visible plan + DPP cell
+    // pruning; above the ceiling the shuffled cell join remains the only
+    // scalable shape.
     val pairVolume =
       routedRows.toDouble * index.assigned.count() / math.max(1, index.centroids.size)
     if (pairVolume >= 1e8 && routedRows <= KernelMaxRoutedRows)
@@ -178,16 +180,17 @@ object IvfIndex {
       .withColumn("cnorm", sqrt(Similarity.dotNative(col("cv"), col("cv"))))
     val probeSide =
       if (routedRows <= BroadcastMaxRoutedRows) broadcast(routed) else routed
-    // norms hoisted out of the quadratic stage (the withinCellPairs
-    // contract: dot > τ·‖p‖·‖c‖ ⇔ cos > τ up to one-ulp boundary cases,
-    // τ > 0; the reported cosine divides by the hoisted norm product —
-    // ≤ 1 ulp vs the fused sqrt(a·b), invisible at 6 dp)
+    // norms hoisted out of the quadratic stage: dot > τ·‖p‖·‖c‖ ⇔ cos > τ
+    // up to one-ulp boundary cases, τ > 0. The dot is the sequential fold
+    // of the exact sim_near_dup_pairs cosine; the reported cosine divides
+    // by the hoisted norm product — ≤ 1 ulp vs the fused sqrt(a·b),
+    // invisible at 6 dp)
     cand.join(probeSide, Seq("cell"))
       .filter(col("probe_id") < col("cand_id"))
-      .filter(Similarity.dotUnrolled(col("pv"), col("cv")) >
+      .filter(Similarity.dotNative(col("pv"), col("cv")) >
         col("pnorm") * col("cnorm") * lit(threshold))
       .select(col("probe_id"), col("cand_id"),
-        round(Similarity.dotUnrolled(col("pv"), col("cv")) /
+        round(Similarity.dotNative(col("pv"), col("cv")) /
           (col("pnorm") * col("cnorm")), 6).as("cosine"))
   }
 
@@ -201,9 +204,10 @@ object IvfIndex {
     * mapPartitions is the documented last-resort tier, taken here on
     * measurement: the quadratic stage is a dense rectangular kernel
     * Catalyst has no operator for (it re-decodes build rows per pair and
-    * cannot tile). Semantics match the join path: probe_id < cand_id,
-    * dot > τ·‖p‖·‖c‖ (one-ulp contract), cosine = round(dot/(‖p‖·‖c‖), 6)
-    * with HALF_UP — the `round()` rule. */
+    * cannot tile). Semantics match the join path bit for bit: probe_id <
+    * cand_id, the same sequential dot fold, dot > τ·‖p‖·‖c‖ (one-ulp
+    * contract), cosine = round(dot/(‖p‖·‖c‖), 6) with HALF_UP — the
+    * `round()` rule. */
   private[graft] def nearDupPairsBlocked(index: IvfModel, routed: DataFrame,
       threshold: Double): DataFrame = {
     val spark = routed.sparkSession
@@ -275,18 +279,9 @@ object IvfIndex {
             while (j < b1) {
               if (ids(j) < candId) {
                 val off = j * dim
-                var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+                var dot = 0.0
                 var k = 0
-                val d4 = dim - 3
-                while (k < d4) {
-                  a0 += cv(k) * flat(off + k)
-                  a1 += cv(k + 1) * flat(off + k + 1)
-                  a2 += cv(k + 2) * flat(off + k + 2)
-                  a3 += cv(k + 3) * flat(off + k + 3)
-                  k += 4
-                }
-                while (k < dim) { a0 += cv(k) * flat(off + k); k += 1 }
-                val dot = (a0 + a1) + (a2 + a3)
+                while (k < dim) { dot += flat(off + k) * cv(k); k += 1 }
                 if (dot > threshold * norms(j) * cnorm) {
                   val cos = BigDecimal(dot / (norms(j) * cnorm))
                     .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -417,127 +412,19 @@ object IvfIndex {
     * the paper's policy: keep the member with the LOWEST cosine to its
     * cluster centroid (the most "extreme" exemplar), tiebreak vec_id.
     *
-    * Scale shape: the only corpus-wide shuffle is the join on `cell`
-    * (against the cell-partitioned index layout the candidates do not move
-    * at all — only the left projection shuffles); the within-cell candidate
-    * volume is Σ|cell|², the quantity a deployment CONTROLS by scaling
-    * nClusters with the corpus (the paper runs k = 11k on 600M docs) —
-    * never the global n². CC rounds move (node, label) longs over the
-    * near-dup subgraph only. Output: one row per vector with its cell,
-    * semantic group, centroid cosine, and survival flag. */
-  /** The within-cell over-threshold cosine pairs SemDeDup groups over —
-    * public so RecallProbe can measure cell-capture recall against the
-    * exact global pair set at scales where truth is still computable. */
-  /** A within-cell group holding more members than this takes the join
-    * formulation (a flatMapGroups cell is ONE task: 8k members = 3.2×10⁷
-    * dots ≈ sub-second; an unexpectedly giant cell must not serialize into
-    * one straggler). Sized cells (semDedupK targets ~2000) stay far below. */
-  val MaxFlatMapCellRows = 8000L
-
-  def withinCellPairs(index: IvfModel, threshold: Double,
-      window: Option[Int] = None, forceJoin: Boolean = false): DataFrame = {
-    // per-vector norms hoisted OUT of the quadratic stage: the within-cell
-    // scan does Σ|cell|² pair evaluations, so each pair pays one dot
-    // (1 multiply-add per element) instead of the fused cosine's 3 —
-    // norms are computed once per vector on the linear side.
-    // dot > τ·na·nb ⇔ dot/(na·nb) > τ up to one-ulp boundary cases (τ > 0
-    // and norms positive); DataPlaneSpec's exact recomputation guards the
-    // equivalence on real data.
-    val v = col("embedding").cast("array<double>")
-    val assigned0 = index.assigned
-      .select(col("vec_id"), v.as("v"),
-        sqrt(Similarity.dotNative(v, v)).as("nrm"), col("cell"))
-    // `window`: the SemDeDup paper's sort-by-centroid-distance pruning —
-    // rank members by cosine to their centroid, score only pairs within
-    // `window` ranks (Σ|cell|·W work instead of Σ|cell|²). MEASURED AND
-    // REJECTED for the declared low-τ decision on this corpus
-    // (scale_r12/recall_sf1.json: τ=0.6 capture 0.93 unbounded → 0.42 at
-    // W=128 — centroid-distance rank is a weak neighbor proxy in high
-    // dim); kept as the opt-in knob for the high-τ near-identical regime
-    // the paper targets, where its recall holds (1.0 at τ=0.9).
-    val rankCos: Option[DataFrame] = window.map { _ =>
-      val centDf = broadcast(index.assigned.sparkSession
-        .createDataFrame(index.centroids).toDF("cell", "centroid"))
-      assigned0.join(centDf, Seq("cell"))
-        .withColumn("rc", Similarity.cosine(col("v"), col("centroid")))
-        .select(col("cell"), col("vec_id"), col("v"), col("nrm"), col("rc"))
-    }
-    val members = rankCos.getOrElse(
-      assigned0.withColumn("rc", lit(0.0))
-        .select("cell", "vec_id", "v", "nrm", "rc"))
-    // measured dispatch on the largest cell: the quadratic stage runs as a
-    // typed PER-CELL scan (flatMapGroups) when every group fits one task —
-    // each vector then moves ONCE in the group shuffle and pairs are
-    // evaluated in a primitive-array loop, vs the join formulation that
-    // materializes TWO embedding arrays into every candidate row
-    // (Σ|cell|² × vector-width of row traffic — measured 39.8 s → see
-    // scale_r12 at sf10 for the delta). Oversized cells fall back to the
-    // join (cluster-wide parallelism beats one straggler task).
-    val maxCell = if (forceJoin) Long.MaxValue
-      else index.assigned.groupBy("cell").count()
-        .agg(max("count")).head().getLong(0)
-    if (maxCell <= MaxFlatMapCellRows) {
-      val spark = index.assigned.sparkSession
-      import spark.implicits._
-      val wOpt = window
-      val thr = threshold
-      members.select(col("cell"), col("vec_id"), col("v"), col("nrm"), col("rc"))
-        .as[(Int, Long, Array[Double], Double, Double)]
-        .groupByKey(_._1)
-        .flatMapGroups { (_, it) =>
-          // sort by (rc, vec_id) when windowed — rank-neighborhood pairs
-          // only; by vec_id otherwise (output order-stable either way
-          // because pairs are emitted id-normalized)
-          val m = it.toArray
-          val sorted = if (wOpt.isDefined) m.sortBy(x => (x._5, x._2)) else m.sortBy(_._2)
-          val n = sorted.length
-          val w = wOpt.getOrElse(n)
-          val out = Seq.newBuilder[(Long, Long)]
-          var i = 0
-          while (i < n) {
-            val (va, na, ida) = (sorted(i)._3, sorted(i)._4, sorted(i)._2)
-            var j = i + 1
-            val jEnd = math.min(n, i + w + 1)
-            while (j < jEnd) {
-              val vb = sorted(j)._3
-              var dot = 0.0
-              var d = 0
-              while (d < va.length) { dot += va(d) * vb(d); d += 1 }
-              if (dot > thr * na * sorted(j)._4) {
-                val idb = sorted(j)._2
-                out += (if (ida < idb) (ida, idb) else (idb, ida))
-              }
-              j += 1
-            }
-            i += 1
-          }
-          out.result().iterator
-        }
-        .toDF("doc_a", "doc_b")
-    } else {
-      val a = members.select(col("cell"), col("vec_id").as("doc_a"),
-        col("v").as("va"), col("nrm").as("na"), col("rc").as("rca"))
-      val b = members.select(col("cell"), col("vec_id").as("doc_b"),
-        col("v").as("vb"), col("nrm").as("nb"), col("rc").as("rcb"))
-      val joined = a.join(b, Seq("cell")).filter(col("doc_a") < col("doc_b"))
-      val inWindow = window match {
-        case None => joined
-        case Some(wSize) =>
-          // rank-window restriction via a per-cell rank join would re-key
-          // the cell; approximate the SAME windowed semantics on the join
-          // path with the rank from a window function, then bound the gap
-          val ranked = members.withColumn("rnk", row_number().over(
-            Window.partitionBy("cell").orderBy(col("rc"), col("vec_id"))))
-          val ra = ranked.select(col("vec_id").as("doc_a"), col("rnk").as("ra"))
-          val rb = ranked.select(col("vec_id").as("doc_b"), col("rnk").as("rb"))
-          joined.join(ra, "doc_a").join(rb, "doc_b")
-            .filter(abs(col("ra") - col("rb")) <= wSize)
-      }
-      inWindow
-        .filter(Similarity.dotNative(col("va"), col("vb")) >
-          lit(threshold) * col("na") * col("nb"))
-        .select("doc_a", "doc_b")
-    }
+    * Scale shape: the only corpus-wide shuffle is the group-by on `cell`
+    * (each vector moves once); the within-cell pair work is Σ|cell|², the
+    * quantity a deployment CONTROLS by scaling nClusters with the corpus
+    * (the paper runs k = 11k on 600M docs; [[Similarity.semDedupK]] sizes
+    * cells to ~2000 vectors) — never the global n². Output: one row per
+    * vector with its cell, semantic group, centroid cosine, and survival
+    * flag. */
+  def semDedup(index: IvfModel, threshold: Double): DataFrame = {
+    val w = Window.partitionBy("grp").orderBy(col("cent_cos_raw"), col("vec_id"))
+    cellLocalDecision(index, threshold)
+      .withColumn("keep", row_number().over(w) === 1)
+      .select(col("vec_id"), col("cell"), col("grp"),
+        round(col("cent_cos_raw"), 6).as("cent_cos"), col("keep"))
   }
 
   /** Cell-local semantic decision: because SemDeDup scores pairs WITHIN
@@ -546,20 +433,17 @@ object IvfIndex {
     * in-task union-find over its members (union by min vec_id, path
     * compression) and emits ONE row per member — (vec_id, cell, grp,
     * cent_cos_raw), grp = the component's min vec_id, exactly the labels
-    * pointer-doubling CC converges to, with ZERO pair materialization
-    * (r11's decision shipped ~29M over-threshold pairs into a 29M-edge CC
-    * at sf10; this emits n rows). Norms and the centroid cosine are
-    * computed in the same task from the closure-captured centroid list
-    * (k×dim KBs — the same data semDedup's distributed branch broadcasts),
-    * with the identical fused accumulation order as
-    * graft.functions.CosineSimilarity, so the two branches are bit-equal.
-    * Same dot-vs-τ·na·nb pair test as [[withinCellPairs]]. */
-  private def cellLocalDecision(index: IvfModel, threshold: Double,
-      window: Option[Int]): DataFrame = {
+    * [[Dedup.connectedComponents]] gives over the within-cell pairs
+    * (DataPlaneSpec recomputes them), with ZERO pair materialization.
+    * Norms are hoisted out of the quadratic loop: dot > τ·na·nb ⇔ cos > τ
+    * up to one-ulp boundary cases (τ > 0, norms positive). The centroid
+    * cosine uses the closure-captured centroid list (k×dim KBs) with the
+    * fused accumulation order of graft.functions.CosineSimilarity. */
+  private def cellLocalDecision(index: IvfModel, threshold: Double): DataFrame = {
     val spark = index.assigned.sparkSession
     import spark.implicits._
     val cents: Map[Int, Array[Double]] = index.centroids.toMap
-    val (wOpt, thr) = (window, threshold)
+    val thr = threshold
     index.assigned
       .select(col("cell"), col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .as[(Int, Long, Array[Double])]
@@ -575,16 +459,11 @@ object IvfIndex {
           }
           (dot, na, nb)
         }
-        val m0 = it.toArray
         // per-member norm + centroid cosine, once, linear
-        val withStats = m0.map { case (_, id, v) =>
+        val sorted = it.toArray.map { case (_, id, v) =>
           val (dot, na, nb) = fused(v, cent)
           (id, v, math.sqrt(na), dot / math.sqrt(na * nb))
-        }
-        // windowed mode ranks by centroid cosine (the paper's pruning
-        // order); unbounded mode is order-independent
-        val sorted = if (wOpt.isDefined) withStats.sortBy(x => (x._4, x._1))
-                     else withStats.sortBy(_._1)
+        }.sortBy(_._1)
         val n = sorted.length
         val parent = Array.tabulate(n)(identity)
         def find(x: Int): Int = {
@@ -594,22 +473,17 @@ object IvfIndex {
           while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
           r
         }
-        // union keeps the member with the SMALLER vec_id as root, so every
-        // root IS its component's min id — the CC label contract
+        // members are sorted by vec_id, so the smaller INDEX is the smaller
+        // id: every root IS its component's min id — the CC label contract
         def union(a: Int, b: Int): Unit = {
           val (ra, rb) = (find(a), find(b))
-          if (ra != rb) {
-            if (sorted(ra)._1 <= sorted(rb)._1) parent(rb) = ra
-            else parent(ra) = rb
-          }
+          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
         }
-        val w = wOpt.getOrElse(n)
         var i = 0
         while (i < n) {
           val (va, na) = (sorted(i)._2, sorted(i)._3)
           var j = i + 1
-          val jEnd = math.min(n, i + w + 1)
-          while (j < jEnd) {
+          while (j < n) {
             val vb = sorted(j)._2
             var dot = 0.0
             var d = 0
@@ -625,41 +499,8 @@ object IvfIndex {
       .toDF("vec_id", "cell", "grp", "cent_cos_raw")
   }
 
-  def semDedup(index: IvfModel, threshold: Double,
-      window: Option[Int] = None, forceDistributedCc: Boolean = false): DataFrame = {
-    val spark = index.assigned.sparkSession
-    val w = Window.partitionBy("grp").orderBy(col("cent_cos_raw"), col("vec_id"))
-    // measured dispatch on the largest cell: sized cells (semDedupK's
-    // ~2000 target) decide in-task — each vector moves once, no pair ever
-    // materializes, the centroid join disappears (sf10: 39.8 → ~11 s,
-    // identical output, spec-locked); an unexpectedly giant cell falls
-    // back to the pair join + distributed CC rather than serializing into
-    // one straggler task.
-    val maxCell = index.assigned.groupBy("cell").count()
-      .agg(max("count")).head().getLong(0)
-    val decided =
-      if (!forceDistributedCc && maxCell <= MaxFlatMapCellRows)
-        cellLocalDecision(index, threshold, window)
-      else {
-        val centDf = broadcast(spark.createDataFrame(index.centroids).toDF("cell", "centroid"))
-        val withCent = index.assigned
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"), col("cell"))
-          .join(centDf, Seq("cell"))
-          .withColumn("cent_cos_raw", Similarity.cosine(col("v"), col("centroid")))
-          .select(col("vec_id"), col("v"), col("cell"), col("cent_cos_raw"))
-        val pairs = withinCellPairs(index, threshold, window)
-        val comps = Dedup.connectedComponents(pairs, withCent.select(col("vec_id").as("node")))
-        withCent.join(comps, withCent("vec_id") === comps("node"))
-          .select(col("vec_id"), col("cell"), col("label").as("grp"), col("cent_cos_raw"))
-      }
-    decided
-      .withColumn("keep", row_number().over(w) === 1)
-      .select(col("vec_id"), col("cell"), col("grp"),
-        round(col("cent_cos_raw"), 6).as("cent_cos"), col("keep"))
-  }
-
   /** [[semDedup]] against the same persisted per-corpus index. */
   def semDedupCached(cacheKey: String, corpus: DataFrame, threshold: Double,
-      nClusters: Int, window: Option[Int] = None): DataFrame =
-    semDedup(cachedIndex(cacheKey, corpus, nClusters), threshold, window)
+      nClusters: Int): DataFrame =
+    semDedup(cachedIndex(cacheKey, corpus, nClusters), threshold)
 }

@@ -39,23 +39,13 @@ object Similarity {
         org.apache.spark.sql.GraftExpressionBridge.expressionOf(b)))
 
   /** Dot product via the native codegen'd expression — for pair scans
-    * whose per-vector norms are hoisted out of the quadratic stage
-    * (SemDeDup's within-cell scan): 1 multiply-add per element per pair
-    * instead of the fused cosine's 3. */
+    * whose per-vector norms are hoisted out of the quadratic stage (the
+    * IVF near-dup join): 1 multiply-add per element per pair instead of
+    * the fused cosine's 3, in the sequential fold order of the exact
+    * `sim_near_dup_pairs` cosine. */
   def dotNative(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftExpressionBridge.columnOf(
       graft.functions.DotProductExpr(
-        org.apache.spark.sql.GraftExpressionBridge.expressionOf(a),
-        org.apache.spark.sql.GraftExpressionBridge.expressionOf(b)))
-
-  /** Dot product with four independent accumulators — the quadratic
-    * PRESCREEN path only (threshold compares + 6-dp rounded reports):
-    * ~n·ε accumulation-order deviation from the sequential fold, ~2× the
-    * throughput (latency-chain bound; see graft.functions
-    * .DotProductUnrolled). Oracled/pinned paths use [[dotNative]]. */
-  def dotUnrolled(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftExpressionBridge.columnOf(
-      graft.functions.DotProductUnrolled(
         org.apache.spark.sql.GraftExpressionBridge.expressionOf(a),
         org.apache.spark.sql.GraftExpressionBridge.expressionOf(b)))
 

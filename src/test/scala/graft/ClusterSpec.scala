@@ -5,7 +5,6 @@ import graft.core._
 import graft.core.HParam._
 import graft.exec.{Gang, TrainFn, TrialContext}
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Multi-JVM execution evidence: everything here runs under
@@ -21,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite getOrCreate's a shared local[4] session, which would otherwise
   * hijack this one's master.
   */
-class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ClusterSpec extends AnyFunSuite with ScratchRoot {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -30,7 +29,7 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
   // if the boot actually succeeded — forcing it here would re-run the
   // whole (possibly already-failed) cluster boot in teardown.
   @volatile private var booted = false
-  override def afterAll(): Unit = if (booted) spark.stop()
+  override def afterAll(): Unit = try { if (booted) spark.stop() } finally super.afterAll()
 
   // A Try inside the lazy val memoizes boot FAILURE too: a thrown lazy-val
   // initializer is retried on every access, so without this a failed
@@ -162,7 +161,7 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("lagom HPO: trials run in executor JVMs, RPC reaches the driver over TCP") {
-    val marker = s"${sys.props("java.io.tmpdir")}/graft_cluster_trials_${System.nanoTime()}"
+    val marker = scratch("cluster_trials")
     new java.io.File(marker).mkdirs()
     val space = Searchspace(Seq(DoubleParam("x", 0, 5)))
     // the train fn ships SERIALIZED to executor JVMs; its pid marker files
@@ -193,7 +192,7 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // state stores live in EXECUTOR heaps and checkpoint through the
     // shared filesystem — the combination neither the local[4] continuous
     // test nor the AvailableNow replays cover
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_mc_cont_${System.nanoTime()}"
+    val ckpt = scratch("mc_cont")
     // same shape, poll, and thresholds as StreamingSuite's local[4] run —
     // one harness, so a flakiness fix tunes both suites at once
     val dedup = StreamPlateau.dupEvents(spark)
@@ -270,7 +269,7 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // double-counted events)
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val base = s"${sys.props("java.io.tmpdir")}/graft_mc_chaos_${System.nanoTime()}"
+    val base = scratch("mc_chaos")
     val stage = s"$base/events"
     val events = graft.data.Tables(spark, sf, "events")
     events.repartition(16).write.parquet(stage)

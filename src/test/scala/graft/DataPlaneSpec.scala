@@ -4,7 +4,6 @@ import graft.data.{Frames, Tables}
 import graft.llm.{Dedup, IvfIndex, Multimodal, Similarity}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Validation for the declared queries that have no DuckDB oracle
@@ -12,13 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * the approximation against an exact computation on the same testdata —
   * these are the suites the operator files point at.
   */
-class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DataPlaneSpec extends AnyFunSuite with ScratchRoot {
 
   private val sf = "/root/testdata/sf0.01"
 
   // release what the suite's queries registered (tracked checkpoints, the
   // shared dedup caches, store dirs) instead of pinning it until JVM exit
-  override def afterAll(): Unit = Frames.releaseAll()
+  override def afterAll(): Unit = try Frames.releaseAll() finally super.afterAll()
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -562,7 +561,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res.cellCodes.columns.contains("codes_fine"),
       "the fine codes ride in the same inverted-list rows")
     // roundtrip: save → load preserves both codebook tiers and the column
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_spec_staged_${math.abs(sf.hashCode)}"
+    val dir = scratch("spec_staged")
     graft.llm.PqIndex.saveIvfPq(res, dir)
     val loaded = graft.llm.PqIndex.loadIvfPq(spark, dir)
     assert(loaded.refineCodebooks == res.refineCodebooks,
@@ -612,7 +611,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     val day2 = emb.filter(col("vec_id") % 10 === 9)
     val ivf = IvfIndex.build(day1, nClusters = 8)
     val built = graft.llm.PqIndex.buildIvfPq(ivf, day1, m = 8, ksub = 16)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_append_spec_${System.nanoTime()}"
+    val dir = scratch("append_spec")
     graft.llm.PqIndex.saveIvfPq(built, dir); built.unpersist()
     val base = graft.llm.PqIndex.loadIvfPq(spark, dir)
     val baseRows = base.cellCodes.collect()
@@ -801,9 +800,9 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("blocked near-dup kernel is bit-identical to the Catalyst join path") {
     // the big-pair-volume regime dispatches to the packed-array kernel
-    // (r14; measured 18.5 → 4.3 s at sf10) — same 4-accumulator fold,
-    // same hoisted norms, same HALF_UP 6-dp rounding, so the two paths
-    // must agree EXACTLY, not approximately
+    // (measured 99 → 36 s median at sf10 embeddings on 4 cores) — same
+    // sequential dot fold, same hoisted norms, same HALF_UP 6-dp rounding,
+    // so the two paths must agree EXACTLY, not approximately
     val emb = Tables(spark, sf, "embeddings")
     val probes = emb.filter(col("vec_id") % 10 === 0)
     val index = IvfIndex.build(emb, nClusters = 8)
@@ -892,7 +891,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double, Int)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     val built = IvfIndex.build(emb, nClusters = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_rt").toString
+    val dir = scratchDir("ivf_rt")
     try {
       val inMem = rows(IvfIndex.search(built, probes, k = 10, nProbe = 4)
         .select(col("probe_id"), col("cand_id"), col("cosine"), col("rn").cast("int")))
@@ -1046,16 +1045,25 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("connectedComponents converges on a 50-long chain and leaves session conf untouched") {
     import spark.implicits._
     // a 50-diameter path graph: plain min-label propagation needs 50 rounds,
-    // pointer doubling must close it well inside maxIter=20
-    val pairs = (0L until 49L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    // pointer doubling must close it well inside maxIter=20. Its 98 oriented
+    // edges sit far below DriverCcMaxEdges, so connectedComponents itself
+    // takes the driver union-find: drive the distributed loop directly.
+    val chain = (0L until 49L).map(i => (i, i + 1))
+    val edges = (chain ++ chain.map(_.swap)).toDF("src", "dst")
     val nodes = ((0L to 49L) ++ (100L to 104L)).toDF("node")
     val confBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    val labels = Dedup.connectedComponents(pairs, nodes)
+    val labels = Dedup.connectedComponentsImpl(edges, nodes, maxIter = 20)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(spark.conf.get("spark.sql.shuffle.partitions") == confBefore,
       "connectedComponents mutated the caller session's shuffle partitions")
+    val (ufNodes, ufLabels) = Dedup.unionFindMinLabel(
+      chain.map(_._1).toArray, chain.map(_._2).toArray)
+    assert(ufNodes.zip(ufLabels).forall { case (n, l) => labels(n) == l },
+      "distributed labels differ from the driver union-find")
     assert((0L to 49L).forall(labels(_) == 0L), s"chain not fully labeled: $labels")
     assert((100L to 104L).forall(i => labels(i) == i), "isolated nodes mislabeled")
+    // the loop is live: one round cannot close a 50-long chain
+    intercept[IllegalStateException](Dedup.connectedComponentsImpl(edges, nodes, maxIter = 1))
   }
 
   test("keyUniform raises loudly for keys outside [0, 2^31)") {
@@ -1145,7 +1153,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // and through the x4 sink: exactly one TFRecord file per shard, file k
     // holding only shard k (sorted listing == shard order for the loader)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-align").toString
+    val tmp = scratchDir("align")
     aligned.write.mode("overwrite").format("tfrecord").save(tmp)
     val files = graft.sources.Datasets.dataFiles(spark, tmp)
     assert(files.length == n, s"expected $n shard files, got ${files.length}")
@@ -1336,7 +1344,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     // not INVALID_ARRAY_INDEX_IN_ELEMENT_AT.
     assert(spark.conf.get("spark.sql.ansi.enabled") == "true",
       "fixture assumes the ANSI default this regression depends on")
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_shortdocs_${System.nanoTime()}"
+    val dir = scratch("shortdocs")
     val fixtures = Seq((1L, "one"), (2L, "two tokens"), (3L, "a b c"),
       (4L, "a b c d"), (5L, "a b c d e"), (6L, "a b c d e f g"))
     fixtures.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
@@ -1362,7 +1370,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     // that corpus shape.
     val nDocs = 200
     val footer = "subscribe to our newsletter for more"       // 6 tokens → 2 universal grams
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_unigram_${System.nanoTime()}"
+    val dir = scratch("unigram")
     (0 until nDocs).map { i =>
       val body = (1 to 6).map(j => s"u${i}_$j").mkString(" ") // 6 unique tokens
       (i.toLong, s"$body $footer")
@@ -1662,6 +1670,22 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(grp.head._3, s"singleton ${grp.head._1} must keep itself")
     // (d) deterministic: a second run (cached index, same seed) is identical
     assert(run() == sd, "sim_semdedup must be run-to-run deterministic")
+    // (e) the in-task union-find labels are exactly the connected components
+    // of the exact over-threshold pairs whose two ends share a cell of the
+    // query's persisted index
+    val cellOf = IvfIndex.cachedIndexFor(sf, Tables(spark, sf, "embeddings"),
+        nClusters = Similarity.semDedupK(exactComp.size.toLong))
+      .assigned.select(col("vec_id"), col("cell"))
+    val withinCell = exactPairsDf
+      .join(cellOf.toDF("doc_a", "cell_a"), "doc_a")
+      .join(cellOf.toDF("doc_b", "cell_b"), "doc_b")
+      .filter(col("cell_a") === col("cell_b"))
+      .select("doc_a", "doc_b")
+    val cellComp = Dedup.connectedComponents(withinCell, e.select(col("vec_id").as("node")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val mislabeled = sd.filter { case (id, grp, _) => cellComp(id) != grp }
+    assert(mislabeled.isEmpty,
+      s"grp must equal CC over the exact within-cell pairs: ${mislabeled.take(3)}")
     // the selection is live on testdata: some dups actually dropped
     assert(sd.exists(!_._3), "expected at least one dropped semantic duplicate")
   }
@@ -1793,32 +1817,6 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows("x11b_incremental_lsh") == b, "x11b must be run-to-run deterministic")
   }
 
-  test("withinCellPairs: per-cell typed scan and join formulation produce the identical pair set") {
-    val emb = Tables(spark, sf, "embeddings")
-    val idx = IvfIndex.cachedIndexFor(sf, emb, nClusters = Similarity.semDedupK(emb.count()))
-    def pairs(forceJoin: Boolean, window: Option[Int]) =
-      IvfIndex.withinCellPairs(idx, 0.3, window, forceJoin).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the dispatch must be a pure execution-strategy choice: same pairs
-    val fm = pairs(forceJoin = false, None)
-    val jn = pairs(forceJoin = true, None)
-    assert(fm == jn, s"flatMapGroups vs join pair sets differ: ${(fm -- jn).take(3)} / ${(jn -- fm).take(3)}")
-    assert(fm.nonEmpty, "within-cell scan must be live on testdata")
-    // the windowed variants agree across strategies too, and are subsets
-    val fmW = pairs(forceJoin = false, Some(16))
-    val jnW = pairs(forceJoin = true, Some(16))
-    assert(fmW == jnW, "windowed flatMapGroups vs join pair sets differ")
-    assert(fmW.subsetOf(fm), "windowed pairs must be a subset of the unbounded scan")
-    // the semDedup grouping dispatch is likewise strategy-only: in-task
-    // per-cell union-find and pair-join + distributed CC produce the
-    // identical (vec_id, grp, keep) decision
-    def decide(forceCc: Boolean) =
-      IvfIndex.semDedup(idx, 0.3, forceDistributedCc = forceCc).collect()
-        .map(r => (r.getLong(0), r.getLong(2), r.getBoolean(4))).toSet
-    assert(decide(false) == decide(true),
-      "cell-local union-find must equal the distributed-CC decision")
-  }
-
   test("store-backed LSH near-check is live: persisted-signature banding finds planted cross-side near-dups") {
     // the sf0.01 gate corpus has no cross-split near-dups (the declared
     // x11b run is equivalence-checked above, where the drop set may be
@@ -1831,7 +1829,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     val far = (1 to 40).map(i => s"other$i").mkString(" ")
     val corpus = Seq((10L, base), (12L, far)).toDF("doc_id", "text")
     val batch = Seq((109L, near), (119L, "tiny doc here")).toDF("doc_id", "text")
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_spec_sigstore_${System.nanoTime()}"
+    val dir = scratch("spec_sigstore")
     Dedup.minhashSignatures(corpus).write.parquet(dir)
     val persisted = spark.read.parquet(dir)
     val cands = Dedup.bandsFromSignature(Dedup.minhashSignatures(batch))
@@ -1866,7 +1864,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
       (199L, "src1", txt("n")),   // day-4: dup of the DAY-2 survivor
       (299L, "src1", txt("a")),   // day-4: dup of day-1
       (399L, "src1", txt("e")))   // day-4: fresh
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_spec_x11c_${System.nanoTime()}"
+    val dir = scratch("spec_x11c")
     docs.toDF("doc_id", "source", "text").write.parquet(s"$dir/documents.parquet")
     def stages(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(3))).toMap
@@ -2029,7 +2027,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     val li = Tables(spark, sf, "lineitem").select("l_orderkey", "l_partkey", "l_suppkey")
     val z = li.withColumn("zv",
       graft.ops.Scans.zval(col("l_partkey"), shiftleft(col("l_suppkey"), 4)))
-    val base = s"${sys.props("java.io.tmpdir")}/graft_s13_spec_${System.nanoTime()}"
+    val base = scratch("s13_spec")
     z.repartitionByRange(8, col("zv")).sortWithinPartitions("zv")
       .write.mode("overwrite").parquet(s"$base/zorder")
     li.repartitionByRange(8, col("l_partkey")).sortWithinPartitions("l_partkey")
@@ -2107,6 +2105,25 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(mine.forall(_._3 > 0), s"an entry read no block bytes: $mine")
     }
     assert(!Frames.live().exists(_._2 == "live probe"))
+  }
+
+  test("SigCacheMaxRows: the parquet sig store equals the persisted sig cache and dies with its scope") {
+    // sf0.01 sits below the bound, so sharedMinhashSigs takes the persist
+    // branch; drive the above-bound store directly on the same corpus
+    val docs = Tables(spark, sf, "documents")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val dir = new java.io.File(Frames.storeDir("sigstore", Frames.corpusKey(docs)))
+    Frames.scope("sig store spec") {
+      val persisted = Dedup.sharedMinhashSigs(docs)
+      val stored = Dedup.sigStore(docs)
+      assert(stored.columns.toSeq == persisted.columns.toSeq &&
+        persisted.columns.toSeq == "doc_id" +: (0 until Dedup.NumHashes).map(i => s"m$i"))
+      assert(rows(stored) == rows(persisted), "parquet sig store differs from the persisted cache")
+      assert(dir.getParentFile == Frames.root && dir.isDirectory, s"$dir is not a store under ${Frames.root}")
+      assert(stored.inputFiles.nonEmpty && stored.inputFiles.forall(_.contains(dir.getName)),
+        s"the store is not read from $dir")
+    }
+    assert(!dir.exists(), s"$dir survived its scope")
   }
 
   test("store dirs sit under this process's own root") {

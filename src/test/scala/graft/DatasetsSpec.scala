@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Petastorm-layout detection + rank-sharded reads
   * (reference: maggy/core/patching/dataloader.py:99-137). */
-class DatasetsSpec extends AnyFunSuite {
+class DatasetsSpec extends AnyFunSuite with ScratchRoot {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -21,7 +21,7 @@ class DatasetsSpec extends AnyFunSuite {
   private def writeDataset(tag: String, nFiles: Int): String = {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(s"graft_ds_$tag").toString
+    val dir = scratchDir(s"ds_$tag")
     (1L to 1000L).toDF("id").repartition(nFiles)
       .write.mode("overwrite").parquet(dir)
     dir
@@ -62,7 +62,7 @@ class DatasetsSpec extends AnyFunSuite {
   test("partitionBy layouts: listing recurses, shards cover, partition column survives") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft_ds_part").toString
+    val dir = scratchDir("ds_part")
     (1L to 300L).map(i => (i, (i % 3).toString)).toDF("id", "p")
       .repartition(4).write.mode("overwrite").partitionBy("p").parquet(dir)
     val files = Datasets.dataFiles(spark, dir)

@@ -18,7 +18,7 @@ object LagomSpec {
 /** End-to-end lagom experiments on local[2] (SURVEY §5.2.4): deterministic
   * train fns with analytically known optima; assertions are set-level
   * (async assignment is timing-dependent — SURVEY §7.4.4). */
-class LagomSpec extends AnyFunSuite {
+class LagomSpec extends AnyFunSuite with ScratchRoot {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -141,7 +141,7 @@ class LagomSpec extends AnyFunSuite {
   }
 
   test("experiment persistence: result.json + per-trial logs land in logDir") {
-    val logDir = s"${sys.props("java.io.tmpdir")}/graft_logs_${System.nanoTime()}"
+    val logDir = scratch("logs")
     object LoggingFn extends TrainFn {
       def apply(ctx: TrialContext): Double = {
         ctx.reporter.log(s"starting trial ${ctx.trialId}")
@@ -305,8 +305,9 @@ class LagomSpec extends AnyFunSuite {
         round2
       }
     }
+    val gangLogs = scratch("gang_test")
     val res = Graft.gang(spark, DistributedConfig(worldSize = 2,
-      logDir = Some(s"${sys.props("java.io.tmpdir")}/graft_gang_test")))(AllReduceFn)
+      logDir = Some(gangLogs)))(AllReduceFn)
     assert(res.workers.map(_.rank) == IndexedSeq(0, 1))
     // both all-reduce rounds produced the same agreed total on every worker
     assert(res.workers.forall(_.metric == 6.0), res.workers.toString)
@@ -318,7 +319,7 @@ class LagomSpec extends AnyFunSuite {
       s"gather finished before some worker started: $res")
     // persisted like any experiment (reference writes result.json)
     val json = java.nio.file.Files.readString(java.nio.file.Paths.get(
-      s"${sys.props("java.io.tmpdir")}/graft_gang_test/result.json"))
+      s"$gangLogs/result.json"))
     assert(json.contains("\"world_size\": 2") && json.contains("\"avg_metric\": 6.0"))
   }
 
@@ -331,7 +332,7 @@ class LagomSpec extends AnyFunSuite {
     val sqlc = spark
     import sqlc.implicits._
     import graft.sources.{Datasets, TfRecordFormat}
-    val dir = java.nio.file.Files.createTempDirectory("graft_gang_ds").toString
+    val dir = scratchDir("gang_ds")
     (1L to 1000L).toDF("id").repartition(5)
       .write.mode("overwrite").format("tfrecord").save(dir)
     val files = Datasets.dataFiles(spark, dir).map(_.stripPrefix("file:"))
@@ -443,7 +444,7 @@ class LagomSpec extends AnyFunSuite {
         Map("val_acc" -> -(x - 3.2) * (x - 3.2), "train_loss" -> x * 0.1)
       }
     }
-    val logDir = java.nio.file.Files.createTempDirectory("graft-multi").toString
+    val logDir = scratchDir("multi")
     val res = Graft.lagomMultiLocal(HyperparameterOptConfig(
       numTrials = 6, optimizer = "randomsearch", searchspace = space,
       direction = Direction.Max, optimizationKey = "val_acc", esPolicy = "none",
@@ -487,7 +488,7 @@ class LagomSpec extends AnyFunSuite {
 
   test("TensorBoard hparams event files: framing, plugin headers, domains, sessions") {
     import graft.exec.TbHparams
-    val logDir = java.nio.file.Files.createTempDirectory("graft-tb").toString
+    val logDir = scratchDir("tb")
     val mixedSpace = Searchspace(Seq(
       DoubleParam("lr", 0.001, 0.1), IntParam("layers", 1, 4),
       CategoricalParam("opt", Seq("sgd", "adam"))))

@@ -6,14 +6,13 @@ import graft.core.HParam._
 import graft.exec.TrialContext
 import graft.ml.{MllibLagom, MllibTrain, MllibTrainConfig, MllibTrainFn}
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** E2e MLlib training driver: distributed HP search over an MLlib estimator
   * (the north star's Spark-native replacement for the reference's Torch/TF
   * distributed executors) plus LOCO feature/stage ablation of a Pipeline.
   */
-class MllibSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MllibSpec extends AnyFunSuite with ScratchRoot {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -28,7 +27,7 @@ class MllibSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val Array(trainDf, testDf) = lineitem.randomSplit(Array(0.8, 0.2), seed = 42L)
 
   // the suite's one persist goes with it, not with the shared session
-  override def afterAll(): Unit = lineitem.unpersist()
+  override def afterAll(): Unit = try lineitem.unpersist() finally super.afterAll()
 
   test("lagom-style HP search tunes LogisticRegression regParam/elasticNet") {
     object Fit extends MllibTrainFn {
@@ -99,7 +98,7 @@ class MllibSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Env abstraction: fs round-trip and executor discovery") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_env_${System.nanoTime()}"
+    val dir = scratch("env")
     import graft.exec.Env
     assert(!Env.exists(spark, dir))
     assert(Env.mkdirs(spark, dir))

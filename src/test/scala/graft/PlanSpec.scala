@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression tests (SURVEY §2.B A5 "plan check" + the scale
@@ -11,22 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite can't catch a plan regression (the answer stays right while the
   * 100 TB behavior collapses); this one does.
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanSpec extends AnyFunSuite with ScratchRoot {
 
   // t14's builder eagerly checkpoints its gram counts even for plan-only
   // inspection — release what the suite registered at suite end
-  override def afterAll(): Unit = {
-    graft.data.Frames.releaseAll()
-    // the per-run warehouse (bucketed j12/orders_bkt tables) would
-    // otherwise accumulate one copy per suite run — but only delete it if
-    // the shared getOrCreate session actually took THIS suite's per-run
-    // config (another suite may have created the session first, in which
-    // case the conf points at that session's live warehouse and deleting
-    // it would break its registered tables mid-run)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    if (new java.io.File(wh).getName.startsWith("graft_warehouse_"))
-      graft.data.Frames.deleteRecursively(new java.io.File(wh))
-  }
+  // The per-run warehouse (bucketed j12/orders_bkt tables) sits under the
+  // suite's scratch root. It is only used, and so only deleted with the
+  // root, if the shared getOrCreate session took THIS suite's config;
+  // otherwise the session's warehouse belongs to whichever suite built it.
+  override def afterAll(): Unit = try graft.data.Frames.releaseAll() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -37,7 +29,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir",
-      s"${sys.props("java.io.tmpdir")}/graft_warehouse_${System.nanoTime()}")
+      scratch("warehouse"))
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * multi-micro-batch replay — a single AvailableNow batch would not
   * exercise cross-trigger state at all.
   */
-class StreamingSuite extends AnyFunSuite {
+class StreamingSuite extends AnyFunSuite with ScratchRoot {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -122,7 +122,7 @@ class StreamingSuite extends AnyFunSuite {
     // split events into 4 parquet files; maxFilesPerTrigger=1 forces 4
     // triggers, so per-user state MUST carry across micro-batches to get
     // the right totals
-    val splitDir = s"${sys.props("java.io.tmpdir")}/graft_fsm_split_${System.nanoTime()}"
+    val splitDir = scratch("fsm_split")
     spark.read.parquet(s"$sf/events.parquet").repartition(4)
       .write.mode("overwrite").parquet(splitDir)
     val raw = spark.readStream
@@ -142,7 +142,7 @@ class StreamingSuite extends AnyFunSuite {
   }
 
   test("transformWithState counts survive across micro-batches (4-file replay)") {
-    val splitDir = s"${sys.props("java.io.tmpdir")}/graft_tws_split_${System.nanoTime()}"
+    val splitDir = scratch("tws_split")
     spark.read.parquet(s"$sf/events.parquet").repartition(4)
       .write.mode("overwrite").parquet(splitDir)
     val key = "spark.sql.streaming.stateStore.providerClass"
@@ -177,7 +177,7 @@ class StreamingSuite extends AnyFunSuite {
     // random 4-way split scatters each user's events across triggers, so a
     // session seen partially in batch 1 and partially in batch 3 MUST merge
     // in the state store to reproduce the batch gaps-and-islands answer
-    val splitDir = s"${sys.props("java.io.tmpdir")}/graft_sess_split_${System.nanoTime()}"
+    val splitDir = scratch("sess_split")
     spark.read.parquet(s"$sf/events.parquet").repartition(4)
       .write.mode("overwrite").parquet(splitDir)
     val raw = spark.readStream
@@ -204,7 +204,7 @@ class StreamingSuite extends AnyFunSuite {
     // drop exactly the duplicates when replays arrive within the watermark
     // — the declared query's dropDuplicatesWithinWatermark shape (plain
     // keyed dropDuplicates would never evict: see the continuous test)
-    val dupDir = s"${sys.props("java.io.tmpdir")}/graft_dup_${System.nanoTime()}"
+    val dupDir = scratch("dup")
     val base = spark.read.parquet(s"$sf/events.parquet")
     base.unionAll(base).write.mode("overwrite").parquet(dupDir)
     val stream = spark.readStream
@@ -225,7 +225,7 @@ class StreamingSuite extends AnyFunSuite {
     // against the rate source, and their state stores must PLATEAU —
     // watermarks evict dedup keys and closed sessions; the FSM's state
     // tracks the (bounded) keyspace, not the (unbounded) event count.
-    val tmp = s"${sys.props("java.io.tmpdir")}/graft_cont_${System.nanoTime()}"
+    val tmp = scratch("cont")
     val dupEvents = StreamPlateau.dupEvents(spark)
     val dedup = dupEvents
       .withWatermark("ts", "5 seconds")

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * loco.py:53-74); framing + Example proto shape are public TensorFlow
   * formats (io/record_writer.cc, core/example/feature.proto).
   */
-class TfRecordSpec extends AnyFunSuite {
+class TfRecordSpec extends AnyFunSuite with ScratchRoot {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -26,7 +26,7 @@ class TfRecordSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft_tfr_$tag").toString
+    scratchDir(s"tfr_$tag")
 
   test("framing: records round-trip through the masked-CRC32C framing") {
     val payloads = Seq("", "a", "hello tfrecord", "x" * 10000)
