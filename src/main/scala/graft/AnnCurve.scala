@@ -3,6 +3,7 @@ package graft
 import graft.data.Tables
 import graft.llm.{IvfIndex, PqIndex, Similarity}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** ANN recall/latency operating curve: sweeps the IVFPQ knobs
   * (codebook resolution ksub × rotation × nProbe × shortlist) against
@@ -265,7 +266,7 @@ object AnnCurve {
       @volatile var tA2 = 0.0
       val appender = new Thread(() =>
         try { val (_, t) = timed(PqIndex.appendIvfPq(ivfA, afterB1, day3, dir, batchId = 2)); tA2 = t }
-        catch { case e: Throwable => appendErr = Some(e) })
+        catch { case NonFatal(e) => appendErr = Some(e) })
       appender.start()
       val during = scala.collection.mutable.ArrayBuffer.empty[(Set[(Long, Long)], Double)]
       while (appender.isAlive) during += probeRun()
@@ -372,7 +373,7 @@ object AnnCurve {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get("/proc/sys/vm/drop_caches"), "3")
         Thread.sleep(500); true
-      } catch { case _: Throwable => false }
+      } catch { case NonFatal(_) => false }
 
     if (preset == "qps" || preset == "cold") {
       // the fixed crossover operating point (scale_r12/ann_curve_vec2m:

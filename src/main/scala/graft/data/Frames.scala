@@ -79,8 +79,6 @@ object Frames {
         winner.fold(v) { w => release(v); w }
     }
 
-  def contains(key: Key): Boolean = synchronized(entries.contains(key))
-
   /** Register `value` under `key`, releasing the entry it supersedes (a
     * store that moved on: an appended index, a fan-out of a new file set). */
   def replace[T](key: Key)(value: T)(release: T => Unit): T = {

@@ -9,6 +9,7 @@ import java.security.SecureRandom
 import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Driver-side experiment server (reference: maggy/core/rpc.py:260-511 +
   * maggy/core/experiment_driver/).
@@ -82,8 +83,8 @@ final class DriverServer(
         t.setDaemon(true)
         t.start()
       } catch {
-        case _: Throwable if !running => // closed
-        case e: Throwable => if (running) Console.err.println(s"[graft-server] accept: $e")
+        case NonFatal(_) if !running => // closed
+        case NonFatal(e) => if (running) Console.err.println(s"[graft-server] accept: $e")
       }
     }
 
@@ -182,7 +183,7 @@ final class DriverServer(
       // connection (no ack → executor hb thread dies → STOP undeliverable,
       // and the post-trial drain would fail the whole partition task).
       try logSink(msg("trial_id"), msg.getOrElse("text", ""))
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         Console.err.println(s"[graft-server] logSink threw: $e")
       }
       // `metric <k>=<v>` lines (Reporter.logMetric — the non-driving metrics

@@ -98,7 +98,7 @@ private[exec] final class RpcChannel(host: String, port: Int, secret: String) {
         case e: java.io.IOException =>
           attempts += 1
           if (attempts > 3) throw e
-          try connect() catch { case _: Throwable => Thread.sleep(500) }
+          try connect() catch { case NonFatal(_) => Thread.sleep(500) }
       }
     }
     throw new IllegalStateException("unreachable")
@@ -189,7 +189,7 @@ object TrialExecutor {
               try trainFn(ctx)
               catch {
                 case es: EarlyStopException => earlyStopped = true; es.lastMetric
-                case _: Throwable =>
+                case NonFatal(_) =>
                   // a throwing train fn fails ONE trial, not the executor:
                   // report ERROR and keep pulling (the driver drops the trial
                   // from the busy store; reference maggy/core/rpc.py:415-437)

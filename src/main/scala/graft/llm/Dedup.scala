@@ -969,25 +969,7 @@ object Dedup {
     *     fingerprint-store note. */
   private def crossScoredPairs(docs: DataFrame, aIds: DataFrame,
       bIds: DataFrame, threshold: Double): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"prefix filter needs a jaccard threshold in (0, 1], got $threshold")
-    import org.apache.spark.sql.expressions.Window
-    val tok = sharedTokens(docs)
-    // global df gives the total order (df asc, h asc — h is distinct within
-    // a doc, so ranks are deterministic); BOTH sides rank under the same
-    // order or the prefix theorem does not hold
-    val dfTab = tok.groupBy("h").agg(count(lit(1)).as("df"))
-    val byRarity = Window.partitionBy("doc_id").orderBy(col("df"), col("h"))
-    val perDoc = Window.partitionBy("doc_id")
-    // materialized once (r18): prefA and prefB below both derive from this
-    // frame — without lineage truncation the posting explode + df agg +
-    // rank window planned as TWO full copies, one under the broadcast and
-    // one streaming (the exactPairsPrefix finding, cross-side variant)
-    val prefix = Frames.trackedCheckpoint(tok.join(dfTab, "h")
-      .select(col("doc_id"), col("h"),
-        row_number().over(byRarity).as("rk"),
-        count(lit(1)).over(perDoc).as("n"))
-      .filter(col("rk") <= col("n") - ceil(col("n") * threshold) + 1))
+    val prefix = prefixTable(docs, threshold)
     val prefA = prefix.join(aIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("h"), col("rk").as("rk_a"), col("n").as("n_a"))
     val prefB = prefix.join(bIds, Seq("doc_id"), "left_semi")
@@ -1011,15 +993,55 @@ object Dedup {
       .select(col("doc_id"), col("sh").as("sh_a"))
     val shB = sh.join(bIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("other"), col("sh").as("sh_b"))
-    cands
-      .join(shB.hint("shuffle_hash"), Seq("other"))
-      .join(broadcast(shA), Seq("doc_id"))
-      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .select(col("doc_id"), col("other"),
-        round(col("n_inter") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")), 6).as("jaccard"))
+    withJaccard(cands
+        .join(shB.hint("shuffle_hash"), Seq("other"))
+        .join(broadcast(shA), Seq("doc_id")), "sh_a", "sh_b")
+      .select("doc_id", "other", "jaccard")
       .filter(col("jaccard") >= threshold)
   }
+
+  /** The PPJoin prefix table of `docs` at `threshold`: each doc's
+    * (1−t)·n+1 RAREST shingles as (doc_id, h, rk, n) — rk its rank under
+    * the global (df asc, h asc) order, n its set size. Both join sides of
+    * [[crossScoredPairs]] and [[exactPairsPrefix]] rank under this one
+    * order (h is distinct within a doc, so ranks are deterministic), or the
+    * prefix theorem does not hold.
+    *
+    * MATERIALIZED once (r18, §2.4/§1.2): each caller references the table
+    * twice, and without lineage truncation the whole pipeline above it —
+    * posting explode, the df aggregation (itself a second posting
+    * explode), the rank/size window sort — planned as TWO full copies, one
+    * per join side (plans/r18/d4b_jaccard_prefix_before: nodes 1-22 and
+    * 23-44 are byte-identical subtrees). The checkpoint holds the prefix
+    * rows only — ~20% of the posting table — and releases with the query's
+    * tracked frames. */
+  private def prefixTable(docs: DataFrame, threshold: Double): DataFrame = {
+    require(threshold > 0 && threshold <= 1,
+      s"prefix filter needs a jaccard threshold in (0, 1], got $threshold")
+    import org.apache.spark.sql.expressions.Window
+    val tok = sharedTokens(docs)
+    val dfTab = tok.groupBy("h").agg(count(lit(1)).as("df"))
+    val byRarity = Window.partitionBy("doc_id").orderBy(col("df"), col("h"))
+    val perDoc = Window.partitionBy("doc_id")
+    Frames.trackedCheckpoint(tok.join(dfTab, "h")
+      .select(col("doc_id"), col("h"),
+        row_number().over(byRarity).as("rk"),
+        count(lit(1)).over(perDoc).as("n"))
+      .filter(col("rk") <= col("n") - ceil(col("n") * threshold) + 1))
+  }
+
+  /** `pairs` plus the exact verify score of its shingle-set columns `a`
+    * and `b`: jaccard = round(|a∩b| / (|a|+|b|−|a∩b|), 6), the one rule of
+    * every verified pair in the dedup family (d3/d4b/d6b/d8b, the x10b and
+    * x11b near-checks). Callers threshold the ROUNDED value, so a raw ratio
+    * in [0.7999995, 0.8) drops on every path alike — x11b's stage 03c is
+    * spec-locked against d8b on exactly that. |a∩b| is its own column so
+    * the set intersection runs once per row. */
+  private[graft] def withJaccard(pairs: DataFrame, a: String, b: String): DataFrame =
+    pairs.withColumn("n_inter", size(array_intersect(col(a), col(b))).cast("double"))
+      .withColumn("jaccard", round(col("n_inter") /
+        (size(col(a)) + size(col(b)) - col("n_inter")), 6))
+      .drop("n_inter")
 
   /** Exact all-pairs n-gram Jaccard ≥ threshold via the inverted shingle
     * index (see the d4 comment for the plan rationale). Output:
@@ -1045,26 +1067,7 @@ object Dedup {
     * pass over the cached shingle arrays. Output matches
     * [[exactNgramJaccardPairs]]: (doc_a, doc_b, jaccard), doc_a < doc_b. */
   def exactPairsPrefix(docs: DataFrame, threshold: Double): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"prefix filter needs a jaccard threshold in (0, 1], got $threshold")
-    import org.apache.spark.sql.expressions.Window
-    val tok = sharedTokens(docs)
-    val dfTab = tok.groupBy("h").agg(count(lit(1)).as("df"))
-    val byRarity = Window.partitionBy("doc_id").orderBy(col("df"), col("h"))
-    val perDoc = Window.partitionBy("doc_id")
-    // MATERIALIZED once (r18, §2.4/§1.2): the self-join below references
-    // the prefix table twice, and without lineage truncation the whole
-    // pipeline above it — posting explode, the df aggregation (itself a
-    // second posting explode), the rank/size window sort — planned as TWO
-    // full copies, one per join side (plans/r18/d4b_jaccard_prefix_before:
-    // nodes 1-22 and 23-44 are byte-identical subtrees). The checkpointed
-    // table is the (1−t)·n prefix rows only — ~20% of the posting table —
-    // and releases with the query's tracked frames.
-    val prefix = Frames.trackedCheckpoint(tok.join(dfTab, "h")
-      .select(col("doc_id"), col("h"),
-        row_number().over(byRarity).as("rk"),
-        count(lit(1)).over(perDoc).as("n"))
-      .filter(col("rk") <= col("n") - ceil(col("n") * threshold) + 1))
+    val prefix = prefixTable(docs, threshold)
     val a = prefix.select(col("doc_id").as("doc_a"), col("h"),
       col("rk").as("rk_a"), col("n").as("n_a"))
     val b = prefix.select(col("doc_id").as("doc_b"), col("h"),
@@ -1088,15 +1091,12 @@ object Dedup {
     // two shuffle-hash attaches (only the KB-per-doc array tables and the
     // prefix-bounded candidate rows move; nothing fat is ever sorted)
     val sh = sharedShingles(docs)
-    cands
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-        .hint("shuffle_hash"), Seq("doc_b"))
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-        .hint("shuffle_hash"), Seq("doc_a"))
-      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("n_inter") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")), 6).as("jaccard"))
+    withJaccard(cands
+        .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
+          .hint("shuffle_hash"), Seq("doc_b"))
+        .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
+          .hint("shuffle_hash"), Seq("doc_a")), "sh_a", "sh_b")
+      .select("doc_a", "doc_b", "jaccard")
       .filter(col("jaccard") >= threshold)
   }
 
@@ -1185,63 +1185,23 @@ object Dedup {
   //   dedup.sigs   — the minhash signature table (doc_id, m0..m63):
   //     signatures are a doc-LOCAL function of the doc's shingles, so every
   //     consumer over the same corpus (the inline LSH pair path, the
-  //     incremental batch-signature path, and any SUBSET of the corpus via
-  //     a doc_id semi-join) reads one table instead of re-running the
-  //     64-permutation aggregation per query.
+  //     incremental batch-signature path, the ledger build and appends, and
+  //     any SUBSET of the corpus via a doc_id semi-join) reads one table
+  //     instead of re-running the 64-permutation aggregation per query.
+  //     One persist at DISK_ONLY for every corpus size: the block manager
+  //     owns the files, no heap is pinned at any scale (a ~0.5 KB sig row
+  //     per doc is GBs of storage region past a few million docs), and the
+  //     consumers' plans read a flat cached relation, never the corpus-wide
+  //     aggregation subtree. DISK_ONLY against MEMORY_AND_DISK on the 50k-doc
+  //     ScaleGen sf1 corpus: scale_dedup/sig_storage_level_sf1.json.
   // First consumer pays (the fingerprint-store design: a deployment
   // materializes exactly this); the owning scope releases.
   private def cached(kind: String, docs: DataFrame, params: Any*)(build: => DataFrame): DataFrame =
     Frames.getOrCreate(Frames.Key(kind, Frames.corpusKey(docs), params: _*))(build)(Frames.release)
 
-  /** Row bound for PERSISTING the shared signature table (the
-    * IvfIndex.AssignedCacheMaxRows rule: never pin what a map stage
-    * rebuilds from an already-cached input for less than the cache's IO).
-    * A sig row is ~0.5 KB (64 longs); past ~2M docs the persist pins GBs
-    * of the heap's storage region against every later suite line —
-    * measured at the 5M-doc sf100 slice: d6b 59.8 → 120 s and the x11
-    * ledger build OOMed outright with the unconditional persist. Above
-    * the bound the store is DISK-BACKED (r18): one standalone
-    * materialization writes the aggregation to a per-corpus parquet under
-    * the Frames store root and every consumer reads that flat scan —
-    * sharing without the heap pin, deleted at release. */
-  private[graft] val SigCacheMaxRows = 2000000L
-
-  // one doc-count probe per corpus (drives the sig-persist and the
-  // subset-sharing dispatches below). docs.count() — an upper bound on
-  // shingle rows (under-3-token docs drop out) and a cheap count-agg /
-  // metadata scan — NOT sharedShingles(docs).count(): that probe
-  // materialized the FULL corpus shingle checkpoint (tokenize + pin the
-  // arrays) just to learn the row count, even when the dispatch then
-  // rejected the cache (r18, advice — the >2M-doc path paid the exact
-  // cost the bound exists to avoid).
-  private def cachedShingleCount(docs: DataFrame): Long =
-    Frames.getOrCreate(Frames.Key("dedup.doc_count", Frames.corpusKey(docs)))(docs.count())(_ => ())
-
-  private[graft] def sharedMinhashSigs(docs: DataFrame): DataFrame =
-    cached("dedup.sigs", docs) {
-      if (cachedShingleCount(docs) <= SigCacheMaxRows)
-        minhashAgg(sharedTokens(docs)).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sigStore(docs)
-    }
-
-  /** The DISK-BACKED signature store above [[SigCacheMaxRows]] (r18): the
-    * x11-ledger idiom applied to the shared sig table. One standalone
-    * materialization writes the 64-min aggregation to a per-corpus parquet
-    * under the [[Frames]] store root; every consumer then reads a flat
-    * parquet scan — the sharing survives 100 TB corpora without pinning
-    * the storage region (the r17 unconditional persist pushed the 5M-doc
-    * sf100 slice into OOM), and composed consumers never inline the
-    * corpus-wide agg subtree into their own plans (the other half of that
-    * OOM). Deleted when its owning scope releases it — never a cross-run
-    * result cache. */
-  private[graft] def sigStore(docs: DataFrame): DataFrame = {
-    val key = Frames.corpusKey(docs)
-    val dir = Frames.storeDir("sigstore", key)
-    Frames.getOrCreate(Frames.Key("dedup.sigstore", key))({
-      minhashAgg(sharedTokens(docs)).write.mode("overwrite").parquet(dir)
-      docs.sparkSession.read.parquet(dir)
-    })(_ => Frames.deleteRecursively(new java.io.File(dir)))
-  }
+  private def sharedMinhashSigs(docs: DataFrame): DataFrame =
+    cached("dedup.sigs", docs)(
+      minhashAgg(sharedTokens(docs)).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
 
   /** Shared exploded (doc_id, h) distinct-shingle-hash pairs. The shingle
     * ARRAYS are localCheckpoint'ed (raw row blocks — no columnar array
@@ -1255,7 +1215,7 @@ object Dedup {
 
   /** The cached (doc_id, sh: array<long>) shingle-set rows themselves —
     * for consumers that need per-doc SETS (candidate verification's
-    * array_intersect) rather than the exploded posting view. */
+    * set intersection) rather than the exploded posting view. */
   private def sharedShingles(docs: DataFrame): DataFrame =
     cached("dedup.tokens", docs)(shingleSets(fanOut(docs)).localCheckpoint())
 
@@ -1659,8 +1619,8 @@ object Dedup {
 
   /** 64 min-aggregate columns m0..m63 over a (doc_id, h) token frame —
     * THE minhash signature definition, shared verbatim by the inline pair
-    * path ([[bandedLshPairs]]) and the persisted-store path
-    * ([[minhashSignatures]]) so fresh and persisted signatures agree
+    * path ([[bandedLshPairs]]) and the signature-array path
+    * ([[minhashSignaturesAmong]]) so banded and persisted signatures agree
     * bit-for-bit. r is projected ONCE per token row (not once per
     * permutation) before the partial-aggregated groupBy. */
   private def minhashAgg(tok: DataFrame): DataFrame = {
@@ -1724,22 +1684,6 @@ object Dedup {
           hx => shiftleft(conv(substring(hx, 1, 8), 16, 10).cast("long"), 32)
             .bitwiseOR(conv(substring(hx, 9, 8), 16, 10).cast("long")))).as("sh"): _*)
 
-  /** Per-doc 64-minhash signature ARRAY — the PERSISTABLE fingerprint-store
-    * column the incremental near-check (x11b) bands against WITHOUT
-    * re-scanning corpus text: ~64 longs/doc vs the doc's full text, the
-    * reason a deployment's dedup store stays KB-per-MB of corpus. Exactly
-    * the hash family and grouping of [[bandedLshPairs]]' inline signatures,
-    * so bands derived from a persisted array and bands computed fresh from
-    * text agree bit-for-bit. Docs under 3 tokens have no shingles and no
-    * row here (they cannot be shingle near-dups of anything). Its callers
-    * hand it a one-off subset frame, so the shingle checkpoint behind it is
-    * the caller's tracked checkpoint, not a shared per-corpus cache. */
-  private[graft] def minhashSignatures(docs: DataFrame): DataFrame =
-    minhashAgg(Frames.trackedCheckpoint(shingleSets(fanOut(docs)))
-        .select(col("doc_id"), explode(col("sh")).as("h")))
-      .select(col("doc_id"),
-        array((0 until NumHashes).map(i => col(s"m$i")): _*).as("sig"))
-
   /** LSH band keys from a signature ARRAY (persisted or fresh):
     * (doc_id, band, bh). Same banding arithmetic as [[bandedLshPairs]]. */
   private[graft] def bandsFromSignature(sig: DataFrame): DataFrame = {
@@ -1795,40 +1739,19 @@ object Dedup {
       bandedLshPairsImpl(docs, jaccardThreshold, maxBucketSize)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** [[bandedLshPairs]] among a SUBSET of an already-shingled corpus:
-    * shingles and minhash signatures are doc-LOCAL functions of each doc's
-    * text, so the cached full-corpus frames restricted by a doc_id
-    * semi-join are bit-identical to re-deriving them from the subset's
-    * text — the banding, bucket cap and verification then run over subset
-    * rows only, exactly as if the subset were shingled fresh (r17: x10b's
-    * stage-03b re-tokenized and re-aggregated ~90% of the corpus it had
-    * already fingerprinted). */
-  /** Whether subset consumers should read THROUGH the shared corpus sig
-    * store: always below the persist bound (the r17 dispatch), and above
-    * it whenever the corpus-wide caches are already warm — the sig store
-    * is then one aggregation over cached tokens spilled to parquet
-    * ([[sharedMinhashSigs]]' disk-backed branch), after which every
-    * consumer reads a flat scan. Cold + above-bound stays subset-fresh: an
-    * isolated day-N append must never pay a full-corpus pass to
-    * fingerprint a 1% batch. */
-  private def sigShareable(corpus: DataFrame): Boolean = {
-    val k = Frames.corpusKey(corpus)
-    Frames.contains(Frames.Key("dedup.sigs", k)) || Frames.contains(Frames.Key("dedup.tokens", k)) ||
-      cachedShingleCount(corpus) <= SigCacheMaxRows
-  }
-
-  /** [[minhashSignatures]] for a SUBSET of an already-cached corpus — the
-    * sig store restricted by a doc_id semi-join (signatures are doc-local;
-    * see [[bandedLshPairsAmong]]). Above [[SigCacheMaxRows]] the store is
-    * parquet-backed (r18), so the consumer's plan stays a flat scan —
-    * inlining a corpus-wide aggregation subtree into the composed
-    * consumer's plan measured as an OOM at the 5M-doc sf100 slice. */
+  /** Per-doc 64-minhash signature ARRAY of the `memberIds` docs of
+    * `corpus` — the PERSISTABLE fingerprint-store column the incremental
+    * near-check (x11b) and the ledger bands against WITHOUT re-scanning
+    * corpus text: ~64 longs/doc vs the doc's full text, the reason a
+    * deployment's dedup store stays KB-per-MB of corpus. It is the shared
+    * sig table restricted by a doc_id semi-join: signatures are doc-LOCAL,
+    * so the rows equal the subset's own signatures bit-for-bit (DataPlaneSpec
+    * pins it). Docs under 3 tokens have no shingles and no row here (they
+    * cannot be shingle near-dups of anything). */
   def minhashSignaturesAmong(corpus: DataFrame, memberIds: DataFrame): DataFrame =
-    if (sigShareable(corpus))
-      sharedMinhashSigs(corpus).join(memberIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"),
-          array((0 until NumHashes).map(i => col(s"m$i")): _*).as("sig"))
-    else minhashSignatures(corpus.join(memberIds, Seq("doc_id"), "left_semi"))
+    sharedMinhashSigs(corpus).join(memberIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"),
+        array((0 until NumHashes).map(i => col(s"m$i")): _*).as("sig"))
 
   /** [[shingleSets]] for a SUBSET of an already-cached corpus — the cached
     * per-doc shingle arrays restricted by a doc_id semi-join, avoiding a
@@ -1836,22 +1759,22 @@ object Dedup {
   def shingleSetsAmong(corpus: DataFrame, memberIds: DataFrame): DataFrame =
     sharedShingles(corpus).join(memberIds, Seq("doc_id"), "left_semi")
 
+  /** [[bandedLshPairs]] among a SUBSET of `corpus`: shingles and minhash
+    * signatures are doc-LOCAL functions of each doc's text, so the shared
+    * corpus tables restricted by a doc_id semi-join are bit-identical to
+    * re-deriving them from the subset's text — the banding, bucket cap and
+    * verification then run over subset rows only, exactly as if the subset
+    * were shingled fresh (r17: x10b's stage-03b re-tokenized and
+    * re-aggregated ~90% of the corpus it had already fingerprinted). */
   def bandedLshPairsAmong(
       corpus: DataFrame,
       memberIds: DataFrame,
       jaccardThreshold: Double,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    if (sigShareable(corpus))
-      bandedLshPairsFrom(
-        sharedMinhashSigs(corpus).join(memberIds, Seq("doc_id"), "left_semi"),
-        sharedShingles(corpus).join(memberIds, Seq("doc_id"), "left_semi"),
-        jaccardThreshold, maxBucketSize)
-    else // above the bound with cold corpus caches: the pre-r17 shape
-         // (subset re-derived from text; its sig agg materializes
-         // standalone — an isolated subset consumer never pays a
-         // full-corpus pass)
-      bandedLshPairs(corpus.join(memberIds, Seq("doc_id"), "left_semi"),
-        jaccardThreshold, maxBucketSize)
+    bandedLshPairsFrom(
+      sharedMinhashSigs(corpus).join(memberIds, Seq("doc_id"), "left_semi"),
+      sharedShingles(corpus).join(memberIds, Seq("doc_id"), "left_semi"),
+      jaccardThreshold, maxBucketSize)
 
   private def bandedLshPairsImpl(
       docs: DataFrame,
@@ -1883,12 +1806,10 @@ object Dedup {
           b => struct(a.as("doc_a"), b.as("doc_b")))))).as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
-    cands
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("jaccard", round(col("n_inter") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")), 6))
+    withJaccard(cands
+        .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
+        .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b")),
+        "sh_a", "sh_b")
       .filter(col("jaccard") >= jaccardThreshold)
       .select("doc_a", "doc_b", "jaccard")
   }

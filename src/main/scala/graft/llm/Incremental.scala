@@ -170,8 +170,8 @@ object Incremental {
   private def buildLedger(s: SparkSession, d: String, dir: String): Unit =
     // the build runs lazily on first ledger touch, possibly mid-way through
     // a caller's own query: its scope releases exactly the checkpoints it
-    // derived (the fingerprints, a cold signature path's subset shingles),
-    // never the caller's; the shared corpus caches it touches stay shared
+    // derived (the fingerprints), never the caller's; the shared corpus
+    // caches it touches (shingles, the sig table) stay shared
     Frames.checkpointScope("x11 ledger build") {
       val day1 = Tables(s, d, "documents").filter(isDay1)
       val fp = Frames.trackedCheckpoint(day1.select(
@@ -192,8 +192,8 @@ object Incremental {
         .join(broadcast(probeGrams), "h")
         .select("doc_id").distinct()
         .withColumn("contam", lit(true))
-      // day1 ⊂ documents: read the corpus sig store ⋉ day-1 ids when warm
-      // (the bench/Verify session has built it by d0/d6b time) instead of
+      // day1 ⊂ documents: read the corpus sig table ⋉ day-1 ids (built
+      // here on first use, else shared with d3/d6b/d8b) instead of
       // re-tokenizing 80% of the corpus for the ledger's sig column
       val sig = Dedup.minhashSignaturesAmong(
         Tables(s, d, "documents"), day1.select("doc_id"))
@@ -281,10 +281,9 @@ object Incremental {
       val dec = batchDecisions(s, d, batch, ledgerAsOf(s, d, n - 1),
         lshNearCheck = false)
       // signatures are doc-local: batch ⊂ documents, so the appended sig
-      // column reads the corpus sig store ⋉ batch ids when the store is warm
-      // (r18, verdict #5 — the x11b stage-03c sharing extended to the append
-      // path; bit-identical by doc-locality, and the Among dispatch keeps an
-      // isolated cold append batch-local)
+      // column reads the corpus sig table ⋉ batch ids (r18, verdict #5 —
+      // the x11b stage-03c sharing extended to the append path;
+      // bit-identical by doc-locality)
       val sig = Dedup.minhashSignaturesAmong(
         Tables(s, d, "documents"), batch.select("doc_id"))
       dec.select("doc_id", "source", "n_tok", "q", "h", "in3", "in4")
@@ -463,15 +462,10 @@ object Incremental {
         val candC = Dedup.shingleSetsAmong(docs,
             cands.select(col("corpus_id").as("doc_id")))
           .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
-        val nearIds = cands.join(candB, Seq("doc_id")).join(candC, Seq("corpus_id"))
-          .withColumn("n_inter",
-            size(array_intersect(col("sh_b"), col("sh_c"))).cast("double"))
-          // round to 6 dp BEFORE thresholding — bandedLshPairs (the d8b
-          // contract this stage is spec-locked against) compares the
-          // ROUNDED jaccard, so a raw ratio in [0.7999995, 0.8) must drop
-          // on both paths
-          .filter(round(col("n_inter") /
-            (size(col("sh_b")) + size(col("sh_c")) - col("n_inter")), 6) >= 0.8)
+        // d8b's verify rule: this stage is spec-locked against d8b
+        val nearIds = Dedup.withJaccard(
+            cands.join(candB, Seq("doc_id")).join(candC, Seq("corpus_id")), "sh_b", "sh_c")
+          .filter(col("jaccard") >= 0.8)
           .select("doc_id").distinct()
           .withColumn("nd", lit(true))
         withKeep.join(nearIds, Seq("doc_id"), "left_outer")

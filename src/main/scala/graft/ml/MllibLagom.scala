@@ -7,6 +7,7 @@ import graft.optimize._
 import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Driver-side train function for MLlib experiments: unlike the executor-side
   * TrainFn, it receives the SparkSession because fitting an MLlib estimator
@@ -103,7 +104,7 @@ object MllibLagom {
                   val metric = fit(spark, ctx)
                   lock.synchronized { t.finalize_(metric); optimizer.noteFinalized(t) }
                 } catch {
-                  case _: Throwable => lock.synchronized {
+                  case NonFatal(_) => lock.synchronized {
                     t.status = TrialStatus.Error
                     errored += 1
                     optimizer.noteErrored(t)

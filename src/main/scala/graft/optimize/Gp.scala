@@ -5,6 +5,7 @@ import breeze.linalg.{cholesky, DenseMatrix, DenseVector}
 import graft.core._
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Async Gaussian-process Bayesian optimization (reference:
   * maggy/optimizer/bayes/gp.py + bayes/base.py).
@@ -126,7 +127,7 @@ final class Gp(
           val clipped = refined.toArray.map(v => math.min(1.0, math.max(0.0, v)))
           val a = acqAt(clipped)
           if (a > bestAcq) { bestAcq = a; bestX = clipped }
-        } catch { case _: Throwable => () } // line-search failure → keep sampled
+        } catch { case NonFatal(_) => () } // line-search failure → keep sampled
       }
     }
     new Trial(searchspace.inverseTransform(bestX), sampleType = "model")
@@ -290,7 +291,7 @@ object GpRegressor {
       val starts = Seq(gridBest, math.sqrt(gridBest)) // 2 restarts
       val refined = starts.flatMap { s =>
         try Some(math.exp(solver.minimize(negLml, DenseVector(math.log(s)))(0)))
-        catch { case _: Throwable => None }
+        catch { case NonFatal(_) => None }
       }
       (refined :+ gridBest).maxBy(l => build(l)._3)
     }

@@ -67,6 +67,14 @@ object Streams {
 
   private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** The `batch_<id>` dirs a foreachBatch sink wrote under `root`, listed
+    * rather than globbed: with one glob path Spark probes the literal
+    * pattern for a `_spark_metadata` dir and logs a FileNotFoundException. */
+  private def batchDirs(root: String): Seq[String] =
+    Option(new java.io.File(root).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
+      .map(_.getPath).sorted
+
   // schema per staged dir — every declared streaming query re-derives it, and
   // a batch-side parquet footer read per query build is pure constant overhead
   private def sourceSchema(s: SparkSession, dir: java.nio.file.Path): org.apache.spark.sql.types.StructType =
@@ -496,7 +504,7 @@ object Streams {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(s"$sink/batch_*")
+      s.read.parquet(batchDirs(sink): _*)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total"))
     },
@@ -626,15 +634,14 @@ object Streams {
               refineKeep = graft.llm.PqIndex.refineKeep(10))
             .write.mode("overwrite").parquet(s"$out/batch_$batchId")
           Console.err.println(String.format(java.util.Locale.ROOT,
-            "[st_stream_ann] batch %d: %d probes in %.2f s",
-            Long.box(batchId), Long.box(batch.count()),
-            Double.box((System.nanoTime() - t0) / 1e9)))
+            "[st_stream_ann] batch %d in %.2f s",
+            Long.box(batchId), Double.box((System.nanoTime() - t0) / 1e9)))
         }
         .option("checkpointLocation", s"$root/_ckpt")
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(s"$out/batch_*")
+      s.read.parquet(batchDirs(out): _*)
     }
   )
 }

@@ -1830,9 +1830,9 @@ class DataPlaneSpec extends AnyFunSuite with ScratchRoot {
     val corpus = Seq((10L, base), (12L, far)).toDF("doc_id", "text")
     val batch = Seq((109L, near), (119L, "tiny doc here")).toDF("doc_id", "text")
     val dir = scratch("spec_sigstore")
-    Dedup.minhashSignatures(corpus).write.parquet(dir)
+    Dedup.minhashSignaturesAmong(corpus, corpus.select("doc_id")).write.parquet(dir)
     val persisted = spark.read.parquet(dir)
-    val cands = Dedup.bandsFromSignature(Dedup.minhashSignatures(batch))
+    val cands = Dedup.bandsFromSignature(Dedup.minhashSignaturesAmong(batch, batch.select("doc_id")))
       .join(Dedup.bandsFromSignature(persisted)
         .withColumnRenamed("doc_id", "corpus_id"), Seq("band", "bh"))
       .select("doc_id", "corpus_id").distinct()
@@ -2074,24 +2074,25 @@ class DataPlaneSpec extends AnyFunSuite with ScratchRoot {
     graft.data.Frames.deleteRecursively(new java.io.File(base))
   }
 
-  test("a cold subset's signatures give back what they pinned when their scope closes") {
-    // the cold branch of Dedup.minhashSignaturesAmong: the subset's shingle
-    // checkpoint is the caller's, so the scope that ran it releases it
+  test("doc-locality: subset reads of the corpus sig and shingle tables equal the subset as its own corpus") {
+    // the Among consumers read the corpus-wide tables through a doc_id
+    // semi-join, whatever ran before them; the subset frame keys its own
+    // corpus, so the reference comes from the subset's own text
     val docs = Tables(spark, sf, "documents")
-    val ids = docs.filter(col("doc_id") % 3 === 0).select("doc_id")
-    val liveBefore = Frames.live().size
-    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val (n, pinnedInside) = Frames.scope("cold subset signatures") {
-      val n = Dedup.minhashSignatures(docs.join(ids, Seq("doc_id"), "left_semi")).count()
-      (n, Frames.live().filter(_._2 == "cold subset signatures"))
+    val subset = docs.filter(col("doc_id") % 3 === 0)
+    val ids = subset.select("doc_id")
+    assert(Frames.corpusKey(subset) != Frames.corpusKey(docs))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy(df.columns.map(col): _*).collect().toSeq
+    Frames.scope("doc-locality spec") {
+      val sigs = rows(Dedup.minhashSignaturesAmong(docs, ids))
+      assert(sigs.nonEmpty, "the subset produced no signatures")
+      assert(sigs == rows(Dedup.minhashSignaturesAmong(subset, ids)),
+        "corpus sig table ⋉ subset ids differs from the subset's own signatures")
+      val pairs = rows(Dedup.bandedLshPairsAmong(docs, ids, 0.8))
+      assert(pairs.nonEmpty, "the subset has no near-dup pairs to compare")
+      assert(pairs == rows(Dedup.bandedLshPairs(subset, 0.8)),
+        s"subset LSH pairs through the corpus tables differ from the subset's own: $pairs")
     }
-    assert(n > 0, "the subset produced no signatures")
-    // the registry saw what the cold path pinned, owner and block bytes
-    assert(pinnedInside.nonEmpty && pinnedInside.map(_._3).sum > 0,
-      s"the scope's pinned entries read no bytes: $pinnedInside")
-    assert(Frames.live().size == liveBefore, s"entries left behind: ${Frames.live()}")
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
-    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
   }
 
   test("live() names each entry's owner and reads its block bytes") {
@@ -2105,25 +2106,6 @@ class DataPlaneSpec extends AnyFunSuite with ScratchRoot {
       assert(mine.forall(_._3 > 0), s"an entry read no block bytes: $mine")
     }
     assert(!Frames.live().exists(_._2 == "live probe"))
-  }
-
-  test("SigCacheMaxRows: the parquet sig store equals the persisted sig cache and dies with its scope") {
-    // sf0.01 sits below the bound, so sharedMinhashSigs takes the persist
-    // branch; drive the above-bound store directly on the same corpus
-    val docs = Tables(spark, sf, "documents")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
-    val dir = new java.io.File(Frames.storeDir("sigstore", Frames.corpusKey(docs)))
-    Frames.scope("sig store spec") {
-      val persisted = Dedup.sharedMinhashSigs(docs)
-      val stored = Dedup.sigStore(docs)
-      assert(stored.columns.toSeq == persisted.columns.toSeq &&
-        persisted.columns.toSeq == "doc_id" +: (0 until Dedup.NumHashes).map(i => s"m$i"))
-      assert(rows(stored) == rows(persisted), "parquet sig store differs from the persisted cache")
-      assert(dir.getParentFile == Frames.root && dir.isDirectory, s"$dir is not a store under ${Frames.root}")
-      assert(stored.inputFiles.nonEmpty && stored.inputFiles.forall(_.contains(dir.getName)),
-        s"the store is not read from $dir")
-    }
-    assert(!dir.exists(), s"$dir survived its scope")
   }
 
   test("store dirs sit under this process's own root") {
