@@ -35,7 +35,7 @@ object Bpe {
         concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
         .otherwise(concat(acc, array(x))))
 
-  /** Measured-dispatch bound for the trainer (the w3/s2 idiom): a vocab
+  /** Measured-dispatch bound for the trainer (the s2 idiom): a vocab
     * (distinct words) at or under this many rows collects to the driver
     * and the merge loop runs locally — each merge iteration was otherwise
     * a full scheduled Spark job (orderBy.limit(1).collect argmax), ~3 s of

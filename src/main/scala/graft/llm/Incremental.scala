@@ -48,9 +48,9 @@ import org.apache.spark.sql.functions._
   *     fresh batch signatures; candidate pairs — and only candidates —
   *     fetch text for the exact-Jaccard verify (a candidate-restricted
   *     point lookup, not a corpus scan);
-  *   - the tail is x10's: |sources|-row broadcast rates, measured-dispatch
-  *     cap slots, budget-bounded (≤ MixBudget rows at ANY corpus size)
-  *     shuffle/shard windows — single-task by construction.
+  *   - the tail is x10's ([[Pipeline.tailManifest]]): |sources|-row
+  *     broadcast rates, p9's cap slots, budget-bounded (≤ MixBudget rows at
+  *     ANY corpus size) shuffle/shard windows — single-task by construction.
   */
 object Incremental {
 
@@ -71,7 +71,7 @@ object Incremental {
     case _ => throw new IllegalArgumentException(s"no day split declared for batch $n")
   }
 
-  import Pipeline.{MixBudget, SourceCap, hash6, hash6Sql, manifestRow, toks}
+  import Pipeline.{hash6, hash6Sql, manifestRow, toks}
 
   // ---------------------------------------------------------------------
   // the persisted day-1 ledger (build-once per corpus, like IvfIndex)
@@ -518,23 +518,6 @@ object Incremental {
       .select(col("doc_id"), col("source"), col("n_tok").as("n_clean"))
     val merged = survivors(led).union(survivors(bled))
 
-    // ---- stages 06-10: x10's tail over the merged set ----
-    val ct = merged.groupBy("source").agg(count(lit(1)).as("n_docs"),
-      sum(col("n_clean")).cast("long").as("n_tokens"))
-    val mx = Frames.trackedCheckpoint(
-      merged.join(broadcast(Mixture.ratesFor(ct, MixBudget)), "source")
-        .filter(Sampling.keyUniform(col("doc_id")) < col("rate"))
-        .select("doc_id", "source", "n_clean"))
-    val cap = Sampling.sourceSlots(mx, s).filter(col("slot") <= SourceCap)
-      .join(mx.select("doc_id", "n_clean"), "doc_id")
-    val spl = cap.filter(md5(col("doc_id").cast("string")) < "cc")
-    val wEp = org.apache.spark.sql.expressions.Window
-      .orderBy(md5(concat(lit("ep1-"), col("doc_id").cast("string"))), col("doc_id"))
-    val shf = spl.select(col("doc_id"), col("n_clean"),
-      (row_number().over(wEp) - 1).cast("long").as("pos"))
-    val shd = spl.select(col("doc_id"), col("n_clean"),
-      (hash6(col("doc_id")) % 8).as("shard_id"))
-
     (Seq(
       manifestRow("01_batch_ingest", bled, col("n_tok"), hash6(col("doc_id"))),
       manifestRow("02_batch_quality", bled.filter(col("q")), col("n_tok"), hash6(col("doc_id"))),
@@ -544,15 +527,9 @@ object Incremental {
      else Seq.empty) ++
     Seq(
       manifestRow("04_batch_decontam", bled.filter(col("in4")), col("n_tok"), hash6(col("doc_id"))),
-      manifestRow("05_merged_corpus", merged, col("n_clean"), hash6(col("doc_id"))),
-      manifestRow("06_mixture", mx, col("n_clean"), hash6(col("doc_id"))),
-      manifestRow("07_source_cap", cap, col("n_clean"), hash6(col("doc_id"))),
-      manifestRow("08_split_train", spl, col("n_clean"), hash6(col("doc_id"))),
-      manifestRow("09_epoch_shuffle", shf, col("n_clean"),
-        (col("pos") + 1) * (col("doc_id") % 997 + 1)),
-      manifestRow("10_shard", shd, col("n_clean"),
-        (col("shard_id") + 1) * (col("doc_id") % 997 + 1))
-    )).reduce(_.union(_))
+      manifestRow("05_merged_corpus", merged, col("n_clean"), hash6(col("doc_id")))) ++
+    // ---- stages 06-10: x10's tail over the merged set ----
+    Pipeline.tailManifest(merged)).reduce(_.union(_))
   }
 
   // ---------------------------------------------------------------------
@@ -666,6 +643,7 @@ object Incremental {
   private def pipelineSql(batchWhere: String, extraCtes: String,
       dedupHashes: String, mergedLegs: String, lsh: Boolean = false): String = {
     val chk = hash6Sql
+    val (tailCtes, tailRows) = Pipeline.tailSql("merged")
     // stage 03c (x11b): DuckDB recomputes the store-backed LSH near-check
     // from text — banded pairs over batch-survivors ∪ store-survivors
     // (persisted signatures provably equal fresh ones), near = a pair
@@ -708,28 +686,7 @@ object Incremental {
        |b4 AS (SELECT * FROM $b3F WHERE doc_id NOT IN (SELECT doc_id FROM contamb)),
        |merged AS ($mergedLegs
        |           UNION ALL SELECT doc_id, source, n_tok FROM b4),
-       |ct AS (SELECT source, count(*) AS n_docs,
-       |              CAST(sum(n_clean) AS BIGINT) AS n_tokens FROM merged GROUP BY source),
-       |w AS (SELECT source, n_docs,
-       |             sqrt(CAST(n_tokens AS DOUBLE)) /
-       |               sum(sqrt(CAST(n_tokens AS DOUBLE))) OVER () AS wt
-       |      FROM ct),
-       |r AS (SELECT source,
-       |             CASE WHEN $MixBudget * wt / n_docs > 1.0 THEN 1.0
-       |                  ELSE $MixBudget * wt / n_docs END AS rate
-       |      FROM w),
-       |mx AS (SELECT merged.* FROM merged JOIN r USING (source)
-       |       WHERE CAST((doc_id * 2654435761) % 2147483648 AS DOUBLE) / 2147483648 < rate),
-       |cap AS (SELECT doc_id, source, n_clean FROM (
-       |          SELECT *, row_number() OVER (PARTITION BY source
-       |            ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS slot FROM mx)
-       |        WHERE slot <= $SourceCap),
-       |spl AS (SELECT * FROM cap WHERE md5(CAST(doc_id AS VARCHAR)) < 'cc'),
-       |shf AS (SELECT doc_id, n_clean,
-       |               row_number() OVER (ORDER BY md5('ep1-' || CAST(doc_id AS VARCHAR)),
-       |                                  doc_id) - 1 AS pos
-       |        FROM spl),
-       |shd AS (SELECT doc_id, n_clean, $chk % 8 AS shard_id FROM spl)
+       |$tailCtes
        |SELECT '01_batch_ingest' AS stage, count(*) AS n_docs,
        |       CAST(sum(n_tok) AS BIGINT) AS n_tokens,
        |       CAST(sum(doc_id) AS BIGINT) AS id_sum, CAST(sum($chk) AS BIGINT) AS chk
@@ -742,18 +699,7 @@ object Incremental {
        |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM b4
        |UNION ALL SELECT '05_merged_corpus', count(*), CAST(sum(n_clean) AS BIGINT),
        |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM merged
-       |UNION ALL SELECT '06_mixture', count(*), CAST(sum(n_clean) AS BIGINT),
-       |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM mx
-       |UNION ALL SELECT '07_source_cap', count(*), CAST(sum(n_clean) AS BIGINT),
-       |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM cap
-       |UNION ALL SELECT '08_split_train', count(*), CAST(sum(n_clean) AS BIGINT),
-       |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM spl
-       |UNION ALL SELECT '09_epoch_shuffle', count(*), CAST(sum(n_clean) AS BIGINT),
-       |       CAST(sum(doc_id) AS BIGINT),
-       |       CAST(sum((pos + 1) * (doc_id % 997 + 1)) AS BIGINT) FROM shf
-       |UNION ALL SELECT '10_shard', count(*), CAST(sum(n_clean) AS BIGINT),
-       |       CAST(sum(doc_id) AS BIGINT),
-       |       CAST(sum((shard_id + 1) * (doc_id % 997 + 1)) AS BIGINT) FROM shd""".stripMargin
+       |$tailRows""".stripMargin
   }
 
   /** x11's manifest SQL: the full %10==9 batch against the day-1 store. */

@@ -50,28 +50,14 @@ object IvfIndex {
     val km = new KMeans().setK(nClusters).setSeed(42L).setMaxIter(maxIter)
       .setFeaturesCol("features").setPredictionCol("cell")
     val model = km.fit(trainVecs)
-    // Measured dispatch on the ASSIGNED cache (r15): the cell assignment
-    // is a map-only derivation (one broadcast-centroid distance pass), so
-    // below the bound caching it saves the handful of re-derivations the
-    // build makes; above it the cache is a corpus-sized spill for work
-    // that is cheaper to recompute — at 20M×256-d the MEMORY_AND_DISK
-    // blocks spilled ~20 GB and (with the encode shuffle on top)
-    // exhausted local disk, while the recompute pass is seconds of
-    // codegen'd arithmetic. The 100 TB rule: never persist what a map
-    // stage rebuilds from the scan for less than the cache's IO.
-    val assigned0 = model.transform(vecs)
+    // the cell assignment (one broadcast-centroid distance pass) is cached:
+    // the build re-derives it a handful of times
+    val assigned = model.transform(vecs)
       .select(col("vec_id"), col("embedding"), col("cell"))
-    val assigned =
-      if (n <= AssignedCacheMaxRows) assigned0.persist(StorageLevel.MEMORY_AND_DISK)
-      else assigned0
+      .persist(StorageLevel.MEMORY_AND_DISK)
     IvfModel(model.clusterCenters.zipWithIndex.map { case (v, i) => (i, v.toArray) }.toSeq,
       assigned)
   }
-
-  /** Row bound for caching the build-time assignment: vec2m (2M×256-d,
-    * ~2.2 GB cached) measured a net win; 20M spilled ~20 GB for a
-    * recomputable map pass (see [[build]]). */
-  val AssignedCacheMaxRows = 4000000L
 
   /** Route each probe to its nProbe nearest centroids (shared by top-k
     * search, threshold pair generation, and the IVFPQ composition).
@@ -150,7 +136,7 @@ object IvfIndex {
     require(threshold > 0, "norm-hoisted prefilter assumes a positive threshold")
     val routed = route(index, probes, nProbe)
       .withColumn("pnorm", sqrt(Similarity.dotNative(col("pv"), col("pv"))))
-    // measured dispatch (the w3/j2 precedent): one count of the RAW probe
+    // measured dispatch (the j2 precedent): one count of the RAW probe
     // table picks the strategy — route emits exactly
     // min(nProbe, nClusters) rows per probe, so probes × that IS the
     // routed row count, and counting the cheap scan (vs `routed` itself)

@@ -30,10 +30,9 @@ import org.apache.spark.sql.functions._
   *   - the eval holdout's gram index broadcasts (d7b: an eval benchmark
   *     is KB-MB at any corpus size).
   *   - mixture rates are a |sources|-row broadcast (x5); the cap uses
-  *     p9's measured-dispatch slots; everything after the mixture filter
-  *     is budget-bounded (≤ MixBudget rows at ANY corpus size), so
-  *     the tail stages' windows are single-task by CONSTRUCTION, not by
-  *     accident.
+  *     p9's source-slot window; everything after the mixture filter is
+  *     budget-bounded (≤ MixBudget rows at ANY corpus size), so the tail
+  *     stages' windows are single-task by CONSTRUCTION, not by accident.
   *   - the manifest itself aggregates the checkpointed ledger + the
   *     budget-bounded tails: the returned plan contains NO parquet scan
   *     (PlanSpec locks this — no stage re-scans the corpus).
@@ -164,31 +163,7 @@ object Pipeline {
           (col("n_tok") - coalesce(col("n_removed"), lit(0L))).as("n_clean"))
         .withColumn("in5", col("in4") && col("n_clean") >= MinCleanTokens))
 
-    // ---- stage 06: sqrt-temperature mixture under budget (x5-x7) ----
     val s5 = ledger.filter(col("in5"))
-    val ct = s5.groupBy("source").agg(count(lit(1)).as("n_docs"),
-      sum(col("n_clean")).cast("long").as("n_tokens"))
-    val mx = s5.join(broadcast(Mixture.ratesFor(ct, MixBudget)), "source")
-      .filter(Sampling.keyUniform(col("doc_id")) < col("rate"))
-      .select("doc_id", "source", "n_clean")
-
-    // ---- stage 07: per-source cap (p9's measured-dispatch slots) ----
-    val cap = Sampling.sourceSlots(mx, s).filter(col("slot") <= SourceCap)
-      .join(mx.select("doc_id", "n_clean"), "doc_id")
-
-    // ---- stage 08: train split (p7's hash buckets) ----
-    val spl = cap.filter(md5(col("doc_id").cast("string")) < "cc")
-
-    // ---- stages 09-10: epoch shuffle (p8) + shard assignment (x4) ----
-    // the set here is ≤ MixBudget rows at ANY corpus size (the mixture
-    // budget bounds it), so the global order window is single-task by
-    // construction — the small branch of p8's dispatch
-    val wEp = org.apache.spark.sql.expressions.Window
-      .orderBy(md5(concat(lit("ep1-"), col("doc_id").cast("string"))), col("doc_id"))
-    val shf = spl.select(col("doc_id"), col("n_clean"),
-      (row_number().over(wEp) - 1).cast("long").as("pos"))
-    val shd = spl.select(col("doc_id"), col("n_clean"),
-      (hash6(col("doc_id")) % 8).as("shard_id"))
 
     // ---- the manifest: one row per stage, all from the checkpointed
     // ledger + the budget-bounded tail frames — no corpus re-scan ----
@@ -201,7 +176,29 @@ object Pipeline {
      else Seq.empty) ++
     Seq(
       manifestRow("04_decontam", ledger.filter(col("in4")), col("n_tok"), hash6(col("doc_id"))),
-      manifestRow("05_trim", s5, col("n_clean"), hash6(col("doc_id"))),
+      manifestRow("05_trim", s5, col("n_clean"), hash6(col("doc_id")))) ++
+    tailManifest(s5)).reduce(_.union(_))
+  }
+
+  /** Stages 06-10 over the stage-05 survivors, read as
+    * (doc_id, source, n_clean): sqrt-temperature mixture under budget
+    * (x5-x7) → per-source cap (p9's slots) → train split (p7's hash
+    * buckets) → epoch shuffle (p8's seeded order) → shard assignment
+    * (x4's md5 shards); one manifest row each. The mixture is checkpointed
+    * (≤ MixBudget rows at any corpus size): every later stage reads it. */
+  private[llm] def tailManifest(s5: DataFrame): Seq[DataFrame] = {
+    val ct = s5.groupBy("source").agg(count(lit(1)).as("n_docs"),
+      sum(col("n_clean")).cast("long").as("n_tokens"))
+    val mx = Frames.trackedCheckpoint(
+      s5.join(broadcast(Mixture.ratesFor(ct, MixBudget)), "source")
+        .filter(Sampling.keyUniform(col("doc_id")) < col("rate"))
+        .select("doc_id", "source", "n_clean"))
+    val cap = Sampling.sourceSlots(mx).filter(col("slot") <= SourceCap)
+    val spl = cap.filter(md5(col("doc_id").cast("string")) < "cc")
+    val shf = spl.select(col("doc_id"), col("n_clean"), Sampling.epochPos.as("pos"))
+    val shd = spl.select(col("doc_id"), col("n_clean"),
+      (hash6(col("doc_id")) % 8).as("shard_id"))
+    Seq(
       manifestRow("06_mixture", mx, col("n_clean"), hash6(col("doc_id"))),
       manifestRow("07_source_cap", cap, col("n_clean"), hash6(col("doc_id"))),
       manifestRow("08_split_train", spl, col("n_clean"), hash6(col("doc_id"))),
@@ -211,8 +208,48 @@ object Pipeline {
       // assignment-sensitive checksum: any doc landing in another shard
       // changes it
       manifestRow("10_shard", shd, col("n_clean"),
-        (col("shard_id") + 1) * (col("doc_id") % 997 + 1))
-    )).reduce(_.union(_))
+        (col("shard_id") + 1) * (col("doc_id") % 997 + 1)))
+  }
+
+  /** The oracle of [[tailManifest]] over the relation `src`
+    * (doc_id, source, n_clean): its CTEs (`ct` … `shd`) and its
+    * `UNION ALL` manifest rows, spliced after the caller's own. */
+  private[llm] def tailSql(src: String): (String, String) = {
+    val chk = hash6Sql
+    (s"""ct AS (SELECT source, count(*) AS n_docs,
+        |              CAST(sum(n_clean) AS BIGINT) AS n_tokens FROM $src GROUP BY source),
+        |w AS (SELECT source, n_docs,
+        |             sqrt(CAST(n_tokens AS DOUBLE)) /
+        |               sum(sqrt(CAST(n_tokens AS DOUBLE))) OVER () AS wt
+        |      FROM ct),
+        |r AS (SELECT source,
+        |             CASE WHEN $MixBudget * wt / n_docs > 1.0 THEN 1.0
+        |                  ELSE $MixBudget * wt / n_docs END AS rate
+        |      FROM w),
+        |mx AS (SELECT $src.* FROM $src JOIN r USING (source)
+        |       WHERE CAST((doc_id * 2654435761) % 2147483648 AS DOUBLE) / 2147483648 < rate),
+        |cap AS (SELECT doc_id, source, n_clean FROM (
+        |          SELECT *, row_number() OVER (PARTITION BY source
+        |            ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS slot FROM mx)
+        |        WHERE slot <= $SourceCap),
+        |spl AS (SELECT * FROM cap WHERE md5(CAST(doc_id AS VARCHAR)) < 'cc'),
+        |shf AS (SELECT doc_id, n_clean,
+        |               row_number() OVER (ORDER BY md5('ep1-' || CAST(doc_id AS VARCHAR)),
+        |                                  doc_id) - 1 AS pos
+        |        FROM spl),
+        |shd AS (SELECT doc_id, n_clean, $chk % 8 AS shard_id FROM spl)""".stripMargin,
+     s"""UNION ALL SELECT '06_mixture', count(*), CAST(sum(n_clean) AS BIGINT),
+        |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM mx
+        |UNION ALL SELECT '07_source_cap', count(*), CAST(sum(n_clean) AS BIGINT),
+        |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM cap
+        |UNION ALL SELECT '08_split_train', count(*), CAST(sum(n_clean) AS BIGINT),
+        |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM spl
+        |UNION ALL SELECT '09_epoch_shuffle', count(*), CAST(sum(n_clean) AS BIGINT),
+        |       CAST(sum(doc_id) AS BIGINT),
+        |       CAST(sum((pos + 1) * (doc_id % 997 + 1)) AS BIGINT) FROM shf
+        |UNION ALL SELECT '10_shard', count(*), CAST(sum(n_clean) AS BIGINT),
+        |       CAST(sum(doc_id) AS BIGINT),
+        |       CAST(sum((shard_id + 1) * (doc_id % 997 + 1)) AS BIGINT) FROM shd""".stripMargin)
   }
 
   private def pipelineSql: String = pipelineSqlFor(lsh = false)
@@ -225,6 +262,7 @@ object Pipeline {
     * DuckDB recomputes the ENTIRE LSH decision inside the composition. */
   private def pipelineSqlFor(lsh: Boolean): String = {
     val chk = hash6Sql
+    val (tailCtes, tailRows) = tailSql("tr")
     val dedF = if (lsh) "ded3b" else "ded"
     val lshCtes =
       if (!lsh) ""
@@ -282,28 +320,7 @@ object Pipeline {
        |              dc.n_tok - coalesce(cov2.n_removed, 0) AS n_clean
        |       FROM dc LEFT JOIN cov2 USING (doc_id)
        |       WHERE dc.n_tok - coalesce(cov2.n_removed, 0) >= $MinCleanTokens),
-       |ct AS (SELECT source, count(*) AS n_docs,
-       |              CAST(sum(n_clean) AS BIGINT) AS n_tokens FROM tr GROUP BY source),
-       |w AS (SELECT source, n_docs,
-       |             sqrt(CAST(n_tokens AS DOUBLE)) /
-       |               sum(sqrt(CAST(n_tokens AS DOUBLE))) OVER () AS wt
-       |      FROM ct),
-       |r AS (SELECT source,
-       |             CASE WHEN $MixBudget * wt / n_docs > 1.0 THEN 1.0
-       |                  ELSE $MixBudget * wt / n_docs END AS rate
-       |      FROM w),
-       |mx AS (SELECT tr.* FROM tr JOIN r USING (source)
-       |       WHERE CAST((doc_id * 2654435761) % 2147483648 AS DOUBLE) / 2147483648 < rate),
-       |cap AS (SELECT doc_id, source, n_clean FROM (
-       |          SELECT *, row_number() OVER (PARTITION BY source
-       |            ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS slot FROM mx)
-       |        WHERE slot <= $SourceCap),
-       |spl AS (SELECT * FROM cap WHERE md5(CAST(doc_id AS VARCHAR)) < 'cc'),
-       |shf AS (SELECT doc_id, n_clean,
-       |               row_number() OVER (ORDER BY md5('ep1-' || CAST(doc_id AS VARCHAR)),
-       |                                  doc_id) - 1 AS pos
-       |        FROM spl),
-       |shd AS (SELECT doc_id, n_clean, $chk % 8 AS shard_id FROM spl)
+       |$tailCtes
        |SELECT '01_ingest' AS stage, count(*) AS n_docs,
        |       CAST(sum(n_tok) AS BIGINT) AS n_tokens,
        |       CAST(sum(doc_id) AS BIGINT) AS id_sum, CAST(sum($chk) AS BIGINT) AS chk
@@ -316,18 +333,7 @@ object Pipeline {
        |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM dc
        |UNION ALL SELECT '05_trim', count(*), CAST(sum(n_clean) AS BIGINT),
        |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM tr
-       |UNION ALL SELECT '06_mixture', count(*), CAST(sum(n_clean) AS BIGINT),
-       |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM mx
-       |UNION ALL SELECT '07_source_cap', count(*), CAST(sum(n_clean) AS BIGINT),
-       |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM cap
-       |UNION ALL SELECT '08_split_train', count(*), CAST(sum(n_clean) AS BIGINT),
-       |       CAST(sum(doc_id) AS BIGINT), CAST(sum($chk) AS BIGINT) FROM spl
-       |UNION ALL SELECT '09_epoch_shuffle', count(*), CAST(sum(n_clean) AS BIGINT),
-       |       CAST(sum(doc_id) AS BIGINT),
-       |       CAST(sum((pos + 1) * (doc_id % 997 + 1)) AS BIGINT) FROM shf
-       |UNION ALL SELECT '10_shard', count(*), CAST(sum(n_clean) AS BIGINT),
-       |       CAST(sum(doc_id) AS BIGINT),
-       |       CAST(sum((shard_id + 1) * (doc_id % 997 + 1)) AS BIGINT) FROM shd""".stripMargin
+       |$tailRows""".stripMargin
   }
 
   val entries: Seq[QueryDef] = Seq(

@@ -2,7 +2,8 @@ package graft.llm
 
 import graft.data.Tables
 import graft.ops.QueryDef
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deterministic sampling operators (north-star extension: a training-data
@@ -98,14 +99,8 @@ object Sampling {
     // pretraining run consumes each epoch, plus the round-robin data-loader
     // rank each position feeds. The order is rank-of-md5(seed ++ doc_id):
     // seeded, reproducible across runs/retries/partitionings (the p5–p7
-    // no-RNG idiom), and a new seed string is a fresh permutation. A global
-    // row_number is the single-task degenerate case of w3's problem, so the
-    // builder dispatches exactly like w3: under Ranks.WindowMaxGroupRows a
-    // one-task window sort wins; beyond it Ranks.groupRank (cluster-wide
-    // range shuffle + zipWithIndex) assigns the identical contiguous
-    // positions with parallelism that tracks the cluster — at 100 TB the
-    // epoch order is produced by a range shuffle over (hash, doc_id),
-    // never a single-task sort. DataPlaneSpec proves both paths agree.
+    // no-RNG idiom), and a new seed string is a fresh permutation. The
+    // global row_number sorts in one task: 500k docs at ScaleGen sf10.
     QueryDef("p8_epoch_shuffle",
       """SELECT doc_id, pos, pos % 8 AS loader_rank
         |FROM (
@@ -113,20 +108,8 @@ object Sampling {
         |         row_number() OVER (ORDER BY md5('ep1-' || CAST(doc_id AS VARCHAR)),
         |                            doc_id) - 1 AS pos
         |  FROM documents)""".stripMargin) { (s, d) =>
-      import graft.ops.Ranks
-      val h = md5(concat(lit("ep1-"), col("doc_id").cast("string")))
-      val docs = Tables(s, d, "documents").select(col("doc_id"), h.as("ekey"))
-      val total = graft.data.Tables.cachedCount(s, d, "documents")
-      val posed =
-        if (total <= Ranks.WindowMaxGroupRows) {
-          val w = org.apache.spark.sql.expressions.Window
-            .orderBy(col("ekey"), col("doc_id"))
-          docs.select(col("doc_id"), (row_number().over(w) - 1).cast("long").as("pos"))
-        } else
-          Ranks.groupRank(docs, lit("g"), Seq(col("ekey"), col("doc_id")),
-              s.sparkContext.defaultParallelism)
-            .select(col("doc_id"), col("g_idx").as("pos"))
-      posed.select(col("doc_id"), col("pos"), (col("pos") % 8).as("loader_rank"))
+      Tables(s, d, "documents").select(col("doc_id"), epochPos.as("pos"))
+        .select(col("doc_id"), col("pos"), (col("pos") % 8).as("loader_rank"))
     },
 
     // Uniform k-sample without replacement: global top-k by key hash — a
@@ -167,13 +150,8 @@ object Sampling {
     // apply before mixing (a handful of giant domains would otherwise
     // dominate the corpus). Deterministic: each source keeps its N lowest
     // (md5(doc_id), doc_id) docs — a seeded reservoir per group, stable
-    // across runs/retries/partitionings (the p5-p8 no-RNG idiom). A
-    // row_number window keyed by source is the w3 single-task trap (a
-    // 100 TB domain's rows sort in ONE task), so the builder dispatches on
-    // measured group size exactly like w3/p8: window under the threshold,
-    // Ranks.groupRank (range shuffle + zipWithIndex + broadcast offsets)
-    // with identical values beyond it. Output is |sources|×N rows at any
-    // corpus size.
+    // across runs/retries/partitionings (the p5-p8 no-RNG idiom). Output
+    // is |sources|×N rows at any corpus size.
     QueryDef("p9_source_cap",
       """SELECT doc_id, source, slot FROM (
         |  SELECT doc_id, source,
@@ -181,21 +159,12 @@ object Sampling {
         |           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS slot
         |  FROM documents)
         |WHERE slot <= 20""".stripMargin) { (s, d) =>
-      sourceSlots(Tables(s, d, "documents"), s,
-          knownCount = Some(graft.data.Tables.cachedCount(s, d, "documents")))
+      sourceSlots(Tables(s, d, "documents"))
         .filter(col("slot") <= 20)
         .select(col("doc_id"), col("source"), col("slot"))
     }
   )
 
-  /** p9's per-source reservoir rank — each doc's 1-based slot in its
-    * source's (md5(doc_id), doc_id) order — dispatched on MEASURED group
-    * size exactly like w3/p8 (a source-keyed row_number window is the
-    * single-task trap when one domain holds 100 TB of rows;
-    * Ranks.groupRank assigns identical values with cluster-wide
-    * parallelism beyond the threshold). Shared by the declared p9 query
-    * and the x10 composed pipeline's cap stage. Input needs
-    * (doc_id, source); output (doc_id, source, slot). */
   /** Deterministic hash-ordered reservoir of exactly min(cap, n) rows —
     * the GLOBALLY lowest (xxhash64(key), key) rows. A bare orderBy+limit
     * compiles to TakeOrderedAndProject and ships `cap` rows from EVERY
@@ -225,31 +194,20 @@ object Sampling {
     pre.orderBy(xxhash64(key), key).limit(cap)
   }
 
-  private[graft] def sourceSlots(in: org.apache.spark.sql.DataFrame,
-      s: org.apache.spark.sql.SparkSession,
-      knownCount: Option[Long] = None): org.apache.spark.sql.DataFrame = {
-    import graft.ops.Ranks
-    val docs = in.select(col("doc_id"), col("source"),
-      md5(col("doc_id").cast("string")).as("h"))
-    val maxGroup = {
-      // knownCount: the p9 declaration passes the memoized base-table
-      // count so the dispatch probe costs no job (r17)
-      val total = knownCount.getOrElse(docs.count())
-      if (total <= Ranks.WindowMaxGroupRows) total
-      else docs.groupBy("source").count().agg(max("count")).head().getLong(0)
-    }
-    if (maxGroup <= Ranks.WindowMaxGroupRows) {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("source").orderBy(col("h"), col("doc_id"))
-      docs.select(col("doc_id"), col("source"),
-        row_number().over(w).cast("long").as("slot"))
-    } else {
-      val ranked = Ranks.groupRank(docs, col("source"),
-        Seq(col("h"), col("doc_id")), s.sparkContext.defaultParallelism)
-      val offs = ranked.groupBy("source").agg(min(col("g_idx")).as("min_idx"))
-      ranked.join(broadcast(offs), "source")
-        .select(col("doc_id"), col("source"),
-          (col("g_idx") - col("min_idx") + 1).as("slot"))
-    }
-  }
+  /** p9's per-source reservoir rank: `in` plus `slot`, each doc's
+    * 1-based position in its source's (md5(doc_id), doc_id) order — one
+    * row_number window partitioned by source. Shared by the declared p9
+    * query and the composed pipelines' cap stage. `in` needs
+    * (doc_id, source). */
+  private[graft] def sourceSlots(in: DataFrame): DataFrame =
+    in.withColumn("slot", row_number().over(
+      Window.partitionBy("source").orderBy(md5(col("doc_id").cast("string")), col("doc_id")))
+      .cast("long"))
+
+  /** A doc's 0-based position in the seeded epoch order
+    * (md5('ep1-' ‖ doc_id), doc_id) — p8's shuffle and the composed
+    * pipelines' stage 09. A global window: one task sorts every row. */
+  private[llm] def epochPos: Column =
+    (row_number().over(Window.orderBy(
+      md5(concat(lit("ep1-"), col("doc_id").cast("string"))), col("doc_id"))) - 1).cast("long")
 }

@@ -103,7 +103,7 @@ object Similarity {
     * operating point, and a deployment trades it consciously. */
   private[graft] val SemDedupCellTarget = 2000L
 
-  /** SemDeDup's sized clustering — measured dispatch (the w3/IVF
+  /** SemDeDup's sized clustering — measured dispatch (the IVF
     * precedent): one metadata-cheap count sizes the clustering so cells
     * hold ~[[SemDedupCellTarget]] vectors; within-cell pairwise work then
     * grows LINEARLY in n (n·cellSize), the "scale k with the corpus" knob

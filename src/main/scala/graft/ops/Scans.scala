@@ -59,7 +59,7 @@ object Scans {
     // S2: shard/worker-slice invariance — repartition must not change results.
     // (reference: maggy/core/patching/dataloader.py:124-130 shards by rank/world-size)
     //
-    // Measured dispatch (r15, the w3/p8 idiom): the full-corpus repartition
+    // Measured dispatch (r15): the full-corpus repartition
     // IS the declared semantic, but it is an O(corpus) all-rows shuffle —
     // 3.2 s at sf1 (6M rows), 11.1 s at sf10 (60M), unbounded at 100×.
     // Below the row bound the full reshard runs as declared; above it a

@@ -412,7 +412,7 @@ object Streams {
     // once and state stays bounded.
     //
     // State store choice: a MEASURED DISPATCH on state size (the
-    // w3/Ranks.groupRank idiom). Heap wins the small-state one-shot replay
+    // memoized events count). Heap wins the small-state one-shot replay
     // (r13, scale_r13/stream_store_sf10.json: 19.7-20.0 s first run vs
     // RocksDB's 20.9-22.2, which pays native-lib load + store setup once
     // per JVM), but at sf10's 9.5M sessions the heap provider holds the
@@ -422,7 +422,7 @@ object Streams {
     // memtables/SSTs), bounds executor memory, and wins steady state by
     // 10-25% at that state size — so above the dispatch threshold the
     // replay runs on RocksDB. Threshold: the measured crossover lies
-    // between sf1 (~1.5M events, heap comfortably wins) and sf10 (15M
+    // between sf1 (1M events, heap comfortably wins) and sf10 (10M
     // events, heap pays unbounded state); 5M events splits the decades.
     // The count is a metadata-only parquet scan (no data read).
     QueryDef("st_stream_session",

@@ -1207,27 +1207,6 @@ class DataPlaneSpec extends AnyFunSuite with ScratchRoot {
         "prefilter is not selective, the verify shuffle would carry the whole batch")
   }
 
-  test("distributed rank path equals the window formulation exactly") {
-    import org.apache.spark.sql.expressions.Window
-    val orders = Tables(spark, sf, "orders")
-      .select("o_orderkey", "o_orderpriority", "o_totalprice")
-    val w = Window.partitionBy("o_orderpriority")
-      .orderBy(col("o_totalprice"), col("o_orderkey"))
-    val windowed = orders.select(
-      col("o_orderkey"),
-      round(percent_rank().over(w), 9).as("pct_rank"),
-      ntile(4).over(w).as("quartile"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).sortBy(_._1)
-    val distributed = graft.ops.Ranks.percentRankNtile(
-      orders, col("o_orderpriority"),
-      Seq(col("o_totalprice"), col("o_orderkey")),
-      keyCol = col("o_orderkey"), parallelism = 7)
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).sortBy(_._1)
-    assert(distributed.length == windowed.length)
-    assert(distributed.sameElements(windowed),
-      "distributed two-pass rank diverged from the window formulation")
-  }
-
   test("mixture: x5 weights form a distribution, x6 realizes it deterministically") {
     val x5 = SparkEntry.queries("x5_mixture_weights")(spark, sf).collect()
     val wSum = x5.map(_.getAs[Double]("weight")).sum
@@ -1426,21 +1405,12 @@ class DataPlaneSpec extends AnyFunSuite with ScratchRoot {
       "selection must be live on the testdata — both outcomes present")
   }
 
-  test("p8 epoch shuffle: exact permutation, seeded-deterministic, both rank paths agree") {
+  test("p8 epoch shuffle: exact permutation, seeded-deterministic") {
     val rows = SparkEntry.queries("p8_epoch_shuffle")(spark, sf).collect()
     val n = rows.length
     assert(rows.map(_.getAs[Long]("pos")).sorted.sameElements(0L until n),
       "pos must be a contiguous 0-based permutation")
     assert(rows.forall(r => r.getAs[Long]("loader_rank") == r.getAs[Long]("pos") % 8))
-    // the distributed path (forced low threshold via direct groupRank call)
-    // assigns the identical positions the window path produced
-    val h = md5(concat(lit("ep1-"), col("doc_id").cast("string")))
-    val docs = Tables(spark, sf, "documents").select(col("doc_id"), h.as("ekey"))
-    val dist = graft.ops.Ranks.groupRank(docs, lit("g"), Seq(col("ekey"), col("doc_id")), 5)
-      .select(col("doc_id"), col("g_idx").as("pos"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val win = rows.map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("pos")).toMap
-    assert(dist == win, "distributed epoch order diverged from the window order")
   }
 
   test("s2 shard invariance: sliced-reshard path equals the full-reshard result (r15 dispatch lock)") {
@@ -1461,7 +1431,7 @@ class DataPlaneSpec extends AnyFunSuite with ScratchRoot {
     assert(li.filter(slice).count() > 0, "deterministic slice selected no rows")
   }
 
-  test("p9 source cap: exactly N per source, reproducible, both rank paths agree") {
+  test("p9 source cap: exactly N per source, reproducible") {
     val rows = SparkEntry.queries("p9_source_cap")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     val bySrc = rows.groupBy(_._2)
@@ -1469,18 +1439,6 @@ class DataPlaneSpec extends AnyFunSuite with ScratchRoot {
       "every source capped at exactly 20 on the testdata")
     bySrc.values.foreach(g =>
       assert(g.map(_._3).sorted.sameElements(1L to 20L), "slots contiguous 1..20"))
-    // the distributed path (forced via direct groupRank) keeps the same docs
-    val h = md5(col("doc_id").cast("string"))
-    val docs = Tables(spark, sf, "documents")
-      .select(col("doc_id"), col("source"), h.as("h"))
-    val ranked = graft.ops.Ranks.groupRank(docs, col("source"),
-      Seq(col("h"), col("doc_id")), 5)
-    val offs = ranked.groupBy("source").agg(min(col("g_idx")).as("min_idx"))
-    val dist = ranked.join(broadcast(offs), "source")
-      .select(col("doc_id"), col("source"), (col("g_idx") - col("min_idx") + 1).as("slot"))
-      .filter(col("slot") <= 20)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(dist == rows.toSet, "distributed cap diverged from the window cap")
   }
 
   test("t17 bigram perplexity: keep thresholds the rounded score, both outcomes live, bigram count exact") {

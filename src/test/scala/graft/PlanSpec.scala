@@ -461,14 +461,11 @@ class PlanSpec extends AnyFunSuite with ScratchRoot {
     assert(plan("x8_corpus_card").contains("Expand"))
   }
 
-  test("p8 epoch shuffle reads only doc_id and plans the dispatched rank path") {
+  test("p8 epoch shuffle reads only doc_id and plans the rank path") {
     val p = plan("p8_epoch_shuffle")
     val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(readSchema.contains("doc_id") && !readSchema.contains("text"),
       s"p8 scan not pruned to doc_id: $readSchema")
-    // at sf0.001 the dispatch takes the window path (a single-task sort is
-    // correct under WindowMaxGroupRows); the distributed path's value
-    // identity is DataPlaneSpec's p8 test
     assert(p.contains("Window"), s"p8: small-n path lost its window plan:\n$p")
   }
 
