@@ -33,8 +33,7 @@ import scala.util.control.NonFatal
   */
 object AnnCurve {
   def main(args: Array[String]): Unit = {
-    val spark = MasterEnv.standardBuilder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    val spark = MasterEnv.standardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, args)
     finally {

@@ -60,18 +60,19 @@ object Bench {
   def main(args: Array[String]): Unit = {
     reexecPinnedHeap().foreach(rc => sys.exit(rc))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // NOTE on AQE sizing, measured on the 10× scale corpus: widening
     // every shuffle (initialPartitionNum=16×cpus, advisory=16m) stabilized
     // the one huge-cardinality aggregation (d0's ~1.2×10⁸-group posting
     // join: 43-234 s swings at 32 GB heap → steady ~40 s) but taxed every
-    // iterative small-shuffle operator 2-5× (d6's CC rounds checkpoint
-    // hundreds of near-empty partitions per iteration). Session conf
+    // small-shuffle operator 2-5× (measured when d6 still ran an iterative
+    // CC loop; today the vocab- and pair-sized aggregates of t18/t19 and
+    // the dedup family would each schedule hundreds of near-empty
+    // partitions per shuffle). Session conf
     // stays at Spark defaults; the posting join sizes its OWN pair-agg
     // shuffle instead (Dedup.boundedScoredPairs). The shared conf block
     // (incl. the openCostInBytes no-bin-packing rationale) lives in
     // MasterEnv.standardBuilder.
-    val spark = MasterEnv.standardBuilder(cpus).getOrCreate()
+    val spark = MasterEnv.standardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def materialize(name: String): Unit =
@@ -289,7 +290,7 @@ object Bench {
     // cpus recorded so a run under different local[N] conditions can't be
     // mistaken for a like-for-like regression; quoted because the env value
     // may be non-numeric ("*" for local[*]) and must not break the JSON
-    val full = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"errors":$errs,"sf":$sfNum,"sf_dir":"${jstr(sfDir)}","cpus":"${jstr(cpus)}","master":"${jstr(MasterEnv.master(cpus))}",$contention}"""
+    val full = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"errors":$errs,"sf":$sfNum,"sf_dir":"${jstr(sfDir)}","cpus":"${jstr(MasterEnv.cpus)}","master":"${jstr(MasterEnv.master)}",$contention}"""
     println(full)
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_full.json"),
@@ -312,7 +313,7 @@ object Bench {
     val he = errors.take(3)
       .map { case (k, v) => s"\"" + k + "\":\"" + v.take(60) + "\"" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":$hq,"errors":$he,"sf":$sfNum,"cpus":"${jstr(cpus)}","master":"${jstr(MasterEnv.master(cpus))}",$contention}""")
+    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":$hq,"errors":$he,"sf":$sfNum,"cpus":"${jstr(MasterEnv.cpus)}","master":"${jstr(MasterEnv.master)}",$contention}""")
     graft.data.Frames.releaseAll()
     spark.stop()
   }

@@ -24,8 +24,7 @@ object DayNScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/tmp/graft_scale/sf10")
     val out = args.lift(1).getOrElse("scale_r15/dayn_sf10.json")
-    val spark = MasterEnv.standardBuilder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    val spark = MasterEnv.standardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.llm.Incremental
 

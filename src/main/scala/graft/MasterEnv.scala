@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-master resolution for the driver-contract mains (Verify/Bench).
+/** Session-master resolution for every graft main (Verify, Bench, Run, …).
   *
   * `SPARK_GRAFT_MASTER` overrides the default `local[cpus]` — its primary
   * use is `local-cluster[n,cores,memMB]`, the multi-JVM master that runs
@@ -19,30 +19,23 @@ import org.apache.spark.sql.SparkSession
   */
 object MasterEnv {
 
-  def master(cpus: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+  /** Cores of the default `local[cpus]` master: `SPARK_GRAFT_CPUS`, 4 when
+    * unset — read here only, so every main runs the same session. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  val master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
 
   def isMultiJvm(m: String): Boolean = m.startsWith("local-cluster")
-
-  /** Apply the resolved master (+ executor classpath for multi-JVM) to a
-    * session builder. */
-  def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder = {
-    val m = master(cpus)
-    val withMaster = b.master(m)
-    if (isMultiJvm(m))
-      withMaster.config("spark.executor.extraClassPath", sys.props("java.class.path"))
-    else withMaster
-  }
 
   /** Resolved shuffle-partition count: SPARK_GRAFT_CPUS may be "*" (a valid
     * local[N] master but not a partition count) — fall back to the machine's
     * cores. */
-  def shufflePartitions(cpus: String): String =
+  private def shufflePartitions: Int =
     scala.util.Try(cpus.trim.toInt).toOption
-      .getOrElse(Runtime.getRuntime.availableProcessors()).toString
+      .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  /** The ONE session builder behind every graft main (Verify/Bench/Run/
-    * RecallProbe): resolved master plus the conf block each run needs. A
+  /** The ONE session builder behind every graft main (Verify, Bench, Run,
+    * RecallProbe and the probe mains): resolved master plus the conf block each run needs. A
     * conf added here reaches every artifact-producing entry point, so their
     * recorded numbers stay like-for-like.
     *
@@ -59,14 +52,14 @@ object MasterEnv {
     *     group cannot parallelize a parquet read, so one ~row-group-sized
     *     file per task is exactly the 100 TB-cluster shape too.
     */
-  def standardBuilder(cpus: String): SparkSession.Builder =
-    standardConfs(configure(SparkSession.builder(), cpus), shufflePartitions(cpus))
+  def standardBuilder(): SparkSession.Builder =
+    standardBuilderFor(master, shufflePartitions)
 
   /** The same conf block pinned to an EXPLICIT master — for suites that
     * must not honor SPARK_GRAFT_MASTER (ClusterSpec pins its own
     * local-cluster). Multi-JVM masters get the executor classpath shipped
-    * exactly as [[configure]] does, so the multi-JVM evidence suite runs
-    * the same session shape as the multi-JVM Verify/Bench artifacts. */
+    * exactly as [[standardBuilder]] ships it, so the multi-JVM evidence suite
+    * runs the same session shape as the multi-JVM Verify/Bench artifacts. */
   def standardBuilderFor(masterStr: String, partitions: Int): SparkSession.Builder = {
     val base = SparkSession.builder().master(masterStr)
     val withCp = if (isMultiJvm(masterStr))

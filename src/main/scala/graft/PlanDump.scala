@@ -21,8 +21,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = MasterEnv.standardBuilder(cpus).getOrCreate()
+    val spark = MasterEnv.standardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) Frames.checkpointScope(name) {

@@ -14,8 +14,7 @@ object ProbePlan {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = MasterEnv.standardBuilder(cpus).getOrCreate()
+    val spark = MasterEnv.standardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(

@@ -34,8 +34,7 @@ object RecallProbe {
     val out = args.lift(1).getOrElse("scale_r10/recall_sf1.json")
     // same session as Verify/Bench (MasterEnv honors SPARK_GRAFT_MASTER),
     // so recall/timing artifacts stay comparable with the bench numbers
-    val spark = MasterEnv.standardBuilder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    val spark = MasterEnv.standardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables(spark, sfDir, "documents")

@@ -18,8 +18,7 @@ object Run {
     }
     // same session as Verify/Bench (MasterEnv honors SPARK_GRAFT_MASTER),
     // so a dev run reproduces exactly what the artifact runs measure
-    val spark = MasterEnv.standardBuilder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    val spark = MasterEnv.standardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     // timing starts BEFORE build: streaming queries (and cache-building

@@ -27,8 +27,7 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/tmp/graft_scale/sf10")
     val out = args.lift(1).getOrElse("scale_r11/skew_join.json")
-    val spark = MasterEnv.standardBuilder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    val spark = MasterEnv.standardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // force the shuffled join under test: no broadcast escape hatch
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

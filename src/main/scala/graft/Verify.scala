@@ -10,8 +10,7 @@ object Verify {
     // The driver always passes exactly (sfDir, outDir) → full dump.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = MasterEnv.standardBuilder(cpus).getOrCreate()
+    val spark = MasterEnv.standardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // declaration order (not the unordered queries map): shared caches are

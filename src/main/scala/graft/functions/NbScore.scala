@@ -33,10 +33,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Token equality is exact raw-byte comparison (no hashing shortcuts — the
   * oracle hash-compare demands exactness); the FNV-1a slot hash only picks
-  * the probe start. Sizing is gated by the caller
-  * ([[graft.llm.TextStats.BroadcastMaxVocabRows]]): a model this literal
-  * carries rides the stage's one task-binary broadcast, the same bytes the
-  * replaced broadcast join shipped.
+  * the probe start. The model is vocab-sized (t19's and t19b's 31-word
+  * vocab at every ScaleGen decade): the literal rides the stage's one
+  * task-binary broadcast, the same bytes the replaced broadcast join
+  * shipped.
   */
 object NbModel {
   private val HeaderBytes = 12

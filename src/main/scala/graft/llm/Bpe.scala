@@ -5,23 +5,18 @@ import graft.ops.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Distributed BPE tokenizer TRAINING (Sennrich et al. 2016, "Neural
-  * Machine Translation of Rare Words with Subword Units") — the missing
-  * half of the tokenizer story next to t5 (BPE-ish regex tokenize) and t7
-  * (one merge-candidate step): the full iterative merge loop that produces
-  * a merge table a tokenizer then applies.
+/** BPE tokenizer TRAINING (Sennrich et al. 2016, "Neural Machine
+  * Translation of Rare Words with Subword Units") — the missing half of
+  * the tokenizer story next to t5 (BPE-ish regex tokenize) and t7 (one
+  * merge-candidate step): the full iterative merge loop that produces a
+  * merge table a tokenizer then applies.
   *
-  * Scale shape (Sennrich's own trick, which is also the distributed one):
-  * the corpus is scanned exactly ONCE, to the word-frequency table; every
-  * merge iteration then runs over the VOCAB (distinct words × frequency),
-  * which is corpus-sublinear (tens of millions of rows at 100 TB, vs
-  * trillions of tokens). Per iteration: one (left, right)-keyed aggregate
-  * with map-side partials for the pair counts, a 1-row argmax collect
-  * (driver-sized by construction, the AQE-probe precedent), and a
-  * codegen'd fold that rewrites each word's symbol array. The vocab frame
-  * is checkpointed per iteration — post-aggregation small, the t14/t17
-  * side of the checkpoint arithmetic — so plans don't grow with the
-  * iteration count (the d6 pointer-doubling precedent).
+  * Scale shape (Sennrich's own trick): the corpus is scanned exactly
+  * ONCE, by a distributed word-frequency aggregate; every merge iteration
+  * then runs over the VOCAB (distinct words × frequency), which is
+  * corpus-sublinear — 31 words at every ScaleGen decade — so the vocab
+  * collects and the merge loop runs on the driver, with no per-merge job.
+  * The apply half (`applyBpe`) stays distributed: it touches every token.
   */
 object Bpe {
 
@@ -35,116 +30,32 @@ object Bpe {
         concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
         .otherwise(concat(acc, array(x))))
 
-  /** Measured-dispatch bound for the trainer (the s2 idiom): a vocab
-    * (distinct words) at or under this many rows collects to the driver
-    * and the merge loop runs locally — each merge iteration was otherwise
-    * a full scheduled Spark job (orderBy.limit(1).collect argmax), ~3 s of
-    * pure job-launch floor for 20 merges at sf0.1, over data that is
-    * MB-scale by Sennrich's own vocab argument. Above the bound the
-    * distributed loop below (identical semantics, BpeSpec-proven equal)
-    * takes over; at 100-TB corpora the vocab is tens of millions of rows
-    * and the distributed path is the right one. */
-  private[graft] val DriverLocalVocabMaxRows = 2000000
-
-  /** Byte-budget companion to the row bound (r17, advice #1): the row
-    * bound alone let a corpus of very LONG distinct "words" (space-free
-    * text, minified content) put hundreds of MB of strings on the driver
-    * heap just to make the dispatch decision. Estimated JVM cost —
-    * 2 B/char + ~48 B object overhead per (word, freq) tuple — must stay
-    * under this before the vocab collects; otherwise the distributed
-    * loop takes over regardless of row count. */
-  private[graft] val DriverLocalVocabMaxBytes = 256L * 1024 * 1024
-
   /** Train `nMerges` BPE merges over the corpus word distribution.
     * Symbols start as single characters plus a terminal `eow` marker (so
     * suffix merges are learnable); ties on pair count break
     * lexicographically on (left, right) — deterministic across engines
     * and partitionings. Stops early when no pair occurs `minCount` times.
     * Returns the merge table (step, left, right, merged, pair_count) —
-    * driver-sized by definition (≤ nMerges rows).
-    *
-    * `localVocabMax` is the driver-local dispatch bound (0 forces the
-    * distributed loop — how BpeSpec pins the two paths' identity). */
+    * driver-sized by definition (≤ nMerges rows). */
   def trainBpe(docs: DataFrame, nMerges: Int = 30, minCount: Long = 2L,
-      eow: String = "</w>",
-      localVocabMax: Int = DriverLocalVocabMaxRows): DataFrame = {
+      eow: String = "</w>"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // the single corpus pass: word -> frequency
-    val wordFreq = docs
+    val words = docs
       .select(split(col("text"), " ").as("ts"))
       .select(explode_outer(col("ts")).as("word"))
       .where(col("word").isNotNull && length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("freq"))
-    // measured dispatch (r17, advice #1: gate on BYTES too, not only
-    // rows — the old limit(bound+1).collect shipped up to 2M (word, freq)
-    // rows to the driver to make the decision, unbounded in string
-    // length): one map-side-combined aggregate probes row count AND
-    // estimated heap bytes; the vocab collects only when both bounds
-    // hold. wordFreq is persisted across probe + consumer (the local
-    // collect, or the distributed char-split below) so the corpus is
-    // still scanned once.
-    if (localVocabMax > 0) {
-      wordFreq.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val probe = wordFreq
-        .agg(count(lit(1)), coalesce(sum(length(col("word"))), lit(0L))).head()
-      val (nWords, chars) = (probe.getLong(0), probe.getLong(1))
-      if (nWords <= localVocabMax &&
-          chars * 2 + nWords * 48 <= DriverLocalVocabMaxBytes) {
-        val head = wordFreq.as[(String, Long)].collect()
-        wordFreq.unpersist()
-        return trainBpeLocal(head, nMerges, minCount, eow)
-          .toDF("step", "left", "right", "merged", "pair_count")
-      }
-    }
-    // char-level start: ["w","o","r","d","</w>"]
-    var vocab = graft.data.Frames.trackedCheckpoint(wordFreq.select(
-      col("freq"),
-      concat(
-        transform(sequence(lit(1), length(col("word"))),
-          i => col("word").substr(i, lit(1))),
-        array(lit(eow))).as("syms")))
-    // the checkpoint above was wordFreq's last consumer on this path
-    if (localVocabMax > 0) wordFreq.unpersist(blocking = false)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var step = 1
-    var done = false
-    while (step <= nMerges && !done) {
-      val pairs = vocab
-        .select(col("freq"),
-          when(size(col("syms")) >= 2,
-            transform(sequence(lit(1), size(col("syms")) - 1), i =>
-              struct(element_at(col("syms"), i).as("l"),
-                element_at(col("syms"), i + 1).as("r"))))
-            .otherwise(array().cast("array<struct<l:string,r:string>>")).as("ps"))
-        .select(col("freq"), explode_outer(col("ps")).as("p"))
-        .where(col("p").isNotNull)
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("c"))
-      val best = pairs.orderBy(col("c").desc, col("l"), col("r")).limit(1).collect()
-      if (best.isEmpty || best(0).getAs[Long]("c") < minCount) done = true
-      else {
-        val (l, r, c) = (best(0).getAs[String]("l"), best(0).getAs[String]("r"),
-          best(0).getAs[Long]("c"))
-        merges += ((step, l, r, l + r, c))
-        // checkpoint every 4th merge, not every merge: the per-iteration
-        // cost here is job-scheduling floor, not data (the vocab is
-        // corpus-sublinear), and a 4-deep chain of fold projections is a
-        // trivial recompute — measured ~30% off the whole trainer. The
-        // chain must still be cut periodically or plans grow linearly
-        // with the merge count (the d6 pointer-doubling lesson).
-        val merged = vocab.select(col("freq"), mergeFold(col("syms"), l, r).as("syms"))
-        vocab = if (step % 4 == 0) graft.data.Frames.trackedCheckpoint(merged) else merged
-        step += 1
-      }
-    }
-    merges.toSeq.toDF("step", "left", "right", "merged", "pair_count")
+      .as[(String, Long)].collect()
+    trainBpeLocal(words, nMerges, minCount, eow)
+      .toDF("step", "left", "right", "merged", "pair_count")
   }
 
   /** UTF-8 byte-order string comparison — what Spark's orderBy compares
     * (UTF8String binary ordering), NOT Java's UTF-16 code-unit compareTo;
-    * the two diverge on supplementary characters, and the local loop's
-    * tie-break must match the distributed argmax bit-for-bit. */
+    * the two diverge on supplementary characters, and the merge loop's
+    * tie-break must match an engine's `ORDER BY c DESC, l, r` argmax. */
   private def utf8Less(a: String, b: String): Boolean = {
     val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -158,11 +69,11 @@ object Bpe {
     x.length < y.length
   }
 
-  /** Driver-local merge loop over a collected vocab — semantics identical
-    * to the distributed loop above (code-point symbol start, overlapping
-    * pair counts weighted by word frequency, greedy left-to-right merge
-    * application, count-desc/(l,r)-asc tie-break in UTF8 byte order,
-    * minCount early stop); BpeSpec proves the merge-table identity. */
+  /** Driver-local merge loop over a collected vocab: code-point symbol
+    * start, overlapping pair counts weighted by word frequency, greedy
+    * left-to-right merge application (`mergeFold`'s semantics),
+    * count-desc/(l,r)-asc tie-break in UTF8 byte order, minCount early
+    * stop; BpeSpec proves the merge table against a reference. */
   private[llm] def trainBpeLocal(words: Array[(String, Long)], nMerges: Int,
       minCount: Long, eow: String): Seq[(Int, String, String, String, Long)] = {
     // code-point split, matching Spark's substr(i, 1) character semantics
@@ -232,7 +143,8 @@ object Bpe {
   /** ENCODE with a trained merge table — the apply half of the tokenizer
     * loop. Scalable shape: the merges are applied to the DISTINCT-word
     * vocab (corpus-sublinear), in training order with the same greedy
-    * fold and the same every-4th checkpoint cadence; the corpus then
+    * fold, checkpointed every 4th merge so the plan does not grow with
+    * the merge count; the corpus then
     * joins its token stream against the encoded vocab — at sane vocab
     * sizes that join broadcasts, and the heavy fold work never touches
     * corpus-scale rows. Returns per-doc (doc_id, n_words, n_pieces,

@@ -1237,10 +1237,11 @@ object Dedup {
         // The pair-AGG shuffle is deliberately wide (8×parallelism — see
         // boundedScoredPairs), but the ≥-floor table retained here is ~5
         // orders of magnitude smaller than the agg's group space, and its
-        // partitioning becomes every consumer's stage width — d6's CC
-        // schedules it once per pointer-doubling round, so 256 near-empty
-        // partitions cost whole seconds in task launches (measured: d6
-        // 2.3 → 4.7 s at sf0.1 when the 8× width leaked through). Bring the
+        // partitioning becomes every consumer's stage width — d4's count,
+        // d4's pair listing and d6's collect each scan it, and 256
+        // near-empty partitions would launch 256 tasks per scan (measured
+        // when d6 still rescanned it every round of a distributed CC loop:
+        // d6 2.3 → 4.7 s at sf0.1 with the 8× width). Bring the
         // RETAINED table back to session parallelism with a true
         // repartition — NOT coalesce, which would merge the reduce stage
         // itself back to 32 tasks and reintroduce the 8×-sized per-task
@@ -1249,81 +1250,37 @@ object Dedup {
         .repartition(docs.sparkSession.sparkContext.defaultParallelism)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Connected components by min-label propagation WITH pointer doubling:
-    * each round every node takes the min label among itself and its
-    * neighbors (Pregel-style), then shortcuts through its current label's
-    * label (union-find path halving). Neighbor propagation alone needs
-    * graph-diameter rounds — a 50-long near-dup chain would blow any sane
-    * maxIter — the shortcut step roughly halves the remaining pointer depth
-    * per round, so convergence is O(log diameter) (the same bound the
-    * large-star/small-star formulation gives, one join cheaper per round).
-    * Near-dup components are tiny cliques in practice: 2-3 rounds. The
-    * per-round dataset is (node, label) longs only; driver only sees a
-    * one-row convergence sum per round, never the data. */
-  def connectedComponents(pairs: DataFrame, nodes: DataFrame, maxIter: Int = 20): DataFrame = {
-    // Materialize the edge list at the session's normal parallelism (its
-    // lineage may include the full posting join), THEN narrow the shuffle
-    // sizing for the propagation rounds: those move (node, label) longs
-    // over the NEAR-DUP SUBGRAPH — orders of magnitude smaller than the
-    // session default is sized for, so the rounds run at ≤ 8 partitions
-    // (measured 6.0s → 3.3s at sf0.1; a deployment sizes this to
-    // subgraph-bytes / partition-target the same way Streams sizes its
-    // state stores). The override is scoped to a CLONED session (same
-    // SparkContext + shared cache, own SQLConf), so a concurrent query on
-    // the caller's session keeps its parallelism — the session-global
-    // mutation the round-4 version did is gone.
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEdges = edges.count()
+  /** Connected components of the near-dup graph, labelled by the minimum
+    * node id of each component: `pairs` (doc_a, doc_b) collects once to
+    * the driver and a union-find labels it; every node of `nodes` that no
+    * pair touches labels itself. The near-dup subgraph is small by
+    * construction — ScaleGen plants one near-dup pair per 20 docs plus one
+    * exact-dup pair per 640, about 25,800 pairs at sf10 — so it collects
+    * as KBs to a few MB of longs. executeCollect keeps rows internal
+    * (UnsafeRow, primitive getLong), the union-find runs on an
+    * open-addressed long→long table (16 B/slot, no boxing), and the label
+    * frame ships as a parallelized RDD — each row serialized to exactly
+    * one task, once. */
+  def connectedComponents(pairs: DataFrame, nodes: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
-    // Measured dispatch (r17, the BPE driver-local precedent): a bounded
-    // near-dup subgraph labels faster as ONE driver-side union-find than as
-    // a distributed fixpoint — each propagation round is 3 jobs / ~8 stages
-    // of near-empty-partition scheduling (the whole loop measured ~1-2 s
-    // per consumer at sf0.1 for KB-scale graphs), while ≤ 4M oriented
-    // edges collect as 64 MB of longs and label in tens of ms. The result
-    // is IDENTICAL by definition (label = min doc_id per component — the
-    // propagation fixpoint). Above the bound the distributed loop runs
-    // unchanged: at 100 TB the edge set need not fit any driver.
-    if (nEdges <= DriverCcMaxEdges) {
-      // Primitive driver path (r18, advice): the boxed formulation this
-      // replaces collected ~4M Row objects, unioned through a
-      // HashMap<Long,Long> of up to 8M boxed entries (~0.5-1 GB near the
-      // bound), and embedded the result as a LocalRelation re-serialized
-      // into EVERY action's task binaries. executeCollect keeps rows
-      // internal (UnsafeRow, primitive getLong), the union-find runs on an
-      // open-addressed long→long table (16 B/slot, no boxing), and the
-      // label frame ships as a parallelized RDD — each row serialized to
-      // exactly one task, once.
-      val internal = edges.queryExecution.executedPlan.executeCollect()
-      val m = internal.length
-      val srcA = new Array[Long](m); val dstA = new Array[Long](m)
-      var i = 0
-      while (i < m) { srcA(i) = internal(i).getLong(0); dstA(i) = internal(i).getLong(1); i += 1 }
-      graft.data.Frames.release(edges)
-      val (nodeArr, labelArr) = unionFindMinLabel(srcA, dstA)
-      import spark.implicits._
-      val nOut = nodeArr.length
-      val parts = math.max(1, math.min(
-        spark.sparkContext.defaultParallelism, nOut / 250000 + 1))
-      val labelDf = spark.sparkContext
-        .parallelize(nodeArr.indices.map(j => (nodeArr(j), labelArr(j))), parts)
-        .toDF("node", "label")
-      val isolated = nodes.join(labelDf.select("node"), Seq("node"), "left_anti")
-        .select(col("node"), col("node").as("label"))
-      return labelDf.union(isolated)
-    }
-    connectedComponentsImpl(edges, nodes, maxIter)
+    val internal = pairs.select(col("doc_a"), col("doc_b"))
+      .queryExecution.executedPlan.executeCollect()
+    val m = internal.length
+    val srcA = new Array[Long](m); val dstA = new Array[Long](m)
+    var i = 0
+    while (i < m) { srcA(i) = internal(i).getLong(0); dstA(i) = internal(i).getLong(1); i += 1 }
+    val (nodeArr, labelArr) = unionFindMinLabel(srcA, dstA)
+    import spark.implicits._
+    val nOut = nodeArr.length
+    val parts = math.max(1, math.min(
+      spark.sparkContext.defaultParallelism, nOut / 250000 + 1))
+    val labelDf = spark.sparkContext
+      .parallelize(nodeArr.indices.map(j => (nodeArr(j), labelArr(j))), parts)
+      .toDF("node", "label")
+    val isolated = nodes.join(labelDf.select("node"), Seq("node"), "left_anti")
+      .select(col("node"), col("node").as("label"))
+    labelDf.union(isolated)
   }
-
-  /** Driver-CC dispatch bound, in ORIENTED edges (2× the undirected pair
-    * count). Honest peak-memory budget at the bound on the primitive path
-    * (r18): 64 MB of edge longs + ~160 MB of transient executeCollect rows
-    * + ≤16M open-addressed parent slots ≈ 0.5 GB — comfortably inside the
-    * canonical 8 GiB driver, same bounded-driver-work budget class as
-    * Bpe's localVocabMax. */
-  private[graft] val DriverCcMaxEdges = 4000000L
 
   /** Open-addressed long→long table (linear probing, power-of-two
     * capacity, grow at 0.6 load) — the union-find's parent store. 16 B per
@@ -1375,7 +1332,7 @@ object Dedup {
 
   /** Driver-side union-find with path halving over primitive arrays;
     * returns parallel (node, label) arrays where label = min node id of
-    * the component (exactly the distributed loop's fixpoint). */
+    * the component. Edges are undirected: (a, b) and (b, a) union alike. */
   private[graft] def unionFindMinLabel(
       src: Array[Long], dst: Array[Long]): (Array[Long], Array[Long]) = {
     val parent = new LongLongMap(math.min(src.length.toLong * 2, 1L << 27).toInt)
@@ -1408,82 +1365,6 @@ object Dedup {
     var j = 0
     while (j < nodes.length) { labels(j) = find(nodes(j)); j += 1 }
     (nodes, labels)
-  }
-
-  /** The distributed pointer-doubling loop over oriented (src, dst)
-    * edges, run in a cloned session with ≤ 8 shuffle partitions (see
-    * [[connectedComponents]]). Throws if it has not converged after
-    * `maxIter` rounds. */
-  private[graft] def connectedComponentsImpl(
-      callerEdges: DataFrame, callerNodes: DataFrame, maxIter: Int): DataFrame = {
-    val spark = callerEdges.sparkSession
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.shuffle.partitions",
-      math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, 8).toString)
-    // The CacheManager is shared state, so the re-bound plan (same
-    // canonicalized form) reads the blocks the caller persisted — no
-    // re-persist (that would double-register the plan) and no recompute.
-    val bridge = org.apache.spark.sql.GraftExpressionBridge
-    val edges = bridge.inSession(scoped, callerEdges)
-    val nodes = bridge.inSession(scoped, callerNodes)
-    // Iterate ONLY over nodes that have at least one edge: an isolated node
-    // is trivially its own component and its label can never change, so
-    // carrying the full corpus through every propagation round (as before)
-    // multiplies each round's shuffle by corpus/|edge nodes| — at 100 TB the
-    // near-dup subgraph is orders of magnitude smaller than the corpus.
-    // Isolated nodes are unioned back once at the end.
-    val active = edges.select(col("src").as("node")).distinct()
-    var labels = active.select(col("node"), col("node").as("label"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // convergence check: per-node labels only ever DECREASE, so the global
-    // label sum strictly decreases until fixpoint — one cheap aggregate per
-    // round instead of a self-join diff
-    // decimal(38,0) sum: exact at any node count (a long sum could overflow
-    // at trillions of ids and spuriously report convergence)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val viaNeighbors = edges.join(labels, edges("src") === labels("node"))
-        .select(edges("dst").as("node"), labels("label"))
-      val propagated = labels.select("node", "label").union(viaNeighbors)
-        .groupBy("node").agg(min(col("label")).as("label"))
-      // pointer doubling: follow node → label → label-of-label. Labels are
-      // always ids of active nodes (mins over initial self-labels), so the
-      // parent lookup is a self-join; left + coalesce guards the root rows.
-      val parents = propagated.select(col("node").as("p_node"), col("label").as("p_label"))
-      // localCheckpoint (not persist): the self-join references `propagated`
-      // twice, so without lineage truncation the logical plan doubles every
-      // round — 2^rounds plan nodes OOMs the driver before the data ever
-      // would. The checkpoint pins each round's labels as a LogicalRDD,
-      // keeping the plan constant-size across rounds.
-      val next = propagated.join(parents, propagated("label") === parents("p_node"), "left")
-        .select(propagated("node"),
-          least(propagated("label"), coalesce(col("p_label"), propagated("label"))).as("label"))
-        .localCheckpoint(eager = true)
-      val nextSum = labelSum(next)
-      graft.data.Frames.release(labels)
-      labels = next
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      iter += 1
-    }
-    // Unconverged labels are WRONG labels (splitting a component silently) —
-    // fail loudly rather than return them. With pointer doubling this needs
-    // diameter > ~2^maxIter, i.e. unreachable in practice.
-    if (!converged) {
-      graft.data.Frames.release(labels)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — graph diameter exceeds " +
-        s"2^$maxIter; raise maxIter")
-    }
-    val isolated = nodes.join(active, Seq("node"), "left_anti")
-      .select(col("node"), col("node").as("label"))
-    // unpersisting the re-bound edges copy removes the shared CacheManager
-    // entry the caller registered (uncache matches by canonicalized plan)
-    graft.data.Frames.materializeAndRelease(labels.union(isolated), edges, labels)
   }
 
   /** 64-bit SimHash over md5-derived token hashes: per doc, for each of 64

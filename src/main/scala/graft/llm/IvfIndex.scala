@@ -80,17 +80,12 @@ object IvfIndex {
 
   /** Probe-time search against a prebuilt index. */
   def search(index: IvfModel, probes: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val routed = route(index, probes, nProbe)
     // scan only the routed cells (at scale: partition pruning on `cell`);
-    // probe side picked by measured size like nearDupPairs — a corpus-sized
-    // probe batch must not ride a broadcast. Sizing probe: count the RAW
-    // probe table (route emits exactly min(nProbe, nClusters) rows per
-    // probe, so probes × that IS the routed row count) — counting `routed`
-    // itself would execute the centroid cross-join + routing window eagerly
-    // and then, unpersisted, recompute it all when the returned join runs.
-    val perProbe = math.min(nProbe, index.centroids.size).toLong
-    val probeSide =
-      if (probes.count() * perProbe <= BroadcastMaxRoutedRows) broadcast(routed) else routed
+    // the routed probes always broadcast — search serves a handful of
+    // probes (sim_ivf_ann's 5), each routed to nProbe cells, far under
+    // BroadcastMaxRoutedRows, and the broadcast is what lets the loaded
+    // index's `cell` scan prune dynamically
+    val probeSide = broadcast(route(index, probes, nProbe))
     val cand = index.assigned.select(col("vec_id").as("cand_id"),
       col("embedding").cast("array<double>").as("cv"), col("cell"))
     val scored = cand.join(probeSide, Seq("cell"))
@@ -114,7 +109,8 @@ object IvfIndex {
     * among the probe's routed nProbe (DataPlaneSpec measures it vs the
     * exact pairs). Output matches sim_near_dup_pairs:
     * (probe_id, cand_id, cosine) with probe_id < cand_id. */
-  /** Probe sets up to this many ROUTED rows ride a broadcast (vectors are
+  /** [[nearDupPairs]]' probe set is the whole corpus, so it sizes its
+    * probe side: up to this many ROUTED rows ride a broadcast (vectors are
     * KB-scale rows: 100k × 64 doubles ≈ 50 MB, the broadcast comfort
     * zone). Beyond it the probe set is corpus-like — a 10%-of-corpus
     * incremental batch at 100× measured ~400 MB routed, which no driver

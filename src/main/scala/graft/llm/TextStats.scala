@@ -735,18 +735,16 @@ object TextStats {
     //
     // Scale shape (r13): two corpus scans, ZERO occurrence-stream
     // shuffles — and the score scan is now a pure PROJECTION. Train = one
-    // map-side-combined aggregate of the token stream to the checkpointed
-    // vocab count table; smoothing totals + the dispatch vocab size fold
-    // into ONE driver-side read of that checkpoint and priors into
-    // another. Score (r13, fused) = pack the vocab into an NbModel binary
+    // map-side-combined aggregate of the token stream to the vocab count
+    // table, collected; smoothing totals and the vocab size fold into the
+    // driver-side pass over those rows and priors into one more read. Score (r13, fused) = pack the vocab into an NbModel binary
     // (same bytes the r10-r12 broadcast join shipped) and fold each doc
     // with the codegen'd NbScore expression — the explode/broadcast-join/
     // doc-agg triple that paid one UnsafeRow + hash probe + agg update
     // PER TOKEN is gone. Measured at sf10 (scale_r13/t19_fused_sf10.json):
     // 5.69 → 1.48 s warm, vs same-boot DuckDB 0.87 s — ratio 5.2× → 1.7×,
-    // closing the r11/r12 weak flag structurally. A vocab beyond the
-    // threshold takes the Zipf-proof per-doc term-frame fallback
-    // (DataPlaneSpec asserts branch agreement). An r12 experiment that
+    // closing the r11/r12 weak flag structurally. The vocab is 31 words
+    // at every ScaleGen decade, so it always packs. An r12 experiment that
     // tokenized ONCE into a checkpointed term frame measured 6.1 → 9.2 s
     // at sf10 — the (doc, w) shuffle + GB-scale string checkpoint cost
     // more than the columnar re-scan they save — and was reverted; the
@@ -779,14 +777,14 @@ object TextStats {
     // pipeline labels once — the p5-p7 hash idiom, deliberately
     // uncorrelated with source (testdata's source IS doc_id % 20, so any
     // modulus slice would miss entire classes); positives as in t19), then
-    // score EVERY doc against the broadcast tables. The training tables
-    // are slice-sized and fixed as the corpus grows (the t16 rationale —
-    // no measured dispatch needed: they broadcast at every scale), so
-    // scoring a 100 TB crawl is one corpus scan → map-side broadcast-hash
-    // join → ONE doc-keyed aggregate (the occurrence stream never
-    // shuffles); none of the training aggregation is re-paid. Tokens
-    // unseen in the slice hit add-1 smoothing with zero counts (left join
-    // + coalesce). Same rounding/threshold discipline as t19.
+    // score EVERY doc against the packed model. The training tables are
+    // slice-sized and fixed as the corpus grows (the t16 rationale — no
+    // measured dispatch needed: they pack at every scale), so scoring a
+    // 100 TB crawl is one corpus scan whose only operator is the fused
+    // NbScore projection (no join, no aggregate); none of the training
+    // aggregation is re-paid. Tokens unseen in the slice hit add-1
+    // smoothing with zero counts (the model's default; the oracle's left
+    // join + coalesce). Same rounding/threshold discipline as t19.
     QueryDef("t19b_nb_score",
       """WITH lbl AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) < '33' AS tr,
         |                    source IN ('src1','src2','src3','src4') AS pos,
@@ -903,18 +901,10 @@ object TextStats {
       .limit(k)
   }
 
-  /** t19's vocab table packs into a driver-built [[graft.functions.NbModel]]
-    * when it holds at most this many terms (tens of MB of (w, c1, c0)
-    * rows — the same bytes the pre-r13 broadcast join collected to the
-    * driver); a vocab beyond it takes the shuffle-join fallback — on the
-    * per-doc TERM frame, never the raw occurrence stream. */
-  val BroadcastMaxVocabRows = 1000000L
-
   /** Pack a collected (w, c1, c0) vocab table into the [[graft.functions
     * .NbModel]] binary: termLL(w) = ln((c1+1)/(tot1+v)) − ln((c0+1)/(tot0+v)),
     * unseen tokens smooth with zero counts (the SQL left join's coalesce).
-    * Driver-side math.log on the same doubles the replaced column
-    * expression computed — DataPlaneSpec pins branch agreement at 6 dp. */
+    * Driver-side math.log; DataPlaneSpec recounts t19's scores at 6 dp. */
   private def nbPack(rows: Array[org.apache.spark.sql.Row],
       tot1: Double, tot0: Double, v: Double): Array[Byte] = {
     val words = new Array[Array[Byte]](rows.length)
@@ -946,65 +936,35 @@ object TextStats {
         col("ns").getItem(0).cast("long").as("n_tok"),
         round(lit(prior) + col("ns").getItem(1), 6).as("log_odds"))
 
-  /** t19's plan (see the QueryDef comment). `forceShuffle` pins the
-    * big-vocab fallback branch so DataPlaneSpec can prove the two branches
-    * agree; the declared query always dispatches on the measured vocab.
-    * Exposed for DataPlaneSpec's brute-force fixtures and PlanSpec. */
+  /** t19's plan (see the QueryDef comment). Exposed for DataPlaneSpec's
+    * brute-force fixtures and PlanSpec. */
   private[graft] def nbClassifier(docs: org.apache.spark.sql.DataFrame,
-      posSources: Seq[String],
-      forceShuffle: Boolean = false): org.apache.spark.sql.DataFrame = {
+      posSources: Seq[String]): org.apache.spark.sql.DataFrame = {
     val pos = col("source").isin(posSources: _*)
-    val tok = docs.select(col("doc_id"), pos.as("pos"), explode(toks).as("w"))
     // train: ONE aggregation of the occurrence stream to the vocab count
     // table — partial aggregation absorbs the Zipf-hot key map-side, the
-    // shuffle carries vocab-sized partials only, and the result is
-    // checkpointed so statistics + broadcast share blocks. (An r12
-    // experiment pre-aggregated to a checkpointed per-doc TERM frame so
-    // the corpus tokenized once for train AND score — measured 6.1 →
-    // 9.2 s at sf10: the (doc, w) shuffle + GB-scale checkpoint of token
-    // STRINGS cost more than the second columnar scan they save. Two
-    // scans with ZERO occurrence-stream shuffles is the right plan.)
-    val tw = graft.data.Frames.trackedCheckpoint(
-      tok.groupBy("w").agg(
+    // shuffle carries vocab-sized partials only, and the (w, c1, c0) rows
+    // collect straight into the packed NbModel; smoothing totals and the
+    // vocab size fold into the same driver-side pass (the t19b shape)
+    val rows = docs.select(pos.as("pos"), explode(toks).as("w"))
+      .groupBy("w").agg(
         sum(when(col("pos"), 1L).otherwise(0L)).as("c1"),
-        sum(when(col("pos"), 0L).otherwise(1L)).as("c0")))
-    // smoothing totals + the broadcast-dispatch vocab size fold into ONE
-    // driver-side read of the vocab-sized checkpoint (r12: was a separate
-    // count() dispatch job plus totals/priors frames riding two
-    // crossJoin broadcasts); priors collapse to two doubles off a
-    // source-column-only scan
-    val t = tw.agg(sum("c1").cast("double"), sum("c0").cast("double"),
-      count(lit(1)).cast("double")).head()
-    val (tot1, tot0, v) = (t.getDouble(0), t.getDouble(1), t.getDouble(2))
+        sum(when(col("pos"), 0L).otherwise(1L)).as("c0"))
+      .collect()
+    val tot1 = rows.iterator.map(_.getLong(1)).sum.toDouble
+    val tot0 = rows.iterator.map(_.getLong(2)).sum.toDouble
+    // priors collapse to two doubles off a source-column-only scan
     val p = docs.agg(sum(when(pos, 1L).otherwise(0L)).cast("double"),
       sum(when(pos, 0L).otherwise(1L)).cast("double")).head()
-    val prior = math.log(p.getDouble(0) / p.getDouble(1))
-    val termLL = log((col("c1") + 1) / (tot1 + v)) -
-      log((col("c0") + 1) / (tot0 + v))
-    val score =
-      if (!forceShuffle && v <= BroadcastMaxVocabRows)
-        // fused score (r13): pack the checkpointed vocab into an NbModel
-        // binary (the same bytes the broadcast join shipped) and fold each
-        // doc in one codegen'd projection — the score pass has NO explode,
-        // NO join, NO aggregate. Every token is in-vocab by construction
-        // (train saw this same corpus), so the model's unseen default
-        // never fires and n_tok equals the old inner join's count.
-        nbScoreFused(docs, nbPack(tw.collect(), tot1, tot0, v), prior)
-      else {
-        // Zipf-proof fallback for a vocab too big to broadcast: pre-
-        // aggregate to the per-doc TERM frame (doc-keyed, skew-proof,
-        // join input cut by mean term frequency), then shuffle-join on w
-        // (AQE skew-split covers residual hot terms). tf-weighted sums
-        // equal the occurrence sums up to FP associativity; DataPlaneSpec
-        // asserts branch agreement at 6 dp.
-        val dtf = tok.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-        dtf.join(tw, "w")
-          .groupBy("doc_id")
-          .agg(sum(col("tf")).as("n_tok"),
-            round(lit(prior) + sum(col("tf") * termLL), 6).as("log_odds"))
-      }
-    score.select(col("doc_id"), col("n_tok"), col("log_odds"),
-      (col("log_odds") > 0).as("keep"))
+    // fused score (r13): fold each doc in one codegen'd projection — the
+    // score pass has NO explode, NO join, NO aggregate. Every token is
+    // in-vocab by construction (train saw this same corpus), so the
+    // model's unseen default never fires and n_tok equals the SQL inner
+    // join's count.
+    nbScoreFused(docs, nbPack(rows, tot1, tot0, rows.length.toDouble),
+        math.log(p.getDouble(0) / p.getDouble(1)))
+      .select(col("doc_id"), col("n_tok"), col("log_odds"),
+        (col("log_odds") > 0).as("keep"))
   }
 
   /** The t11/t12 quality proxy: per-doc type-token ratio — an exact

@@ -11,16 +11,6 @@ object GraftExpressionBridge {
   def columnOf(e: Expression): Column = ExpressionUtils.column(e)
   def expressionOf(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Re-bind a DataFrame's logical plan to another session of the SAME
-    * SparkContext (Dataset.ofRows is private[sql]). Used to scope SQLConf
-    * (e.g. shuffle sizing) to one plan via `spark.newSession()` without
-    * mutating the caller's session. The CacheManager lives in shared state,
-    * so persisted plans keep reading their cached blocks. */
-  def inSession(s: SparkSession, df: DataFrame): DataFrame =
-    classic.Dataset.ofRows(
-      s.asInstanceOf[classic.SparkSession],
-      df.queryExecution.logical)
-
   /** Wrap a one-row, one-column DataFrame as a scalar-subquery expression
     * (catalyst ScalarSubquery is private[sql]-adjacent machinery). The
     * subquery plan executes once per query and its value is embedded into

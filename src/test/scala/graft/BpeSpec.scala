@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** BPE trainer correctness: the distributed merge loop must reproduce, step
+/** BPE trainer correctness: the driver-side merge loop must reproduce, step
   * for step (pair, merged symbol, weighted count), a single-threaded
   * reference implementation of Sennrich et al. 2016 — including the greedy
   * left-to-right re-tokenization inside a word ("aaa" + (a,a) -> [aa, a])
@@ -56,16 +56,13 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.toSeq
   }
 
-  /** localVocabMax = 0 forces the distributed merge loop; the default
-    * exercises the driver-local dispatch path (these corpora are far under
-    * the bound). Both must reproduce the reference identically. */
-  private def run(texts: Seq[String], nMerges: Int,
-      localVocabMax: Int = graft.llm.Bpe.DriverLocalVocabMaxRows): Seq[(Int, String, String, String, Long)] = {
+  /** Trains through `Bpe.trainBpe`: the word-frequency aggregate, its
+    * collect and the driver-side merge loop. */
+  private def run(texts: Seq[String], nMerges: Int): Seq[(Int, String, String, String, Long)] = {
     import spark.implicits._
     val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     graft.data.Frames.scope("bpe train") {
-      graft.llm.Bpe.trainBpe(docs, nMerges = nMerges,
-          localVocabMax = localVocabMax).collect()
+      graft.llm.Bpe.trainBpe(docs, nMerges = nMerges).collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
         .toSeq.sortBy(_._1)
     }
@@ -92,11 +89,6 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
       val exp = referenceBpe(texts, 15)
       val got = run(texts, 15)
       assert(got == exp, s"round $round: merge tables diverge:\nspark = $got\nref   = $exp")
-      // the distributed loop (forced past the driver-local dispatch) must
-      // produce the identical merge table — the two paths' identity proof
-      val gotDist = run(texts, 15, localVocabMax = 0)
-      assert(gotDist == exp,
-        s"round $round: distributed loop diverges from local/reference:\nspark = $gotDist\nref   = $exp")
     }
   }
 

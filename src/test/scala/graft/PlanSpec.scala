@@ -497,7 +497,7 @@ class PlanSpec extends AnyFunSuite with ScratchRoot {
     // codegen'd nb_score expression against the driver-packed model —
     // the plan the query RETURNS must contain NO join of any kind, no
     // explode, no aggregate, and no window: one scan, one projection
-    // (train runs in separate jobs against the checkpointed vocab table)
+    // (train runs in separate jobs that collect the vocab table)
     assert(p.contains("nb_score"),
       s"t19: score pass must run the fused nb_score projection:\n$p")
     Seq("CartesianProduct", "BroadcastHashJoin", "SortMergeJoin",
