@@ -8,19 +8,10 @@ object Run {
     val name = args(0)
     val sfDir = if (args.length > 1 && !args(1).startsWith("--")) args(1) else "/root/testdata/sf0.01"
     val flags = args.filter(_.startsWith("--")).toSet
-    // --conf:k=v session-conf overrides, for perf experiments (e.g.
-    // --conf:graft.stream.statePartitions=32)
-    val confs = args.filter(_.startsWith("--conf:")).map { a =>
-      val kv = a.stripPrefix("--conf:").split("=", 2)
-      require(kv.length == 2 && kv(0).nonEmpty,
-        s"bad conf override '$a': expected --conf:key=value")
-      (kv(0), kv(1))
-    }
     // same session as Verify/Bench (MasterEnv honors SPARK_GRAFT_MASTER),
     // so a dev run reproduces exactly what the artifact runs measure
     val spark = MasterEnv.standardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     // timing starts BEFORE build: streaming queries (and cache-building
     // setup queries) do their work inside the builder, not at .count()
     val t0 = System.nanoTime()

@@ -3,9 +3,9 @@ package graft.streaming
 import graft.data.{Frames, Tables}
 import graft.ops.QueryDef
 import graft.ops.Exact._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger}
 
 /** One event as seen by the stateful FSM (ts kept as µs long — state
   * comparisons stay primitive). */
@@ -83,34 +83,28 @@ object Streams {
 
   /** Streaming view of the events table (T1 ingestion): file-source
     * readStream with the batch schema, ns→µs ts conversion as in Tables. */
-  def eventsStream(s: SparkSession, d: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+  def eventsStream(s: SparkSession, d: String): DataFrame = {
     if (!s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the file stream source requires a DIRECTORY (basePath). The driver
-    // testdata ships events.parquet as a single FILE → stage it into a temp
-    // dir once per SF dir (idempotent; a production deployment streams a
-    // landing dir or Kafka topic and skips this). ScaleGen corpora write
-    // events.parquet as a Spark output DIRECTORY → stream it directly
-    // (a Files.copy of a directory path would copy only the empty dir
-    // entry, leaving a sourceless stream — the sf1 full-suite run hit
-    // exactly that as UNABLE_TO_INFER_SCHEMA ×9).
-    val dir = streamSourceDir(s, d, "events")
-    val reader = s.readStream.schema(sourceSchema(s, dir))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    graft.data.Tables.normalizeEventTs(reader.parquet(dir.toString))
+    Tables.normalizeEventTs(fileStream(s, d, "events"))
   }
 
-  /** Resolve table `name` to a DIRECTORY the file stream source can read
-    * (it requires a basePath), and set the state-partition auto hint.
-    * Driver testdata ships tables as single FILES → stage into a temp dir
-    * once per SF dir (idempotent; a production deployment streams a landing
-    * dir or Kafka topic and skips this). ScaleGen corpora write Spark
-    * output DIRECTORIES → streamed directly (a Files.copy of a directory
-    * path would copy only the empty dir entry, leaving a sourceless
-    * stream — the sf1 full-suite run hit exactly that as
-    * UNABLE_TO_INFER_SCHEMA ×9). */
-  private def streamSourceDir(s: SparkSession, d: String,
-      name: String): java.nio.file.Path = {
+  /** Streaming view of the documents table — the INGEST side of the
+    * decontamination/dedup pipeline. No event-time normalization: documents
+    * carry no timestamp column; the operators over this stream are
+    * stateless gram scans plus bounded (true-contamination-sized)
+    * aggregations. */
+  def documentsStream(s: SparkSession, d: String): DataFrame = fileStream(s, d, "documents")
+
+  /** File-source stream of table `name` with its batch schema. The file
+    * stream source requires a DIRECTORY (basePath). The driver testdata
+    * ships tables as single FILES → stage each into a temp dir once per SF
+    * dir (idempotent; a production deployment streams a landing dir or
+    * Kafka topic and skips this). ScaleGen corpora write Spark output
+    * DIRECTORIES → streamed directly (a Files.copy of a directory path
+    * would copy only the empty dir entry, leaving a sourceless stream —
+    * the sf1 full-suite run hit exactly that as UNABLE_TO_INFER_SCHEMA ×9). */
+  private def fileStream(s: SparkSession, d: String, name: String): DataFrame = {
     val src = java.nio.file.Paths.get(s"$d/$name.parquet")
     val dir = if (java.nio.file.Files.isDirectory(src)) src else {
       val staging = java.nio.file.Paths.get(Frames.storeDir(s"stream_$name", d))
@@ -122,101 +116,98 @@ object Streams {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       staging
     }
-    // state-store auto-sizing hint: partitions track the SOURCE's file
-    // count (the same proxy the batch scan parallelizes on), clamped to
-    // [2, defaultParallelism]. The fixed default of 2 was tuned on 100k-row
-    // local replays, where per-partition store overhead dominates; at the
-    // 100× corpus (10M events) 2 partitions put ~5M state keys in each of
-    // two tasks — st_stream_dedup read 50 s and the session window OOMed
-    // the driver's task-result path. An explicit
-    // `graft.stream.statePartitions` still overrides (see runToTable).
-    // 2× file count: state tasks do strictly more work per input split than
-    // the scan (store commit + emission on top of the agg), so giving the
-    // state stage twice the scan's parallelism overlaps commit with compute.
-    // Measured at the 100× corpus (16 source files): session window 32.7 s
-    // at 16 partitions → 24.6 s at 32. Small replays are unaffected — the
-    // staged single-file sf0.1 source still lands on the floor of 2.
-    val nFiles = Option(dir.toFile.listFiles((_, n) => n.endsWith(".parquet")))
-      .map(_.length).getOrElse(1)
-    val auto = math.max(2, math.min(2 * nFiles, s.sparkContext.defaultParallelism))
-    s.conf.set("graft.stream.statePartitionsAuto", auto.toString)
-    dir
-  }
-
-  /** Streaming view of the documents table — the INGEST side of the
-    * decontamination/dedup pipeline. No event-time normalization: documents
-    * carry no timestamp column; the operators over this stream are
-    * stateless gram scans plus bounded (true-contamination-sized)
-    * aggregations. */
-  def documentsStream(s: SparkSession, d: String): DataFrame = {
-    val dir = streamSourceDir(s, d, "documents")
     s.readStream.schema(sourceSchema(s, dir)).parquet(dir.toString)
   }
 
-  /** Run a streaming DataFrame to completion (AvailableNow) into a memory
-    * sink; returns the drained table. Fresh checkpoint per run so re-running
-    * the same declared query re-processes the source. */
-  def runToTable(s: SparkSession, stream: DataFrame, mode: String): DataFrame = {
-    val name = s"graft_stream_${runCounter.incrementAndGet()}"
-    val ckpt = Frames.storeDir("stream_ckpt", name)
-    // a streaming query's shuffle-partition count = its state-store count,
-    // fixed at first checkpoint — size it to the keyspace, not to the batch
-    // session's scan parallelism. Per-partition store cost is CONSTANT
-    // (provider init + delta commit per micro-batch, ×4 sub-stores for a
-    // stream-stream join): measured 11.2s → 5.1s on the interval self-join
-    // going 8 → 2 partitions on a local replay. A real deployment sizes
-    // this to keys × state-bytes / executor-memory before first start.
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    val restoreNoData = disableNoDataBatch(s)
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** transformWithState's state store; also the big-state session store. */
+  val RocksDbProvider: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The conf every bounded replay runs with; a caller's conf goes on top.
+    *
+    * State partitions: a streaming query's shuffle-partition count = its
+    * state-store count, fixed at first checkpoint — size it to the
+    * keyspace, not to the batch session's scan parallelism. Per-partition
+    * store cost is CONSTANT (provider init + delta commit per micro-batch,
+    * ×4 sub-stores for a stream-stream join): measured 11.2s → 5.1s on the
+    * interval self-join going 8 → 2 partitions on a local replay, so 2 is
+    * the default; [[sourceConf]] sizes it to a corpus.
+    *
+    * No-data batch off: with a watermark or stateful operator present,
+    * AvailableNow appends one extra empty batch after the data to advance
+    * the watermark and evict state — a full plan + state-load + commit
+    * cycle, and in complete mode a full RE-EMISSION of the final state (at
+    * the 10× corpus that is the 9.5M-row session table written twice). No
+    * declared drain's CONTENT depends on it: complete mode re-emits
+    * unchanged state, the inner interval join and the watermark dedup emit
+    * rows in the batch the rows arrive, and the update-mode FSMs use
+    * NoTimeout/TimeMode.None so no timer can fire in an input-less batch.
+    * Eviction-only work is pointless on a drain whose query stops
+    * immediately after. */
+  private val ReplayConf: Map[String, String] = Map(
+    ShufflePartitions -> "2",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** State-partition count for a replay of table `name` under `d`: it
+    * tracks the SOURCE's parquet file count (the same proxy the batch scan
+    * parallelizes on), clamped to [2, defaultParallelism]. The fixed 2 was
+    * tuned on 100k-row local replays, where per-partition store overhead
+    * dominates; at the 100× corpus (10M events) 2 partitions put ~5M state
+    * keys in each of two tasks — st_stream_dedup read 50 s and the session
+    * window OOMed the driver's task-result path. 2× file count: state tasks
+    * do strictly more work per input split than the scan (store commit +
+    * emission on top of the agg), so giving the state stage twice the
+    * scan's parallelism overlaps commit with compute. Measured at the 100×
+    * corpus (16 source files): session window 32.7 s at 16 partitions →
+    * 24.6 s at 32. A single-file source lands on the floor of 2. */
+  private def sourceConf(s: SparkSession, d: String, name: String): Map[String, String] = {
+    val src = new java.io.File(s"$d/$name.parquet")
+    val nFiles = if (!src.isDirectory) 1
+      else Option(src.listFiles((_, n) => n.endsWith(".parquet"))).map(_.length).getOrElse(1)
+    Map(ShufflePartitions ->
+      math.max(2, math.min(2 * nFiles, s.sparkContext.defaultParallelism)).toString)
+  }
+
+  /** Run `writer` once with `Trigger.AvailableNow` on a fresh checkpoint,
+    * with `conf` set on the session only while `start()` runs. Spark's
+    * `StreamExecution` constructor clones the session
+    * (`sparkSessionForStream = cloneSession()`), so the query keeps the
+    * conf it started with and the caller's values come back as soon as
+    * `start()` returns. The finished checkpoint is deleted (state deltas
+    * can run to hundreds of MB per stream at the 100× corpus): correct only
+    * because these replays are one-shot — a production stream KEEPS its
+    * checkpoint, the restart contract. In finally: a failed replay must
+    * not leak it. */
+  private def drain(s: SparkSession, writer: DataStreamWriter[Row],
+      conf: Map[String, String]): Unit = {
+    val ckpt = Frames.storeDir("stream_ckpt", s"graft_stream_${runCounter.incrementAndGet()}")
     try {
-      val q = stream.writeStream
-        .format("memory").queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
+      val prev = s.conf.getAll
+      val q = try {
+        conf.foreach { case (k, v) => s.conf.set(k, v) }
+        writer.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+      } finally conf.keys.foreach { k =>
+        prev.get(k) match {
+          case Some(v) => s.conf.set(k, v)
+          case None => s.conf.unset(k)
+        }
+      }
       q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      restoreNoData()
-      // drop the finished replay's checkpoint (state deltas can run to
-      // hundreds of MB per stream at the 100× corpus). Only correct because
-      // these AvailableNow replays are one-shot: nothing ever restarts from
-      // it — a production stream KEEPS its checkpoint, the restart
-      // contract. In finally, not after: a failed replay must not leak it.
-      Frames.deleteRecursively(new java.io.File(ckpt))
-    }
+    } finally Frames.deleteRecursively(new java.io.File(ckpt))
+  }
+
+  /** Run a streaming DataFrame to completion into a memory sink; returns
+    * the drained table. `conf` goes on top of [[ReplayConf]]. */
+  def runToTable(s: SparkSession, stream: DataFrame, mode: String,
+      conf: Map[String, String] = Map.empty): DataFrame = {
+    val name = s"graft_stream_${runCounter.incrementAndGet()}"
+    drain(s, stream.writeStream.format("memory").queryName(name).outputMode(mode),
+      ReplayConf ++ conf)
     s.table(name)
   }
-
-  /** Skip the trailing no-data micro-batch on these bounded drains. With a
-    * watermark or stateful operator present, AvailableNow appends one extra
-    * empty batch after the data to advance the watermark and evict state —
-    * a full plan + state-load + commit cycle, and in complete mode a full
-    * RE-EMISSION of the final state (at the 10× corpus that is the 9.5M-row
-    * session table written twice). No declared drain's CONTENT depends on
-    * it: complete mode re-emits unchanged state, the inner interval join and
-    * the watermark dedup emit rows in the batch the rows arrive, and the
-    * update-mode FSMs use NoTimeout/TimeMode.None so no timer can fire in
-    * an input-less batch. Eviction-only work is pointless on a drain whose
-    * query stops immediately after. Returns the restore thunk. */
-  private def disableNoDataBatch(s: SparkSession): () => Unit = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    () => prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
-  /** Explicit `graft.stream.statePartitions` knob, else the source-derived
-    * auto hint (eventsStream), else the small-replay default of 2. */
-  private def statePartitions(s: SparkSession): String =
-    s.conf.getOption("graft.stream.statePartitions")
-      .orElse(s.conf.getOption("graft.stream.statePartitionsAuto"))
-      .getOrElse("2")
 
   /** Drain a streaming DataFrame whose output is CORPUS-SIZED into a
     * parquet landing dir instead of the driver's memory sink, and return
@@ -229,29 +220,13 @@ object Streams {
     * final batch's full state is the result — identical tables, produced
     * distributed. This is also the production shape (streams end in a
     * sink, not in driver memory). */
-  def runToParquetTable(s: SparkSession, stream: DataFrame, mode: String): DataFrame = {
-    val name = s"graft_stream_${runCounter.incrementAndGet()}"
-    val out = Frames.storeDir("stream_sink", name)
-    val ckpt = s"${out}_ckpt"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    val restoreNoData = disableNoDataBatch(s)
-    try {
-      val saveMode = if (mode == "complete") "overwrite" else "append"
-      val q = stream.writeStream
-        .outputMode(mode)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.write.mode(saveMode).parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      restoreNoData()
-      Frames.deleteRecursively(new java.io.File(ckpt))
-    }
+  def runToParquetTable(s: SparkSession, stream: DataFrame, mode: String,
+      conf: Map[String, String] = Map.empty): DataFrame = {
+    val out = Frames.storeDir("stream_sink", s"graft_stream_${runCounter.incrementAndGet()}")
+    val saveMode = if (mode == "complete") "overwrite" else "append"
+    drain(s, stream.writeStream.outputMode(mode).foreachBatch { (batch: Dataset[Row], _: Long) =>
+      batch.write.mode(saveMode).parquet(out)
+    }, ReplayConf ++ conf)
     // the sink dir is read back LAZILY by the caller — it cannot be
     // deleted here; it goes with the Frames store root
     s.read.parquet(out)
@@ -303,7 +278,7 @@ object Streams {
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total"))
         .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("total"))
-      runToTable(s, agg, "complete")
+      runToTable(s, agg, "complete", sourceConf(s, d, "events"))
     },
 
     // T3 (streaming): sliding 1-hour window, 30-minute slide — each event
@@ -324,7 +299,7 @@ object Streams {
         .groupBy(window(col("ts"), "1 hour", "30 minutes"))
         .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total"))
         .select(col("window.start").as("window_start"), col("n"), col("total"))
-      runToTable(s, agg, "complete")
+      runToTable(s, agg, "complete", sourceConf(s, d, "events"))
     },
 
     // T5: watermark + streaming dropDuplicatesWithinWatermark —
@@ -354,7 +329,7 @@ object Streams {
       // row-per-event output: land it distributed (parquet), aggregate
       // batch-side — the memory sink spent 50 s driver-materializing 10M
       // deduped rows at the 100x replay
-      runToParquetTable(s, deduped, "append")
+      runToParquetTable(s, deduped, "append", sourceConf(s, d, "events"))
         .groupBy("user_id").agg(count(lit(1)).as("n"))
     },
 
@@ -371,7 +346,7 @@ object Streams {
         .join(broadcast(Tables(s, d, "customer")), col("user_id") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total"))
-      runToTable(s, joined, "complete")
+      runToTable(s, joined, "complete", sourceConf(s, d, "events"))
     },
 
     // Stream-stream interval join: each user's purchases joined to their
@@ -400,7 +375,7 @@ object Streams {
         col("p_user") === col("c_user") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
           col("c_ts") <= col("p_ts"))
-      runToTable(s, joined, "append")
+      runToTable(s, joined, "append", sourceConf(s, d, "events"))
         .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"))
     },
 
@@ -461,25 +436,17 @@ object Streams {
       // keeps the native side proportional to whatever the JVM got.
       val heapMb = Runtime.getRuntime.maxMemory / (1024L * 1024L)
       val rocksBudgetMb = math.max(512L, heapMb / 4)
-      val rocksConfs: Seq[(String, String)] = Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      val rocksConf: Map[String, String] = if (!bigState) Map.empty else Map(
+        RocksDbProvider,
         "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
         "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" ->
           rocksBudgetMb.toString)
-      val prev: Seq[(String, Option[String])] =
-        rocksConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-      if (bigState) rocksConfs.foreach { case (k, v) => s.conf.set(k, v) }
       // row-per-session output (954k rows at 10x, ~10M at 100x): complete
       // mode re-emits the full session table every micro-batch, and the
       // memory sink put each emission on the driver heap (OOM at 100x) —
       // the parquet drain overwrites per batch, keeping the final state
       // distributed
-      try runToParquetTable(s, sess, "complete")
-      finally if (bigState) prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      runToParquetTable(s, sess, "complete", sourceConf(s, d, "events") ++ rocksConf)
     },
 
     // T1/S5 (streaming sink): foreachBatch writing each micro-batch to a
@@ -493,17 +460,13 @@ object Streams {
         |       round(CAST(sum(CAST(value AS DECIMAL(22,8))) AS DOUBLE), 2) AS total
         |FROM events GROUP BY event_type""".stripMargin) { (s, d) =>
       val sink = Frames.storeDir("st_stream_sink", s"$d#${runCounter.incrementAndGet()}")
-      val ckpt = s"$sink/_checkpoints"
-      val q = eventsStream(s, d)
+      val writer = eventsStream(s, d)
         .select("event_id", "event_type", "value")
         .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
           batch.write.mode("overwrite").parquet(s"$sink/batch_$batchId")
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(s, writer, Map.empty)
       s.read.parquet(batchDirs(sink): _*)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total"))
@@ -517,27 +480,16 @@ object Streams {
       """SELECT user_id, event_type, count(*) AS n
         |FROM events GROUP BY user_id, event_type""".stripMargin) { (s, d) =>
       import s.implicits._
+      val ds = eventsStream(s, d)
+        .select(col("user_id"), col("event_type"), expr("unix_micros(ts)").as("ts_us"))
+        .as[Ev]
+      val out = ds.groupByKey(_.user_id)
+        .transformWithState(new TypeCountProcessor,
+          TimeMode.None(), OutputMode.Update())
       // transformWithState requires the RocksDB state store provider
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val ds = eventsStream(s, d)
-          .select(col("user_id"), col("event_type"), expr("unix_micros(ts)").as("ts_us"))
-          .as[Ev]
-        val out = ds.groupByKey(_.user_id)
-          .transformWithState(new TypeCountProcessor,
-            TimeMode.None(), OutputMode.Update())
-        runToTable(s, out.toDF(), "update")
-          .groupBy("user_id", "event_type")
-          .agg(max(col("n")).as("n"))
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
-      }
+      runToTable(s, out.toDF(), "update", sourceConf(s, d, "events") + RocksDbProvider)
+        .groupBy("user_id", "event_type")
+        .agg(max(col("n")).as("n"))
     },
 
     // T6: stateful per-key FSM via mapGroupsWithState, update-mode. The
@@ -549,7 +501,7 @@ object Streams {
         |       array_to_string(list_sort(list(DISTINCT event_type)), ',') AS types_seen,
         |       max(ts) AS last_ts
         |FROM events GROUP BY user_id""".stripMargin) { (s, d) =>
-      fsmFinal(runToTable(s, fsm(s, eventsStream(s, d)), "update"))
+      fsmFinal(runToTable(s, fsm(s, eventsStream(s, d)), "update", sourceConf(s, d, "events")))
     },
 
     // Decontamination AT INGEST: the d7b wide-gram scan applied to the
@@ -581,7 +533,7 @@ object Streams {
         .filter(col("doc_id") =!= col("probe_id"))
         .groupBy("doc_id", "probe_id")
         .agg(count(lit(1)).as("n_shared"))
-      runToTable(s, flags, "complete")
+      runToTable(s, flags, "complete", sourceConf(s, d, "documents"))
     },
 
     // STREAMING ANN PROBE (r14) — the serving deployment shape: probe
@@ -626,8 +578,8 @@ object Streams {
       // index, not of any micro-batch: resolve once, outside the loop
       val servingShortlist =
         graft.llm.PqIndex.scaledShortlist(nVec, 4, cells, floor = 50)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      val writer = stream.writeStream
+        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
           val t0 = System.nanoTime()
           graft.llm.PqIndex.searchIvfPqResidual(ivf, model, batch, emb,
               k = 10, shortlist = servingShortlist, nProbe = 4,
@@ -637,10 +589,7 @@ object Streams {
             "[st_stream_ann] batch %d in %.2f s",
             Long.box(batchId), Double.box((System.nanoTime() - t0) / 1e9)))
         }
-        .option("checkpointLocation", s"$root/_ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(s, writer, Map.empty)
       s.read.parquet(batchDirs(out): _*)
     }
   )

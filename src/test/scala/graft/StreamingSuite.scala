@@ -145,32 +145,23 @@ class StreamingSuite extends AnyFunSuite with ScratchRoot {
     val splitDir = scratch("tws_split")
     spark.read.parquet(s"$sf/events.parquet").repartition(4)
       .write.mode("overwrite").parquet(splitDir)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      val raw = spark.readStream
-        .schema(spark.read.parquet(splitDir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(splitDir)
-        .transform(Tables.normalizeEventTs)
-        .select(col("user_id"), col("event_type"), expr("unix_micros(ts)").as("ts_us"))
-        .as[Ev]
-      val out = raw.groupByKey(_.user_id)
-        .transformWithState(new TypeCountProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val streamed = Streams.runToTable(spark, out.toDF(), "update")
-        .groupBy("user_id", "event_type").agg(max(col("n")).as("n"))
-      val batch = Tables(spark, sf, "events")
-        .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
-      assert(rows(streamed) == rows(batch))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    import spark.implicits._
+    val raw = spark.readStream
+      .schema(spark.read.parquet(splitDir).schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(splitDir)
+      .transform(Tables.normalizeEventTs)
+      .select(col("user_id"), col("event_type"), expr("unix_micros(ts)").as("ts_us"))
+      .as[Ev]
+    val out = raw.groupByKey(_.user_id)
+      .transformWithState(new TypeCountProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+    val streamed = Streams.runToTable(spark, out.toDF(), "update", Map(Streams.RocksDbProvider))
+      .groupBy("user_id", "event_type").agg(max(col("n")).as("n"))
+    val batch = Tables(spark, sf, "events")
+      .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
+    assert(rows(streamed) == rows(batch))
   }
 
   test("session windows merge fragments across micro-batches (4-file replay)") {
@@ -216,6 +207,56 @@ class StreamingSuite extends AnyFunSuite with ScratchRoot {
       .select("user_id", "event_id")
     val deduped = Streams.runToTable(spark, stream, "append")
     assert(deduped.count() == base.count())
+  }
+
+  test("drains leave the session conf as they found it") {
+    val before = spark.conf.getAll
+    Seq("st_stream_tumbling", "st_stream_tws", "st_stream_session", "st_stream_sink")
+      .foreach(q => SparkEntry.queries(q)(spark, sf).count())
+    val after = spark.conf.getAll
+    assert(after == before)
+    assert(!after.keys.exists(_.startsWith("graft.stream.")))
+  }
+
+  /** `numShufflePartitions` of every stateful operator in the streams that
+    * `run` starts, read from their progress events. The listener bus is
+    * asynchronous, so this waits for each started query's termination event,
+    * which the bus delivers after the query's progress events. */
+  private def stateShuffles(run: => Unit): Set[Long] = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val parts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val done = new java.util.concurrent.Semaphore(0)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.runId): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (started.contains(e.progress.runId))
+          e.progress.stateOperators.foreach(op => parts.add(op.numShufflePartitions))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (started.contains(e.runId)) done.release()
+    }
+    spark.streams.addListener(listener)
+    try {
+      run
+      assert(!started.isEmpty &&
+        done.tryAcquire(started.size, 60, java.util.concurrent.TimeUnit.SECONDS),
+        "no termination event for the started streams")
+    } finally spark.streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    parts.asScala.toSet
+  }
+
+  test("state partitions follow the source's file count") {
+    def tumbling(d: String): Set[Long] =
+      stateShuffles(SparkEntry.queries("st_stream_tumbling")(spark, d): Unit)
+    // the single-file testdata table lands on the floor of 2
+    assert(tumbling(sf) == Set(2L))
+    // 3 source files: min(2 × 3, defaultParallelism of local[4]) = 4
+    val dir = scratch("three_file")
+    spark.read.parquet(s"$sf/events.parquet").repartition(3)
+      .write.parquet(s"$dir/events.parquet")
+    assert(tumbling(dir) == Set(4L))
   }
 
   test("continuous trigger on an unbounded rate source: state plateaus under watermark eviction") {
