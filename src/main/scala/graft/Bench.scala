@@ -67,10 +67,10 @@ object Bench {
     // small-shuffle operator 2-5× (measured when d6 still ran an iterative
     // CC loop; today the vocab- and pair-sized aggregates of t18/t19 and
     // the dedup family would each schedule hundreds of near-empty
-    // partitions per shuffle). Session conf
-    // stays at Spark defaults; the posting join sizes its OWN pair-agg
+    // partitions per shuffle). AQE sizing stays at Spark defaults apart
+    // from coalescing, which is off; the posting join sizes its OWN pair-agg
     // shuffle instead (Dedup.boundedScoredPairs). The shared conf block
-    // (incl. the openCostInBytes no-bin-packing rationale) lives in
+    // (incl. the openCostInBytes and coalescing rationales) lives in
     // MasterEnv.standardBuilder.
     val spark = MasterEnv.standardBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

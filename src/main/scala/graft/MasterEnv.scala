@@ -51,6 +51,15 @@ object MasterEnv {
     *     threaded. Nothing is lost at any scale: a split finer than a row
     *     group cannot parallelize a parquet read, so one ~row-group-sized
     *     file per task is exactly the 100 TB-cluster shape too.
+    *   - adaptive.coalescePartitions off: shuffle.partitions is already the
+    *     core count, so coalescing can only push a stage BELOW the cores,
+    *     and it sizes partitions by bytes while the text stages (the x10/
+    *     x11 trim islands, fingerprint and ledger projections) cost CPU
+    *     per row — a few hundred KB of doc ids coalesced into one task ran
+    *     each of them on one core (single-task stages of 0.3-0.7 s at
+    *     sf0.1). AQE stays on for broadcast conversion and skew joins, and
+    *     explicit repartitions (the dedup pair aggregate's 8× width, the
+    *     ledger landing's file count) were never coalesced anyway.
     */
   def standardBuilder(): SparkSession.Builder =
     standardBuilderFor(master, shufflePartitions)
@@ -73,6 +82,7 @@ object MasterEnv {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.files.openCostInBytes", (128L * 1024 * 1024).toString)
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
       .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_EXTRA_CONF="k=v;k=v": diagnostic/studies passthrough
     // (event logs, memory knobs) without touching the pinned conf block

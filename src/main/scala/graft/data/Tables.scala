@@ -2,14 +2,15 @@ package graft.data
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Table registry over the driver-generated parquet testdata.
   *
   * Semantics source: the reference delegates all bulk data I/O to
   * Parquet/Petastorm readers (reference: maggy/core/patching/dataloader.py:99-137);
-  * here the native equivalent is a plain `spark.read.parquet` whose scan benefits
-  * from Catalyst column pruning + predicate pushdown.
+  * here the native equivalent is a `spark.read.parquet` (with the table's
+  * memoized schema) whose scan benefits from Catalyst column pruning +
+  * predicate pushdown.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -34,10 +35,39 @@ object Tables {
       // effect on every query build)
       if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+      normalizeEventTs(read(spark, sfDir, name))
     } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      read(spark, sfDir, name)
     }
+  }
+
+  private def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.read.schema(schema(spark, sfDir, name)).parquet(s"$sfDir/$name.parquet")
+
+  /** The raw parquet schema of one table, read from its footer once per
+    * (dir, table): an inferring `spark.read.parquet` runs a one-task
+    * footer job on every call, and every query build reads its tables
+    * again. Raw means as on disk: `events.ts` is still ns Long under
+    * nanosAsLong, so callers set that conf before the first read, as
+    * [[apply]] does. */
+  def schema(spark: SparkSession, sfDir: String, name: String): StructType =
+    Frames.getOrCreate(Frames.Key("table.schema", sfDir, name))(
+      spark.read.parquet(s"$sfDir/$name.parquet").schema)(_ => ())
+
+  /** `docs` hash-partitioned on doc_id to the session's parallelism when it
+    * arrives narrower, else `docs` itself — for a text pass (tokenize,
+    * hash, gram explode) that starts from a table scan. Row groups are
+    * Spark's split unit and every testdata table is one row group, so a
+    * scan is ONE task whatever maxPartitionBytes says, and the CPU-heavy
+    * pass after it would run on one core while the rest idle. The shuffle
+    * moves at most ~parallelism × maxPartitionBytes (a deployment-scale
+    * corpus arrives as thousands of splits and never pays it), and the
+    * decision reads the planned scan's partition count without running a
+    * job or persisting anything. Take any [[Frames.corpusKey]] of `docs`
+    * BEFORE fanning out: the key hashes the analyzed plan. */
+  def fanOut(docs: DataFrame): DataFrame = {
+    val target = docs.sparkSession.sparkContext.defaultParallelism
+    if (docs.rdd.getNumPartitions < target) docs.repartition(target, col("doc_id")) else docs
   }
 
   /** Normalize an events-shaped frame's `ts` to TIMESTAMP regardless of the

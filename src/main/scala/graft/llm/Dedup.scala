@@ -907,7 +907,7 @@ object Dedup {
     * its timed line, its owner's release reclaims). */
   def probeGramSet(probeDocs: DataFrame, k: Int = 8): DataFrame =
     cached("dedup.probe_grams", probeDocs, k)(
-      wideGrams(probeDocs, k).select("h").distinct()
+      wideGrams(Tables.fanOut(probeDocs), k).select("h").distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private[graft] def wideGrams(docs: DataFrame, k: Int = 8): DataFrame =
@@ -1217,19 +1217,7 @@ object Dedup {
     * for consumers that need per-doc SETS (candidate verification's
     * set intersection) rather than the exploded posting view. */
   private def sharedShingles(docs: DataFrame): DataFrame =
-    cached("dedup.tokens", docs)(shingleSets(fanOut(docs)).localCheckpoint())
-
-  /** CPU-parallelism guard for the shingle build: a single-row-group input
-    * (row groups are Spark's split unit, so the small test corpus arrives
-    * as ONE partition) would run every split/tokenize/hash in one task
-    * while the rest of the executor idles. The shuffle only fires when the
-    * input has fewer partitions than the session's parallelism — which
-    * bounds the moved data to ~parallelism × maxPartitionBytes (a few GB),
-    * so a deployment-scale corpus (thousands of file splits) never pays it. */
-  private def fanOut(docs: DataFrame): DataFrame = {
-    val target = docs.sparkSession.sparkContext.defaultParallelism
-    if (docs.rdd.getNumPartitions < target) docs.repartition(target) else docs
-  }
+    cached("dedup.tokens", docs)(shingleSets(Tables.fanOut(docs)).localCheckpoint())
 
   private def sharedScoredPairs(docs: DataFrame): DataFrame =
     cached("dedup.pairs", docs)(

@@ -71,7 +71,7 @@ object Incremental {
     case _ => throw new IllegalArgumentException(s"no day split declared for batch $n")
   }
 
-  import Pipeline.{hash6, hash6Sql, manifestRow, toks}
+  import Pipeline.{fingerprints, hash6, hash6Sql, manifestRow}
 
   // ---------------------------------------------------------------------
   // the persisted day-1 ledger (build-once per corpus, like IvfIndex)
@@ -174,9 +174,7 @@ object Incremental {
     // caches it touches (shingles, the sig table) stay shared
     Frames.checkpointScope("x11 ledger build") {
       val day1 = Tables(s, d, "documents").filter(isDay1)
-      val fp = Frames.trackedCheckpoint(day1.select(
-        col("doc_id"), col("source"), size(toks).cast("long").as("n_tok"),
-        TextStats.qualityPass.as("q"), md5(col("text")).as("h")))
+      val fp = fingerprints(day1)
       val keepers = fp.filter(col("q")).groupBy("h")
         .agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id"), lit(true).as("is_keeper"))
@@ -397,9 +395,7 @@ object Incremental {
     val docs = Tables(s, d, "documents")
 
     // ---- stage 01: batch ingest — ONE batch text scan → fingerprints ----
-    val bfp = Frames.trackedCheckpoint(batch.select(
-      col("doc_id"), col("source"), size(toks).cast("long").as("n_tok"),
-      TextStats.qualityPass.as("q"), md5(col("text")).as("h")))
+    val bfp = fingerprints(batch)
 
     // ---- stage 03: exact dedup vs the STORE (d9) + within the batch ----
     // corpus content keys = the store's quality survivors' h set; folded

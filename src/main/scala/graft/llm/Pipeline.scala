@@ -67,6 +67,17 @@ object Pipeline {
   private[llm] val hash6Sql =
     "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6)) AS BIGINT)"
 
+  /** The stage 01-03 fingerprint ledger of `docs` — (doc_id, source,
+    * n_tok, q, h), one text pass, checkpointed (a tracked checkpoint) —
+    * shared by x10 and the x11 ledger build and batch decisions. The scan
+    * is fanned out first ([[Tables.fanOut]]): from a one-task scan both the
+    * pass and every stage reading the checkpoint (the keeper aggregate,
+    * the ledger joins) would run on one core. */
+  private[graft] def fingerprints(docs: DataFrame): DataFrame =
+    Frames.trackedCheckpoint(Tables.fanOut(docs).select(
+      col("doc_id"), col("source"), size(toks).cast("long").as("n_tok"),
+      TextStats.qualityPass.as("q"), md5(col("text")).as("h")))
+
   /** One manifest row: stage label + rollup over the stage's survivors.
     * `chk` defaults to the set checksum; the shuffle/shard stages pass an
     * order/assignment-sensitive one instead. */
@@ -95,11 +106,7 @@ object Pipeline {
     // decisions need, WITHOUT text — this is the frame a deployment
     // materializes as its fingerprint store (the d8 design), and the only
     // checkpoint the pipeline takes before the budget-bounded tail
-    val l1 = Frames.trackedCheckpoint(
-      docs.filter(col("doc_id") % 10 =!= 0)
-        .select(col("doc_id"), col("source"),
-          size(toks).cast("long").as("n_tok"),
-          TextStats.qualityPass.as("q"), md5(col("text")).as("h")))
+    val l1 = fingerprints(docs.filter(col("doc_id") % 10 =!= 0))
     // exact-dedup keepers among quality survivors: min doc_id per content
     // hash (the d1/x3 policy) — keeper implies q by construction
     val keepers = l1.filter(col("q")).groupBy("h")

@@ -798,7 +798,7 @@ object PqIndex {
       .select(col("probe_id"), col("cell"),
         Similarity.dotNative(col("pv"), col("centroid")).as("cdot"))
     val routed = routedCd.join(p.drop("pvec"), "probe_id")
-    // ADC-scan parallelism guard (the Dedup.fanOut idiom): the row-sized
+    // ADC-scan parallelism guard (the Tables.fanOut idiom): the row-sized
     // list layout can land a small corpus in fewer files than the session
     // has cores, and the per-candidate join work (ADC + shortlist agg) is
     // far heavier than the bytes suggest — measured 15-task stages doing

@@ -75,12 +75,6 @@ object Streams {
       .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
       .map(_.getPath).sorted
 
-  // schema per staged dir — every declared streaming query re-derives it, and
-  // a batch-side parquet footer read per query build is pure constant overhead
-  private def sourceSchema(s: SparkSession, dir: java.nio.file.Path): org.apache.spark.sql.types.StructType =
-    Frames.getOrCreate(Frames.Key("stream.schema", dir.toString))(
-      s.read.parquet(dir.toString).schema)(_ => ())
-
   /** Streaming view of the events table (T1 ingestion): file-source
     * readStream with the batch schema, ns→µs ts conversion as in Tables. */
   def eventsStream(s: SparkSession, d: String): DataFrame = {
@@ -96,9 +90,10 @@ object Streams {
     * aggregations. */
   def documentsStream(s: SparkSession, d: String): DataFrame = fileStream(s, d, "documents")
 
-  /** File-source stream of table `name` with its batch schema. The file
-    * stream source requires a DIRECTORY (basePath). The driver testdata
-    * ships tables as single FILES → stage each into a temp dir once per SF
+  /** File-source stream of table `name` with its batch schema
+    * ([[Tables.schema]]). The file stream source requires a DIRECTORY
+    * (basePath). The driver testdata ships tables as single FILES → stage
+    * each into a temp dir once per SF
     * dir (idempotent; a production deployment streams a landing dir or
     * Kafka topic and skips this). ScaleGen corpora write Spark output
     * DIRECTORIES → streamed directly (a Files.copy of a directory path
@@ -116,7 +111,7 @@ object Streams {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       staging
     }
-    s.readStream.schema(sourceSchema(s, dir)).parquet(dir.toString)
+    s.readStream.schema(Tables.schema(s, d, name)).parquet(dir.toString)
   }
 
   private val ShufflePartitions = "spark.sql.shuffle.partitions"

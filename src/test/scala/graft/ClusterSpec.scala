@@ -203,7 +203,7 @@ class ClusterSpec extends AnyFunSuite with ScratchRoot {
       StreamPlateau.awaitAndAssert(
         Seq(StreamPlateau.Check(q, "mc-dedup", needRemoved = true)))
     } finally {
-      try q.stop() catch { case _: Throwable => }
+      StreamPlateau.stop(q)
       graft.data.Frames.deleteRecursively(new java.io.File(ckpt))
     }
   } }
@@ -310,7 +310,7 @@ class ClusterSpec extends AnyFunSuite with ScratchRoot {
       assert(healed.size == 2 && !healed.values.toSet.contains(victim),
         s"no replacement executor after kill: $healed")
     } finally {
-      try q.stop() catch { case _: Throwable => }
+      StreamPlateau.stop(q)
       graft.data.Frames.deleteRecursively(new java.io.File(base))
     }
   } }

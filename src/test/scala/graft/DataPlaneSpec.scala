@@ -2032,6 +2032,69 @@ class DataPlaneSpec extends AnyFunSuite with ScratchRoot {
     }
   }
 
+  /** Jobs started while `body` ran: a marker job with a unique description
+    * runs after it, and listener events arrive in posting order, so every
+    * job `body` started has been counted once the marker's start is seen. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = s"jobsDuring-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          done.countDown()
+        else if (done.getCount > 0) seen.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      (out, seen.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("fanOut: a one-task scan comes back hash-partitioned on doc_id, decided without a job") {
+    val target = spark.sparkContext.defaultParallelism
+    val docs = Tables(spark, sf, "documents")
+    assert(docs.rdd.getNumPartitions < target, "the sf0.01 documents scan is one row group")
+    val (fanned, jobs) = jobsDuring(Tables.fanOut(docs))
+    assert(jobs == 0, s"fanOut ran $jobs job(s) to decide")
+    assert(fanned.rdd.getNumPartitions == target)
+    fanned.queryExecution.sparkPlan.outputPartitioning match {
+      case org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(Seq(a), n) =>
+        assert(n == target && a.references.map(_.name).toSet == Set("doc_id"), s"$a into $n")
+      case p => fail(s"not hash-partitioned on doc_id: $p")
+    }
+    assert(fanned.exceptAll(docs).isEmpty && docs.exceptAll(fanned).isEmpty,
+      "fanOut must keep every row")
+    // a frame already as wide as the session is returned as it came
+    val wide = spark.range(0, 100, 1, target + 1).withColumnRenamed("id", "doc_id")
+    assert(Tables.fanOut(wide) eq wide)
+    // the x10 stage 01-03 fingerprint ledger is checkpointed wide
+    Frames.checkpointScope("fanOut spec") {
+      val fp = graft.llm.Pipeline.fingerprints(docs.filter(col("doc_id") % 10 =!= 0))
+      assert(fp.rdd.getNumPartitions >= target,
+        s"fingerprint checkpoint has ${fp.rdd.getNumPartitions} partition(s)")
+    }
+  }
+
+  test("Tables reads each footer once: a second read runs no job and equals an inferred read") {
+    for (name <- Seq("part", "events")) {
+      Tables(spark, sf, name)
+      val (t, jobs) = jobsDuring(Tables(spark, sf, name))
+      assert(jobs == 0, s"$name: a repeated Tables read ran $jobs job(s)")
+      val raw = spark.read.parquet(s"$sf/$name.parquet")
+      val inferred = if (name == "events") Tables.normalizeEventTs(raw) else raw
+      assert(t.schema == inferred.schema, s"$name: ${t.schema} vs ${inferred.schema}")
+      assert(t.exceptAll(inferred).isEmpty && inferred.exceptAll(t).isEmpty,
+        s"$name: memoized-schema read differs from the inferred read")
+    }
+  }
+
   test("live() names each entry's owner and reads its block bytes") {
     val docs = Tables(spark, sf, "documents")
     Frames.scope("live probe") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -27,6 +29,19 @@ object StreamPlateau {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()
+
+  /** Stop `q` between triggers: a stop that lands while a micro-batch
+    * commits interrupts the state-store commit, which logs
+    * CANNOT_WRITE_STATE_STORE traces for every state partition. Waits
+    * (bounded) for the running trigger to finish first; a failed stop is
+    * reported on one stderr line, never swallowed silently. */
+  def stop(q: StreamingQuery): Unit = {
+    val deadline = System.currentTimeMillis() + 30000L
+    while (q.isActive && q.status.isTriggerActive && System.currentTimeMillis() < deadline)
+      Thread.sleep(20)
+    try q.stop()
+    catch { case NonFatal(e) => Console.err.println(s"[StreamPlateau] stop of query ${q.id}: $e") }
+  }
 
   /** One query's plateau contract: `needRemoved` asserts watermark eviction
     * actually fired; `keyspaceBound` adds the absolute bound for operators

@@ -292,7 +292,7 @@ class StreamingSuite extends AnyFunSuite with ScratchRoot {
         StreamPlateau.Check(qs(2), "fsm", needRemoved = false,
           keyspaceBound = Some(200L))))
     } finally {
-      qs.foreach(q => try q.stop() catch { case _: Throwable => })
+      qs.foreach(StreamPlateau.stop(_))
       graft.data.Frames.deleteRecursively(new java.io.File(tmp))
     }
   }
